@@ -47,6 +47,15 @@ object Bench {
     "sun.security.action", "sun.util.calendar")
     .flatMap(p => Seq("--add-opens", s"java.base/$p=ALL-UNNAMED"))
 
+  /** The committed sweep whose per-cell times the tail re-run protocol reads. */
+  val baselinePath = "tools/bench_baseline.json"
+
+  /** Per-cell seconds from a bench JSON, compact or pretty-printed. */
+  def parseBands(json: String): Map[String, Double] = {
+    val qsec = "\"(q_[a-z0-9_]+|cc|cc_star|lp|triangles|pagerank_converge)\"\\s*:\\s*([0-9.]+)".r
+    qsec.findAllMatchIn(json).map(m => m.group(1) -> m.group(2).toDouble).toMap
+  }
+
   /** Fork ONE fresh-JVM headline cell ([[BenchHeadlineCell]]) and
    * parse its `[hcell] iters sec` line. A fresh JVM per repeat means
    * one of this host's session-scoped slow windows cannot poison all
@@ -159,10 +168,8 @@ object Bench {
     // it once and take the min, flagging the cell in `reruns`.
     val baseline: Map[String, Double] =
       try {
-        val txt = new String(java.nio.file.Files.readAllBytes(
-          java.nio.file.Paths.get("tools/bench_baseline.json")), "UTF-8")
-        val qsec = "\"(q_[a-z0-9_]+|cc|cc_star|lp|triangles|pagerank_converge)\":([0-9.]+)".r
-        qsec.findAllMatchIn(txt).map(m => m.group(1) -> m.group(2).toDouble).toMap
+        parseBands(new String(java.nio.file.Files.readAllBytes(
+          java.nio.file.Paths.get(baselinePath)), "UTF-8"))
       } catch { case _: Throwable => Map.empty }
 
     def renderJson(partial: Boolean): String = {

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
@@ -19,9 +19,11 @@ import graft.sources.VertexDict
  *    sorted within partitions. Every gather step joins vertex state
  *    to this table on `src`; since state is hash-partitioned by `id`
  *    with the same partition count, the join is co-partitioned and
- *    the (large) edge side NEVER moves. Only the partially-aggregated
- *    messages shuffle — exactly Gemini's mirror-side combining
- *    (core/graph.hpp:1747-1799).
+ *    the (large) edge side NEVER moves — neither shuffled nor
+ *    broadcast (PlanSpec's "dense gather under production broadcast
+ *    thresholds" test asserts it on the executed plan). Only the
+ *    partially-aggregated messages shuffle — exactly Gemini's
+ *    mirror-side combining (core/graph.hpp:1747-1799).
  *  - [[edgesByDst]] — the same rows clustered by `dst`, for
  *    reverse-direction gathers (e.g. betweenness backward phase =
  *    `transpose()`, core/graph.hpp:758-768). For symmetric graphs it
@@ -44,10 +46,19 @@ final case class LinkGraph(
     numPartitions: Int,
     symmetric: Boolean) {
 
-  /** Largest out-degree — computed once, used to bound a frontier's
-   * edge mass without a per-superstep aggregation job. */
-  lazy val maxOutDegree: Long =
-    degrees.agg(org.apache.spark.sql.functions.max(col("out_degree"))).first().getLong(0)
+  /** max out-degree, max in-degree, mean in-degree — one aggregation
+   * job per graph, on first use. */
+  private lazy val degreeStats: Row =
+    degrees.agg(max(col("out_degree")), max(col("in_degree")), avg(col("in_degree"))).first()
+
+  /** Largest out-degree — bounds a frontier's edge mass without a
+   * per-superstep aggregation job. */
+  lazy val maxOutDegree: Long = degreeStats.getLong(0)
+
+  /** Largest and mean in-degree — the hub-skew statistic behind
+   * [[Superstep.autoSaltBuckets]]. */
+  lazy val maxInDegree: Long = degreeStats.getLong(1)
+  lazy val meanInDegree: Double = degreeStats.getDouble(2)
 
   /** Reverse every edge in O(1) — the reference's `transpose()`
    * (core/graph.hpp:758-768): swap the two clustered layouts. */

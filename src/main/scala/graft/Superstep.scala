@@ -94,7 +94,16 @@ object Superstep {
       if (sparse)
         graph.edgesBySrc.join(broadcast(src), "src")
       else
-        graph.edgesBySrc.join(src.repartition(graph.numPartitions, col("src")), "src")
+        // The hint is what keeps this join co-partitioned. A cut state
+        // is a stats-free LogicalRDD, so the planner sizes it at
+        // defaultSizeInBytes while the cached edge table reports its
+        // real size: unhinted, a graph under the broadcast threshold
+        // plans a BroadcastHashJoin that ships the WHOLE edge table
+        // every superstep (pinned by PlanSpec's production-thresholds
+        // test). The state is the build side; the repartition is a
+        // no-op when the state is already clustered by id.
+        graph.edgesBySrc.join(
+          src.repartition(graph.numPartitions, col("src")).hint("shuffle_hash"), "src")
     val msgs = joined.select(col("dst").as("id"), signal.as("msg"), col("src"))
     if (saltBuckets > 1) {
       // Explicit two-level salted aggregation for hub destinations
@@ -130,16 +139,15 @@ object Superstep {
     sys.env.get("GRAFT_SALT_SKEW").map(_.toDouble).getOrElse(50.0)
 
   /** Salt-bucket heuristic: salt when the worst hub's in-degree is both
-   * skewed (≫ mean) and large in absolute terms. Called once per
-   * algorithm run (graph-level statistic, not per superstep). */
+   * skewed (≫ mean) and large in absolute terms. Reads the graph's
+   * lazily computed degree statistics: no job after the first call on
+   * a graph. */
   def autoSaltBuckets(
       graph: LinkGraph,
       minHubDegree: Long = saltMinDegree,
       skewFactor: Double = saltSkewFactor): Int = {
-    val r = graph.degrees.agg(max(col("in_degree")), avg(col("in_degree"))).first()
-    val maxIn = r.getLong(0)
-    val avgIn = r.getDouble(1)
-    if (maxIn > minHubDegree && maxIn > skewFactor * avgIn) 16 else 0
+    val maxIn = graph.maxInDegree
+    if (maxIn > minHubDegree && maxIn > skewFactor * graph.meanInDegree) 16 else 0
   }
 
   /** Resolve a caller-supplied salt setting: negative = auto. */

@@ -26,8 +26,13 @@ import graft.{Checkpoint, LinkGraph, Superstep}
  *
  * All vertices are always active (pagerank.cpp:32-33) ⇒ every
  * superstep is a DENSE gather: co-partitioned state⋈edges join, only
- * combined messages shuffle. Per iteration exactly one shuffle + one
- * scalar action (the delta Allreduce analogue).
+ * combined messages shuffle. The state `(id, out_degree, v[, raw])`
+ * carries the immutable out-degree, so a superstep is ONE left join
+ * `state ⋈ sums` and one projection (new `v`, `raw`, the delta term)
+ * into the lineage cut: one shuffle, and 2 Spark jobs with AQE on —
+ * the message shuffle's map stage and the cut (the delta, the
+ * Allreduce analogue, rides the cut). PageRankJobsSpec pins the count.
+ * Checkpoints stay `(id, v)`; resume joins them to the degrees once.
  */
 object PageRank {
 
@@ -48,86 +53,74 @@ object PageRank {
     val limit = if (fixed) iterations else maxIterations
     val salt = Superstep.resolveSalt(graph, saltBuckets)
 
-    var startIter = 0
-    var curr: DataFrame = null // (id, v) where v = rank/out_degree
-    var lastRaw: DataFrame = null // (id, rank) undivided
+    // (id, out_degree, v) where v = rank/out_degree; after a superstep
+    // also `raw` = the undivided rank (and `dterm` in convergence mode)
     val resumed = if (resume) ckpt.flatMap(c => c.latestIteration()) else None
-    resumed match {
+    val startIter = resumed.getOrElse(0)
+    var state: DataFrame = resumed match {
       case Some(k) =>
-        curr = ckpt.get.load(graph.spark, k)
+        degs.join(ckpt.get.load(graph.spark, k), Seq("id"))
           .repartition(graph.numPartitions, col("id"))
           .graftCut
-        startIter = k
       case None =>
-        curr = degs.select(
-          col("id"),
+        degs.select(
+          col("id"), col("out_degree"),
           when(col("out_degree") > 0, lit(1.0) / col("out_degree"))
             .otherwise(lit(1.0)).as("v"))
           .graftCut
     }
 
+    // Per-superstep math over the joined row (id, out_degree, v, msg);
+    // `v` on the right-hand side is the previous iteration's value.
+    val deg = col("out_degree")
+    val raw = lit(1.0 - d) + lit(d) * coalesce(col("msg"), lit(0.0))
+    val next = Seq(col("id"), deg, raw.as("raw"),
+      when(deg > 0, raw / deg).otherwise(raw).as("v"))
+    // the reference's delta term (pagerank.cpp:86-98)
+    val dterm = when(deg > 0, abs(raw / deg - col("v")) * deg)
+      .otherwise(abs(raw - col("v"))).as("dterm")
+
     val deltas = scala.collection.mutable.ArrayBuffer[Double]()
-    var prevCut: DataFrame = curr // superseded state, freed once replaced
     var i = startIter
     var done = false
     while (i < limit && !done) {
       val sums = Superstep.gather(
-        graph, curr, signal = col("v"), combine = sum,
+        graph, state, signal = col("v"), combine = sum,
         activeEdges = graph.numEdges, activeCount = graph.numVertices,
         saltBuckets = salt)
+      // Unhinted, AQE sees the small message table at run time and
+      // re-plans this join as a broadcast of `sums` — one more job per
+      // superstep, and a |V|-row table through the driver at scale.
+      // Both sides are clustered by id, so the hash join needs no
+      // exchange.
+      val joined = state.join(sums.hint("shuffle_hash"), Seq("id"), "left")
       // In fixed-iteration (parity) mode the per-iteration delta is
-      // only reference REPORTING (pagerank.cpp:48-50) — skip its
-      // column and its aggregation job: one job per superstep.
-      val updated = degs
-        .join(sums, Seq("id"), "left")
-        .select(
-          col("id"), col("out_degree"),
-          (lit(1.0 - d) + lit(d) * coalesce(col("msg"), lit(0.0))).as("raw"))
-      // Convergence mode folds the delta sum (the reference Allreduce,
-      // pagerank.cpp:86-98) into the materialization pass: exactly ONE
-      // job per superstep in both modes.
-      val (step, delta) =
-        if (fixed) {
-          val s = updated.select(
-            col("id"), col("raw"),
-            when(col("out_degree") > 0, col("raw") / col("out_degree"))
-              .otherwise(col("raw")).as("v")).graftCut
-          (s, Double.NaN)
-        } else {
+      // only reference REPORTING (pagerank.cpp:48-50) — skip its column
+      // and its sum.
+      val step =
+        if (fixed) joined.select(next: _*).graftCut
+        else {
           val t0 = System.nanoTime()
-          val (s, dsum) = updated
-            .join(curr, Seq("id"))
-            .select(
-              col("id"), col("raw"),
-              when(col("out_degree") > 0, col("raw") / col("out_degree"))
-                .otherwise(col("raw")).as("v"),
-              when(col("out_degree") > 0,
-                abs(col("raw") / col("out_degree") - col("v")) * col("out_degree"))
-                .otherwise(abs(col("raw") - col("v"))).as("dterm"))
-            .graftCutSum("dterm")
+          val (s, dsum) = joined.select(next :+ dterm: _*).graftCutSum("dterm")
           val dlt = dsum / graph.numVertices
           Superstep.log(f"pr iter ${i + 1}: delta=$dlt%.2e step=${(System.nanoTime() - t0) / 1e9}%.2f s")
-          (s, dlt)
+          deltas += dlt
+          s
         }
-      if (prevCut ne null) { prevCut.graftFree(); }
-      prevCut = step
-      if (!fixed) deltas += delta
-      lastRaw = step.select(col("id"), col("raw").as("rank"))
-      curr = step.select(col("id"), col("v"))
+      state.graftFree()
+      state = step
       i += 1
       if (ckpt.nonEmpty && (i % ckptEvery == 0))
-        ckpt.get.save(curr, i, graph.numVertices)
-      if (!fixed && delta <= tol) done = true
+        ckpt.get.save(state.select(col("id"), col("v")), i, graph.numVertices)
+      if (!fixed && deltas.last <= tol) done = true
     }
-    ckpt.foreach(_.save(curr, i, graph.numVertices))
-    if (lastRaw == null) {
-      // resumed at the iteration limit: undo the division to recover
-      // the reportable (undivided) rank — raw = v·out_degree (deg>0).
-      lastRaw = degs.join(curr, Seq("id")).select(
-        col("id"),
-        when(col("out_degree") > 0, col("v") * col("out_degree"))
-          .otherwise(col("v")).as("rank"))
-    }
-    Result(lastRaw, i, deltas.toSeq)
+    ckpt.foreach(_.save(state.select(col("id"), col("v")), i, graph.numVertices))
+    val ranks =
+      if (i > startIter) state.select(col("id"), col("raw").as("rank"))
+      else
+        // resumed at the iteration limit: undo the division to recover
+        // the reportable (undivided) rank — raw = v·out_degree (deg>0).
+        state.select(col("id"), when(deg > 0, col("v") * deg).otherwise(col("v")).as("rank"))
+    Result(ranks, i, deltas.toSeq)
   }
 }

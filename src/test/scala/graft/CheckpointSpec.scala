@@ -48,6 +48,47 @@ class CheckpointSpec extends SparkSpec {
     }
   }
 
+  /** Ranks of two runs agree within 1e-6 on every vertex. */
+  private def assertRanksClose(g: LinkGraph, x: PageRank.Result, y: PageRank.Result): Unit = {
+    val a = byIndex(g, x.ranks, "rank")
+    val b = byIndex(g, y.ranks, "rank")
+    assert(a.keySet == b.keySet)
+    a.foreach { case (i, v) =>
+      assert(math.abs(v.asInstanceOf[Double] - b(i).asInstanceOf[Double]) < 1e-6, s"vertex $i")
+    }
+  }
+
+  test("PageRank: convergence-mode kill-and-resume equals the uninterrupted run") {
+    val g = graphOf(edges, symmetric = false)
+    val full = PageRank.run(g)
+    assert(full.iterations > 3, "fixture must take more supersteps than the kill point")
+    val ck = Checkpoint(tmpDir())
+    // "kill" after 3 supersteps; the run's final save puts iter=3 on disk
+    PageRank.run(g, maxIterations = 3, ckpt = Some(ck), ckptEvery = 2)
+    assert(ck.latestIteration().contains(3))
+    val resumed = PageRank.run(g, ckpt = Some(ck), ckptEvery = 2, resume = true)
+    assert(resumed.iterations == full.iterations)
+    assert(resumed.deltas.size == full.deltas.size - 3)
+    full.deltas.drop(3).zip(resumed.deltas).foreach { case (x, y) =>
+      assert(math.abs(x - y) < 1e-6, s"delta $x vs $y") }
+    assertRanksClose(g, full, resumed)
+    // the state carries out_degree in memory only; files stay (id, v)
+    assert(ck.load(spark, resumed.iterations).columns.toSeq == Seq("id", "v"))
+  }
+
+  test("PageRank: resume from a checkpoint at the iteration limit recovers undivided ranks") {
+    val g = graphOf(edges, symmetric = false)
+    val full = PageRank.run(g, iterations = 4)
+    val ck = Checkpoint(tmpDir())
+    PageRank.run(g, iterations = 4, ckpt = Some(ck), ckptEvery = 2)
+    assert(ck.latestIteration().contains(4))
+    // no superstep left to run: rank = v·out_degree from the loaded state
+    val resumed = PageRank.run(g, iterations = 4, ckpt = Some(ck), resume = true)
+    assert(resumed.iterations == 4)
+    assertRanksClose(g, full, resumed)
+    assert(ck.load(spark, 4).columns.toSeq == Seq("id", "v"))
+  }
+
   test("BFS: resume from checkpoint yields the identical tree") {
     val g = graphOf(edges, symmetric = true)
     val root = 0L

@@ -43,10 +43,12 @@ class PlanSpec extends SparkSpec {
   override def beforeAll(): Unit = {
     super.beforeAll()
     // Toy tables sit below the broadcast threshold, which would let
-    // Spark/AQE turn the co-partitioned dense join into a broadcast
-    // join and hide the plan shape under test. At real scale the edge
-    // side is far beyond any threshold, so the co-partitioned shape is
-    // the production plan; pin it here.
+    // Spark/AQE turn the joins under test into broadcast joins. That
+    // is not only a toy-size effect: a cut superstep state carries no
+    // stats, so an unhinted dense gather over any edge table under the
+    // threshold (sf0.1 is) broadcasts the edges every superstep. The
+    // gather pins its join with a hint; the production-thresholds test
+    // below checks that without this override.
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     spark.conf.set("spark.sql.adaptive.autoBroadcastJoinThreshold", "-1")
   }
@@ -74,6 +76,33 @@ class PlanSpec extends SparkSpec {
     assert(broadcasts(plan) == 0, s"dense mode must not broadcast:\n$plan")
     assert(shuffles(plan) == 1,
       s"dense gather must shuffle ONLY the combined messages (got ${shuffles(plan)}):\n$plan")
+  }
+
+  private val broadcastThresholds = Seq(
+    "spark.sql.autoBroadcastJoinThreshold", "spark.sql.adaptive.autoBroadcastJoinThreshold")
+
+  /** Run `body` with Spark's default broadcast thresholds (10 MB),
+   * under which every toy table here is a broadcast candidate. */
+  private def withProductionThresholds[T](body: => T): T = {
+    broadcastThresholds.foreach(spark.conf.unset)
+    try body finally broadcastThresholds.foreach(spark.conf.set(_, "-1"))
+  }
+
+  test("dense gather under production broadcast thresholds: edge table never broadcast") {
+    withProductionThresholds {
+      val state = g.degrees
+        .select(col("id"), (col("id") + 1).cast("double").as("v"))
+        .repartition(numPartitions, col("id"))
+        .graftCut
+      val msgs = Superstep.gather(
+        g, state, signal = col("v"), combine = sum,
+        activeEdges = Long.MaxValue, activeCount = g.numVertices)
+      val plan = executed(msgs)
+      assert(broadcasts(plan) == 0,
+        s"dense mode must not broadcast (the stats-free state makes the edges look small):\n$plan")
+      assert(shuffles(plan) == 1,
+        s"dense gather must shuffle ONLY the combined messages (got ${shuffles(plan)}):\n$plan")
+    }
   }
 
   test("sparse gather: frontier broadcast, no edge-side shuffle before the combine") {
