@@ -74,4 +74,11 @@ final case class Checkpoint(dir: String, buckets: Int = 32) {
 
   def lineage(iteration: Int): String =
     Files.readString(Paths.get(iterDir(iteration), "_lineage.json"))
+
+  /** The `active_count` recorded with an iteration: 0 means the state
+   * was saved at its fixpoint. */
+  def activeCount(iteration: Int): Long =
+    """"active_count":(\d+)""".r.findFirstMatchIn(lineage(iteration))
+      .map(_.group(1).toLong)
+      .getOrElse(sys.error(s"no active_count in ${iterDir(iteration)}/_lineage.json"))
 }

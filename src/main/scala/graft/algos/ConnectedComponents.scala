@@ -20,9 +20,20 @@ import graft.{Checkpoint, LinkGraph, Superstep}
  * The frontier shrinks fast, so this is where the adaptive push/pull
  * mode switch (Superstep.gather) earns its keep: early rounds are
  * dense co-partitioned joins; late rounds broadcast the few remaining
- * improved labels. Per superstep: one out-edge-mass action (the
- * reference's active-edge count, core/graph.hpp:1502-1507), one
- * gather, one `count()` (the Allreduce'd activated count).
+ * improved labels.
+ *
+ * The state `(id, out_degree, lbl, active)` is complete and resident:
+ * every vertex's label plus the frontier flag, the Spark form of
+ * Gemini's vertex array and its active bitmap (core/bitmap.hpp). A
+ * superstep gathers from `state.where(active)` and runs ONE left join
+ * `state ⋈ msgs` into the lineage cut, whose single action also
+ * returns the activated count and the new frontier's out-edge mass
+ * (Σ out_degree over active rows — the reference's active-edge count
+ * that picks push or pull, core/graph.hpp:1502-1507). That is 2 Spark
+ * jobs per dense superstep (the message shuffle's map stage and the
+ * cut) and 3 per sparse one (plus the frontier broadcast);
+ * PageRankJobsSpec pins both. Checkpoints stay `(id, lbl)`; resume
+ * joins them to the degrees once.
  */
 object ConnectedComponents {
 
@@ -39,89 +50,67 @@ object ConnectedComponents {
       initFrontier: Option[DataFrame] = None): Result = {
     require(graph.symmetric, "CC expects a symmetrized graph (cc.cpp:121)")
     val salt = Superstep.resolveSalt(graph, saltBuckets)
+    val degs = graph.degrees.select(col("id"), col("out_degree"))
 
-    var labels: DataFrame = null // (id, lbl)
-    var frontier: DataFrame = null // (id, lbl) of newly-improved vertices
-    var startIter = 0
     val resumed = if (resume) ckpt.flatMap(_.latestIteration()) else None
-    resumed match {
+    val init = resumed match {
       case Some(k) =>
-        labels = ckpt.get.load(graph.spark, k)
-          .repartition(graph.numPartitions, col("id"))
-          .graftCut
-        // conservative resume frontier: every vertex whose label is
-        // not itself may still have something to teach its neighbors,
-        // plus re-run converges identically (min is idempotent).
-        frontier = labels.graftCut
-        startIter = k
+        // conservative resume frontier: every vertex re-sends its label
+        // once (min is idempotent, so the fixpoint is the same) — unless
+        // the checkpoint was saved at the fixpoint, where nothing moves
+        degs.join(ckpt.get.load(graph.spark, k), "id")
+          .withColumn("active", lit(ckpt.get.activeCount(k) > 0))
       case None if initLabels.nonEmpty =>
         // warm start ([[incremental]]): caller-supplied labels (must be
         // constant per component of the already-processed edge subset)
         // and a restricted frontier (endpoints of the new edges) — the
         // fixpoint is identical to a cold run because min-propagation
         // wakes exactly the vertices whose label can still drop.
-        labels = initLabels.get
-          .select(col("id"), col("lbl"))
-          .repartition(graph.numPartitions, col("id"))
-          .graftCut
-        frontier = initFrontier
-          .map(_.select(col("id"), col("lbl"))
-            .repartition(graph.numPartitions, col("id")).graftCut)
-          .getOrElse(labels)
+        val labelled = degs.join(initLabels.get.select(col("id"), col("lbl")), "id")
+        initFrontier match {
+          case Some(f) =>
+            labelled
+              .join(f.select(col("id")).distinct().withColumn("awake", lit(true)), Seq("id"), "left")
+              .withColumn("active", coalesce(col("awake"), lit(false)))
+          case None => labelled.withColumn("active", lit(true))
+        }
       case None =>
-        labels = graph.vertices.select(col("id"), col("id").as("lbl"))
-          .repartition(graph.numPartitions, col("id"))
-          .graftCut
-        frontier = labels
+        degs.select(col("id"), col("out_degree"), col("id").as("lbl"), lit(true).as("active"))
     }
+    var (state, activeCount, mass) = init
+      .select(col("id"), col("out_degree"), col("lbl"), col("active"))
+      .repartition(graph.numPartitions, col("id"))
+      .graftCutActive("active", Some("out_degree"))
 
-    var activeCount = frontier.count()
     val history = scala.collection.mutable.ArrayBuffer[Long]()
-    // Improved-only supersteps (round-2): each superstep materializes
-    // ONLY the vertices whose label dropped (one cut job whose count
-    // is the Allreduce'd activated count); the full label table is a
-    // lazy outer-join chain compacted every `compactEvery` rounds —
-    // 1 job/superstep instead of 3, O(|improved|) materialized rows
-    // instead of O(|V|).
-    val compactEvery = 4
-    var base = labels
-    var pendingFree = List[DataFrame]()
-    var i = startIter
+    var i = resumed.getOrElse(0)
     while (activeCount > 0 && i < maxIterations) {
       history += activeCount
       val t0 = System.nanoTime()
-      val mass = Superstep.massOrBound(graph, frontier, activeCount)
       val msgs = Superstep.gather(
-        graph, frontier, signal = col("lbl"), combine = min,
+        graph, state.where(col("active")).select(col("id"), col("lbl")),
+        signal = col("lbl"), combine = min,
         activeEdges = mass, activeCount = activeCount, saltBuckets = salt)
-      val (improved, n) = msgs
-        .join(labels.select(col("id"), col("lbl").as("old")), Seq("id"), "left")
-        .where(col("msg") < col("old"))
-        .select(col("id"), col("msg").as("lbl"))
-        .graftCutCount
-      if (n > 0) {
-        pendingFree = frontier :: pendingFree
-        labels = labels
-          .join(improved.select(col("id"), col("lbl").as("nl")), Seq("id"), "left")
-          .select(col("id"), coalesce(col("nl"), col("lbl")).as("lbl"))
-        frontier = improved
-      }
+      // Hinted for the reason PageRank.run gives: unhinted, AQE
+      // re-plans it as a broadcast of `msgs`. Both sides are clustered
+      // by id, so the hash join needs no exchange.
+      val (next, n, m) = state.join(msgs.hint("shuffle_hash"), Seq("id"), "left")
+        .select(col("id"), col("out_degree"),
+          least(col("lbl"), col("msg")).as("lbl"),
+          coalesce(col("msg") < col("lbl"), lit(false)).as("active"))
+        .graftCutActive("active", Some("out_degree"))
+      state.graftFree()
+      state = next
       activeCount = n
+      mass = m
       i += 1
-      if (activeCount > 0 && i % compactEvery == 0) {
-        labels = labels.graftCut
-        (base :: pendingFree).filter(_ ne frontier).foreach(_.graftFree())
-        pendingFree = Nil
-        base = labels
-      }
-      Superstep.log(f"cc iter $i: active=$activeCount ${(System.nanoTime() - t0) / 1e9}%.2f s")
+      Superstep.log(f"cc iter $i: active=$activeCount mass=$mass ${(System.nanoTime() - t0) / 1e9}%.2f s")
       if (ckpt.nonEmpty && activeCount > 0 && (i % ckptEvery == 0))
-        ckpt.get.save(labels, i, activeCount)
+        ckpt.get.save(state.select(col("id"), col("lbl")), i, activeCount)
     }
-    val finalLabels = labels.graftCut
-    ckpt.foreach(_.save(finalLabels, i, activeCount))
-    (base :: frontier :: pendingFree).filter(_ ne finalLabels).distinct.foreach(_.graftFree())
-    Result(finalLabels, i, history.toSeq)
+    val labels = state.select(col("id"), col("lbl"))
+    ckpt.foreach(_.save(labels, i, activeCount))
+    Result(labels, i, history.toSeq)
   }
 
   /** Number of distinct components (reference report, cc.cpp:90-104). */

@@ -19,7 +19,8 @@ import graft.{Checkpoint, LinkGraph, Superstep}
  * the scheduling/critical-path semantics the reference's fixed
  * toolkit set lacks.
  *
- * Superstep shape (identical plan to ConnectedComponents.run): the
+ * Superstep shape (it keeps the improved-only chain; CC and LP now
+ * keep a complete resident state instead): the
  * improved-only frontier joins the src-clustered edge table
  * (broadcast under the |E|/20 switch), messages combine per dst with
  * `max`, only improved rows materialize. On a DAG the loop terminates

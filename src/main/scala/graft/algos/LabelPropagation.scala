@@ -29,52 +29,38 @@ object LabelPropagation {
       maxIterations: Int = 10000,
       saltBuckets: Int = -1): Result = {
     val salt = Superstep.resolveSalt(graph, saltBuckets)
-    var labels = graph.vertices.select(col("id"), col("id").as("lbl"))
+    // (id, lbl, changed): the complete label table, resident across
+    // rounds, plus the flag the cut counts. One round = one gather and
+    // one left join `state ⋈ msgs` into the cut (hinted as in
+    // PageRank.run; both sides clustered by id): 2 Spark jobs.
+    var state = graph.vertices.select(col("id"), col("id").as("lbl"), lit(true).as("changed"))
       .repartition(graph.numPartitions, col("id"))
       .graftCut
     val history = scala.collection.mutable.ArrayBuffer[Long]()
-    // Every round EVERY vertex signals (LP is the always-dense
-    // variant), but only the vertices whose label CHANGED need
-    // materializing: one cut job per round (its count = changed),
-    // with the full label table as a compacted lazy chain — same
-    // round-2 job-budget shape as CC/SSSP.
-    val compactEvery = 4
-    var base = labels
-    var pendingFree = List[DataFrame]()
     var i = 0
     var changed = -1L
     while (changed != 0 && i < maxIterations) {
       val msgs = Superstep.gather(
-        graph, labels, signal = col("lbl"), combine = min,
+        graph, state.select(col("id"), col("lbl")), signal = col("lbl"), combine = min,
         activeEdges = graph.numEdges, activeCount = graph.numVertices,
         saltBuckets = salt)
-      val (improved, n) = msgs
-        .join(labels.select(col("id"), col("lbl").as("old")), Seq("id"), "left")
-        .where(col("msg") < col("old"))
-        .select(col("id"), col("msg").as("lbl"))
-        .graftCutCount
+      val (next, n, _) = state.join(msgs.hint("shuffle_hash"), Seq("id"), "left")
+        .select(col("id"),
+          least(col("lbl"), col("msg")).as("lbl"),
+          coalesce(col("msg") < col("lbl"), lit(false)).as("changed"))
+        .graftCutActive("changed")
+      state.graftFree()
+      state = next
       changed = n
       history += changed
-      if (n > 0) {
-        pendingFree = improved :: pendingFree
-        labels = labels
-          .join(improved.select(col("id"), col("lbl").as("nl")), Seq("id"), "left")
-          .select(col("id"), coalesce(col("nl"), col("lbl")).as("lbl"))
-      }
       i += 1
-      if (changed > 0 && i % compactEvery == 0) {
-        labels = labels.graftCut
-        (base :: pendingFree).foreach(_.graftFree())
-        pendingFree = Nil
-        base = labels
-      }
       Superstep.log(f"lp iter $i: changed=$changed")
-      if (ckpt.nonEmpty && changed > 0 && (i % 5 == 0)) ckpt.get.save(labels, i, changed)
+      if (ckpt.nonEmpty && changed > 0 && (i % 5 == 0))
+        ckpt.get.save(state.select(col("id"), col("lbl")), i, changed)
     }
-    val finalLabels = labels.graftCut
-    ckpt.foreach(_.save(finalLabels, i, 0L))
-    (base :: pendingFree).filter(_ ne finalLabels).distinct.foreach(_.graftFree())
-    Result(finalLabels, i, history.toSeq)
+    val labels = state.select(col("id"), col("lbl"))
+    ckpt.foreach(_.save(labels, i, 0L))
+    Result(labels, i, history.toSeq)
   }
 
   /**

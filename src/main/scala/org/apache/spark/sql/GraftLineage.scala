@@ -1,7 +1,9 @@
 package org.apache.spark.sql
 
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.Attribute
-import org.apache.spark.sql.catalyst.plans.physical.{HashPartitioning, Partitioning, UnknownPartitioning}
+import org.apache.spark.sql.catalyst.plans.physical.{HashPartitioning, Partitioning, PartitioningCollection, UnknownPartitioning}
 import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
 import org.apache.spark.storage.StorageLevel
@@ -38,52 +40,68 @@ object GraftLineage {
    * ContextCleaner once the returned Dataset becomes unreachable. */
   def cut(df: DataFrame): DataFrame = cutCounted(df)._1
 
-  /** [[cut]] that also sums a double column during the materialization
-   * pass — one job instead of cut + aggregate. Uses `rdd.aggregate`
-   * (an ACTION, so exactly-once under task retries — a column-sum
-   * accumulator inside the map would double-count retried tasks and
-   * could shift a convergence loop's stopping iteration). PageRank's
-   * per-iteration delta (the reference's Allreduce,
-   * core/graph.hpp:1856-1858) rides the state materialization. */
-  def cutSummed(df: DataFrame, sumCol: String): (DataFrame, Double) = {
-    val ds = df.asInstanceOf[classic.Dataset[Row]]
-    val spark = ds.sparkSession
-    val qe = ds.queryExecution
-    val idx = qe.analyzed.output.indexWhere(_.name == sumCol)
-    require(idx >= 0, s"column $sumCol not found")
-    val rdd = qe.toRdd.map(_.copy())
-    rdd.persist(StorageLevel.MEMORY_AND_DISK)
-    rdd.localCheckpoint()
-    val s = rdd.aggregate(0.0)((acc, row) => acc + row.getDouble(idx), _ + _)
-    val plan = LogicalRDD(
-      qe.analyzed.output, rdd,
-      rewrittenPartitioning(qe), Nil, isStreaming = false, stream = None)(
-      spark, originStats = None, originConstraints = None)
-    (classic.Dataset.ofRows(spark, plan), s)
-  }
-
   /** [[cut]] that also returns the materialized row count — the
    * eager materialization is a count() anyway, so frontier loops that
    * need the active count (every frontier algorithm does) get it for
    * free instead of paying a second job per superstep. */
-  def cutCounted(df: DataFrame): (DataFrame, Long) = {
+  def cutCounted(df: DataFrame): (DataFrame, Long) = materialize(df)(_.count())
+
+  /** [[cut]] that also sums a double column during the materialization
+   * pass — one job instead of cut + aggregate. PageRank's
+   * per-iteration delta (the reference's Allreduce,
+   * core/graph.hpp:1856-1858) rides the state materialization. */
+  def cutSummed(df: DataFrame, sumCol: String): (DataFrame, Double) = {
+    val idx = indexOf(df, sumCol)
+    materialize(df)(_.aggregate(0.0)((acc, row) => acc + row.getDouble(idx), _ + _))
+  }
+
+  /** [[cut]] of a resident state that flags its active rows: also
+   * returns the active row count and the sum of the long `massCol`
+   * over active rows (0 without one), from the same single job. With
+   * `massCol` = out-degree this is the frontier's out-edge mass, the
+   * statistic Gemini's process_vertices returns before every superstep
+   * (core/graph.hpp:1502-1507). */
+  def cutActive(df: DataFrame, activeCol: String, massCol: Option[String]): (DataFrame, Long, Long) = {
+    val a = indexOf(df, activeCol)
+    val m = massCol.map(indexOf(df, _)).getOrElse(-1)
+    val (cut, (n, mass)) = materialize(df)(_.aggregate((0L, 0L))(
+      (acc, row) =>
+        if (row.isNullAt(a) || !row.getBoolean(a)) acc
+        else (acc._1 + 1, acc._2 + (if (m < 0 || row.isNullAt(m)) 0L else row.getLong(m))),
+      (x, y) => (x._1 + y._1, x._2 + y._2)))
+    (cut, n, mass)
+  }
+
+  private def indexOf(df: DataFrame, name: String): Int = {
+    val idx = df.columns.indexOf(name)
+    require(idx >= 0, s"column $name not found")
+    idx
+  }
+
+  /** The one materialization body behind every cut: persist the rows,
+   * sever their lineage, run `action` over them as the eager job, and
+   * wrap them in a stats-free `LogicalRDD`. `action` must be an RDD
+   * ACTION (count, aggregate) so its result is exactly-once under task
+   * retries — an accumulator inside the map would double-count retried
+   * tasks and could shift a loop's stopping iteration. */
+  private def materialize[T](df: DataFrame)(action: RDD[InternalRow] => T): (DataFrame, T) = {
     val ds = df.asInstanceOf[classic.Dataset[Row]]
     val spark = ds.sparkSession
     val qe = ds.queryExecution
     // toRdd reuses UnsafeRow buffers per partition — copy before caching
-    val rdd = qe.toRdd.map(_.copy())
-    rdd.persist(StorageLevel.MEMORY_AND_DISK)
+    val rows = qe.toRdd.map(_.copy())
+    rows.persist(StorageLevel.MEMORY_AND_DISK)
     // Sever the RDD dependency chain too: preserved partitioning means
     // no Exchange between iterations, so without this every superstep's
     // narrow lineage fuses into ONE stage whose task binary grows until
     // task deserialization StackOverflows (observed at ~60 supersteps).
-    rdd.localCheckpoint()
-    val n = rdd.count() // eager — materializes, truncates, finalizes AQE plan
+    rows.localCheckpoint()
+    val result = action(rows) // eager — materializes, truncates, finalizes AQE plan
     val plan = LogicalRDD(
-      qe.analyzed.output, rdd,
+      qe.analyzed.output, rows,
       rewrittenPartitioning(qe), Nil, isStreaming = false, stream = None)(
       spark, originStats = None, originConstraints = None)
-    (classic.Dataset.ofRows(spark, plan), n)
+    (classic.Dataset.ofRows(spark, plan), result)
   }
 
   /** Explicitly unpersist the RDD behind a [[cut]] DataFrame (no-op for
@@ -100,9 +118,13 @@ object GraftLineage {
 
   /** Final physical outputPartitioning, with its attribute references
    * rewritten from the optimized plan's output ids to the analyzed
-   * plan's (the ids a consumer of the new LogicalRDD will see).
-   * Falls back to UnknownPartitioning whenever anything is off —
-   * costing at most one redundant Exchange, never correctness. */
+   * plan's (the ids a consumer of the new LogicalRDD will see). A
+   * `PartitioningCollection` (a projection that aliases its key, e.g.
+   * `select(id, id AS lbl)`, reports one) keeps every hash member whose
+   * references survive into the output. Anything else is recorded as
+   * UnknownPartitioning — never wrong results, but the consumer
+   * then re-shuffles this table, and a loop that cuts its state every
+   * superstep pays that exchange every superstep. */
   private def rewrittenPartitioning(
       qe: execution.QueryExecution): Partitioning = {
     try {
@@ -110,21 +132,27 @@ object GraftLineage {
         case a: AdaptiveSparkPlanExec => a.finalPhysicalPlan
         case p => p
       }
-      physical.outputPartitioning match {
-        case hp: HashPartitioning =>
-          LogicalRDD.buildOutputAssocForRewrite(qe.optimizedPlan.output, qe.analyzed.output) match {
-            case Some(assoc) =>
+      val outIds = qe.analyzed.output.map(_.exprId).toSet
+      LogicalRDD.buildOutputAssocForRewrite(qe.optimizedPlan.output, qe.analyzed.output)
+        .flatMap { assoc =>
+          def rewrite(p: Partitioning): Option[Partitioning] = p match {
+            case hp: HashPartitioning =>
               val rewritten = hp.expressions.map(_.transform {
                 case a: Attribute => assoc.getOrElse(a, a)
               })
-              val outIds = qe.analyzed.output.map(_.exprId).toSet
               val ok = rewritten.forall(_.references.forall(r => outIds.contains(r.exprId)))
-              if (ok) HashPartitioning(rewritten, hp.numPartitions)
-              else UnknownPartitioning(0)
-            case None => UnknownPartitioning(0)
+              if (ok) Some(HashPartitioning(rewritten, hp.numPartitions)) else None
+            case pc: PartitioningCollection =>
+              pc.partitionings.flatMap(rewrite) match {
+                case Seq() => None
+                case Seq(one) => Some(one)
+                case kept => Some(PartitioningCollection(kept))
+              }
+            case _ => None
           }
-        case _ => UnknownPartitioning(0)
-      }
+          rewrite(physical.outputPartitioning)
+        }
+        .getOrElse(UnknownPartitioning(0))
     } catch { case _: Throwable => UnknownPartitioning(0) }
   }
 }

@@ -142,10 +142,28 @@ class CheckpointSpec extends SparkSpec {
     val ck = Checkpoint(dir)
     ConnectedComponents.run(g, ckpt = Some(ck), ckptEvery = 1, maxIterations = 2)
     assert(ck.latestIteration().nonEmpty)
+    assert(ck.load(spark, ck.latestIteration().get).columns.toSeq == Seq("id", "lbl"))
     val resumed = ConnectedComponents.run(g, ckpt = Some(ck), resume = true)
-    val a = full.labels.withColumnRenamed("lbl", "a")
-    val b = resumed.labels.withColumnRenamed("lbl", "b")
+    assertSameLabels(full, resumed)
+    assert(ck.load(spark, ck.latestIteration().get).columns.toSeq == Seq("id", "lbl"))
+  }
+
+  private def assertSameLabels(x: ConnectedComponents.Result, y: ConnectedComponents.Result): Unit = {
+    val a = x.labels.withColumnRenamed("lbl", "a")
+    val b = y.labels.withColumnRenamed("lbl", "b")
+    assert(a.count() == b.count())
     assert(a.join(b, "id").where(col("a") =!= col("b")).count() == 0)
+  }
+
+  test("CC: resume from a checkpoint at the fixpoint runs no superstep") {
+    val g = graphOf(edges, symmetric = true)
+    val ck = Checkpoint(tmpDir())
+    val full = ConnectedComponents.run(g, ckpt = Some(ck), ckptEvery = 1)
+    assert(ck.latestIteration().contains(full.iterations))
+    assert(ck.activeCount(full.iterations) == 0)
+    val resumed = ConnectedComponents.run(g, ckpt = Some(ck), ckptEvery = 1, resume = true)
+    assert(resumed.iterations == full.iterations && resumed.activeHistory.isEmpty)
+    assertSameLabels(full, resumed)
   }
 
   test("HITS: resume from the (auth, hub) snapshot yields identical scores") {

@@ -5,13 +5,15 @@ import java.util.concurrent.atomic.AtomicInteger
 import org.apache.spark.graft.TestBus
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 
-import graft.algos.PageRank
+import org.apache.spark.sql.functions._
 
-/** Spark jobs per PageRank superstep, under the suite's default
- * (production) broadcast thresholds. The marginal count between k and
- * k+4 supersteps cancels the fixed per-run jobs; an added job per
- * superstep (a re-broadcast edge or degree table, a second state
- * join) fails here. */
+import graft.algos.{ConnectedComponents, PageRank}
+
+/** Spark jobs per PageRank and ConnectedComponents superstep, under
+ * the suite's default (production) broadcast thresholds. The marginal
+ * count between k and k+4 supersteps cancels the fixed per-run jobs;
+ * an added job per superstep (a re-broadcast edge or degree table, a
+ * second state join, a separate edge-mass aggregation) fails here. */
 class PageRankJobsSpec extends SparkSpec {
 
   /** Jobs per superstep with AQE on: the message shuffle's map stage
@@ -35,21 +37,56 @@ class PageRankJobsSpec extends SparkSpec {
       (31 until 36).map(i => (i, 0)),
     symmetric = false)
 
-  private def marginal(run: Int => PageRank.Result): Int = {
+  /** @param run runs `k` supersteps and returns the iterations it ran */
+  private def marginal(run: Int => Int): Int = {
     run(2) // warm-up: the graph's lazy statistics are computed once
     val k = 2
-    val jk = jobsOf(assert(run(k).iterations == k))
-    val jk4 = jobsOf(assert(run(k + 4).iterations == k + 4))
+    val jk = jobsOf(assert(run(k) == k))
+    val jk4 = jobsOf(assert(run(k + 4) == k + 4))
     assert((jk4 - jk) % 4 == 0, s"non-integral jobs per superstep: $jk at $k, $jk4 at ${k + 4}")
     (jk4 - jk) / 4
   }
 
   test("fixed-iteration PageRank: jobs per superstep pinned") {
-    assert(marginal(k => PageRank.run(g, iterations = k)) == jobsPerSuperstep)
+    assert(marginal(k => PageRank.run(g, iterations = k).iterations) == jobsPerSuperstep)
   }
 
   test("convergence-mode PageRank: jobs per superstep pinned (delta rides the cut)") {
     // tol < 0 never stops early, so the run takes exactly maxIterations
-    assert(marginal(k => PageRank.run(g, maxIterations = k, tol = -1.0)) == jobsPerSuperstep)
+    assert(marginal(k => PageRank.run(g, maxIterations = k, tol = -1.0).iterations) == jobsPerSuperstep)
+  }
+
+  /** CC jobs per dense superstep: the message shuffle's map stage and
+   * the cut (which also returns the active count and edge mass). */
+  val ccDenseJobs = 2
+  /** CC jobs per sparse superstep: the same two plus the frontier
+   * broadcast. */
+  val ccSparseJobs = 3
+
+  test("ConnectedComponents: jobs per dense superstep pinned") {
+    // 40 chains of 15 vertices with hashed ids: each of supersteps 1..6
+    // activates at least |E|/20 vertices, so its out-edge mass is dense
+    val chains = graphOf(
+      for (c <- 0 until 40; p <- 0 until 14) yield (c * 15 + p, c * 15 + p + 1),
+      symmetric = true)
+    val history = ConnectedComponents.run(chains, maxIterations = 6).activeHistory
+    assert(history.forall(_ >= chains.numEdges / Superstep.denseThresholdFraction),
+      s"every superstep must be dense: $history")
+    assert(marginal(k => ConnectedComponents.run(chains, maxIterations = k).iterations) == ccDenseJobs)
+  }
+
+  test("ConnectedComponents: jobs per sparse superstep pinned") {
+    // a 60-vertex path warm-started with the smallest label at one end
+    // and only that end active: one vertex (out-edge mass ≤ 2, under
+    // |E|/20) adopts the label per superstep
+    val path = graphOf((0 until 59).map(i => (i, i + 1)), symmetric = true)
+    val end = indexOf(path).collectFirst { case (id, 0) => id }.get
+    val labels = path.vertices.select(col("id"),
+      when(col("id") === end, lit(-1L)).otherwise(col("id")).as("lbl"))
+    def run(k: Int) = ConnectedComponents.run(path, maxIterations = k,
+      initLabels = Some(labels), initFrontier = Some(labels.where(col("id") === end)))
+    assert(2 < path.numEdges / Superstep.denseThresholdFraction)
+    assert(run(6).activeHistory == Seq.fill(6)(1L))
+    assert(marginal(run(_).iterations) == ccSparseJobs)
   }
 }

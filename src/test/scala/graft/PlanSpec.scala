@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.execution.SparkPlan
+import org.apache.spark.sql.execution.{RDDScanExec, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
 import org.apache.spark.sql.execution.exchange.{BroadcastExchangeLike, ShuffleExchangeLike}
 import org.apache.spark.sql.functions._
@@ -257,6 +257,18 @@ class PlanSpec extends SparkSpec {
     val plan = executed(joined)
     assert(shuffles(plan) <= 1, // at most the degrees side re-shuffle
       s"cut state must retain hash partitioning (got ${shuffles(plan)}):\n$plan")
+  }
+
+  test("a cut whose plan reports a PartitioningCollection keeps its hash partitioning") {
+    // `id AS lbl` over the id-clustered degrees: the projection reports
+    // hash(id) and hash(lbl) as one PartitioningCollection
+    val labels = g.degrees.select(col("id"), col("id").as("lbl")).graftCut
+    val plan = executed(labels.join(g.degrees.repartition(numPartitions, col("id")), "id"))
+    val cutSide = collectNodes(plan).count {
+      case s: ShuffleExchangeLike => collectNodes(s).exists(_.isInstanceOf[RDDScanExec])
+      case _ => false
+    }
+    assert(cutSide == 0, s"the cut side must not be re-shuffled (got $cutSide):\n$plan")
   }
 
   test("temperature mix prunes scans + broadcasts thresholds; wedge ops never go cartesian") {
