@@ -3,6 +3,8 @@ package graft
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.syntax._
+
 /**
  * The engine's dataflow core — the Spark-first re-expression of the
  * reference's `process_edges` (core/graph.hpp:1491-1866) with its
@@ -126,6 +128,61 @@ object Superstep {
         .groupBy(col("id"))
         .agg(combine(col("msg")).as("msg"))
     }
+  }
+
+  /** One iteration's state as [[loop]] sees it: the lineage-cut
+   * `state`, the `count` its checkpoint sidecar records as
+   * `active_count`, and whether another superstep should run from it. */
+  final case class Cut(state: DataFrame, count: Long, more: Boolean)
+
+  /** The end of a [[loop]]: the last state, its iteration number, and
+   * the supersteps this call ran (0 when it resumed at its limit or
+   * fixpoint). */
+  final case class Looped(state: DataFrame, iterations: Int, supersteps: Int)
+
+  /**
+   * The shared superstep loop. The algorithm supplies `start` (the cold
+   * state for `None`; for `Some(k)`, the state rebuilt from the rows
+   * saved at iteration k, the newest checkpoint when `resume`) and
+   * `step` (one superstep, returning its successor already cut). The
+   * loop owns resume, the stop (`more = false` or `maxIterations`), the
+   * free and the checkpoint cadence, as Gemini's engine owns checkpoint
+   * dump and restore (core/graph.hpp:252-306).
+   *
+   * Free point: the superseded state is freed right after `step` has
+   * cut its successor; the last state is the caller's.
+   *
+   * Save rule: iteration i is saved (`saved(state)`, with `count`) when
+   * i % ckptEvery == 0 and the loop goes on, and the final iteration
+   * once unless it is the one resumed from. So no iteration is written
+   * twice, `ckptEvery = Int.MaxValue` means "final save only", and a
+   * run resumed at its limit or fixpoint writes nothing.
+   */
+  def loop(
+      name: String,
+      maxIterations: Int,
+      ckpt: Option[Checkpoint] = None,
+      ckptEvery: Int = 1,
+      resume: Boolean = false)(
+      start: Option[Int] => Cut,
+      step: Cut => Cut,
+      saved: DataFrame => DataFrame = identity): Looped = {
+    val from = if (resume) ckpt.flatMap(_.latestIteration()) else None
+    val first = from.getOrElse(0)
+    var cut = start(from)
+    var i = first
+    while (cut.more && i < maxIterations) {
+      val t0 = System.nanoTime()
+      val next = step(cut)
+      cut.state.graftFree()
+      cut = next
+      i += 1
+      log(f"$name iter $i: count=${cut.count} ${(System.nanoTime() - t0) / 1e9}%.2f s")
+      for (c <- ckpt if cut.more && i < maxIterations && i % ckptEvery == 0)
+        c.save(saved(cut.state), i, cut.count)
+    }
+    if (!from.contains(i)) ckpt.foreach(_.save(saved(cut.state), i, cut.count))
+    Looped(cut.state, i, i - first)
   }
 
   /** Default skew thresholds for [[autoSaltBuckets]], env-overridable

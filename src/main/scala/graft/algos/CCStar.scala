@@ -4,7 +4,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.syntax._
-import graft.{Checkpoint, LinkGraph}
+import graft.{Checkpoint, LinkGraph, Superstep}
 
 /**
  * Connected components by alternating star contraction — the
@@ -55,70 +55,61 @@ object CCStar {
     // The checkpointable state IS the contracting edge set — saved as
     // (id = u, v) rows per Checkpoint's id-bucketed lineage contract.
     // Star contraction is a pure function of that set, so a resumed
-    // run replays bit-identically (CheckpointSpec).
-    var e: DataFrame = null
-    var rounds = 0
-    val resumed = if (resume) ckpt.flatMap(_.latestIteration()) else None
-    resumed match {
-      case Some(k) =>
-        e = ckpt.get.load(graph.spark, k)
-          .select(col("id").as("u"), col("v"))
-          .repartition(np, col("u"))
-          .graftCut
-        rounds = k
-      case None =>
-        // Canonical big→small orientation; the symmetric build carries
-        // both directions of each pair, so the filter keeps each once.
-        e = graph.edgesBySrc
-          .where(col("src") > col("dst"))
-          .select(col("src").as("u"), col("dst").as("v"))
-          .repartition(np, col("u"))
-          .graftCut
+    // run replays bit-identically (CheckpointSpec). A round that leaves
+    // the set's fingerprint unchanged has reached the fixpoint.
+    var fp: (Long, java.math.BigDecimal) = null
+    def cut(edges: DataFrame): Superstep.Cut = {
+      val e = edges.graftCut
+      val prev = fp
+      fp = fingerprint(e)
+      Superstep.Cut(e, fp._1, more = fp != prev)
     }
-    var fp = fingerprint(e)
-
-    var converged = false
-    while (!converged && rounds < maxRounds) {
-      // ---- large-star ----
-      val nbrs = e.unionByName(e.select(col("v").as("u"), col("u").as("v")))
-      val minsL = nbrs.groupBy(col("u")).agg(min(col("v")).as("mn"))
-        .select(col("u"), least(col("u"), col("mn")).as("m"))
-      val eL = nbrs.join(minsL, "u")
-        .where(col("v") > col("u"))
-        .select(col("v").as("u"), col("m").as("v"))
-        .where(col("u") =!= col("v"))
-        .distinct()
-      // ---- small-star (eL is big→small: every neighbor of u is < u,
-      // so m(u) = min over out-neighbors; u itself can't be the min) --
-      val minsS = eL.groupBy(col("u")).agg(min(col("v")).as("m"))
-      val eS = eL.join(minsS, "u")
-        .select(col("v").as("u"), col("m").as("v"))
-        .unionByName(minsS.select(col("u"), col("m").as("v")))
-        .where(col("u") =!= col("v"))
-        .distinct()
-        .repartition(np, col("u"))
-
-      val e2 = eS.graftCut
-      val fp2 = fingerprint(e2)
-      converged = fp2 == fp
-      e.graftFree()
-      e = e2
-      fp = fp2
-      rounds += 1
-      if (ckpt.nonEmpty && !converged && rounds % ckptEvery == 0)
-        ckpt.get.save(e.select(col("u").as("id"), col("v")), rounds, fp._1)
-    }
-    ckpt.foreach(_.save(e.select(col("u").as("id"), col("v")), rounds, fp._1))
+    val r = Superstep.loop("ccstar", maxRounds, ckpt, ckptEvery, resume)(
+      start = resumed => cut(resumed match {
+        case Some(k) =>
+          ckpt.get.load(graph.spark, k)
+            .select(col("id").as("u"), col("v"))
+            .repartition(np, col("u"))
+        case None =>
+          // Canonical big→small orientation; the symmetric build carries
+          // both directions of each pair, so the filter keeps each once.
+          graph.edgesBySrc
+            .where(col("src") > col("dst"))
+            .select(col("src").as("u"), col("dst").as("v"))
+            .repartition(np, col("u"))
+      }),
+      step = { c =>
+        val e = c.state
+        // ---- large-star ----
+        val nbrs = e.unionByName(e.select(col("v").as("u"), col("u").as("v")))
+        val minsL = nbrs.groupBy(col("u")).agg(min(col("v")).as("mn"))
+          .select(col("u"), least(col("u"), col("mn")).as("m"))
+        val eL = nbrs.join(minsL, "u")
+          .where(col("v") > col("u"))
+          .select(col("v").as("u"), col("m").as("v"))
+          .where(col("u") =!= col("v"))
+          .distinct()
+        // ---- small-star (eL is big→small: every neighbor of u is < u,
+        // so m(u) = min over out-neighbors; u itself can't be the min) --
+        val minsS = eL.groupBy(col("u")).agg(min(col("v")).as("m"))
+        cut(eL.join(minsS, "u")
+          .select(col("v").as("u"), col("m").as("v"))
+          .unionByName(minsS.select(col("u"), col("m").as("v")))
+          .where(col("u") =!= col("v"))
+          .distinct()
+          .repartition(np, col("u")))
+      },
+      saved = _.select(col("u").as("id"), col("v")))
 
     // Fixpoint is a star forest (member → component-min root); isolated
     // vertices and the roots themselves label to their own id.
     val labels = graph.vertices.select(col("id"))
-      .join(e.select(col("u").as("id"), col("v").as("root")), Seq("id"), "left")
+      .join(r.state.select(col("u").as("id"), col("v").as("root")), Seq("id"), "left")
       .select(col("id"), coalesce(col("root"), col("id")).as("lbl"))
       .repartition(np, col("id"))
       .graftCut
-    e.graftFree()
-    Result(labels, rounds)
+    r.state.graftFree()
+    Result(labels, r.iterations)
   }
 
   /** Exact set fingerprint: (row count, Σ xxhash64(u,v) in

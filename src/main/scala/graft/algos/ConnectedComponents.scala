@@ -52,65 +52,56 @@ object ConnectedComponents {
     val salt = Superstep.resolveSalt(graph, saltBuckets)
     val degs = graph.degrees.select(col("id"), col("out_degree"))
 
-    val resumed = if (resume) ckpt.flatMap(_.latestIteration()) else None
-    val init = resumed match {
-      case Some(k) =>
-        // conservative resume frontier: every vertex re-sends its label
-        // once (min is idempotent, so the fixpoint is the same) — unless
-        // the checkpoint was saved at the fixpoint, where nothing moves
-        degs.join(ckpt.get.load(graph.spark, k), "id")
-          .withColumn("active", lit(ckpt.get.activeCount(k) > 0))
-      case None if initLabels.nonEmpty =>
-        // warm start ([[incremental]]): caller-supplied labels (must be
-        // constant per component of the already-processed edge subset)
-        // and a restricted frontier (endpoints of the new edges) — the
-        // fixpoint is identical to a cold run because min-propagation
-        // wakes exactly the vertices whose label can still drop.
-        val labelled = degs.join(initLabels.get.select(col("id"), col("lbl")), "id")
-        initFrontier match {
-          case Some(f) =>
-            labelled
-              .join(f.select(col("id")).distinct().withColumn("awake", lit(true)), Seq("id"), "left")
-              .withColumn("active", coalesce(col("awake"), lit(false)))
-          case None => labelled.withColumn("active", lit(true))
-        }
-      case None =>
-        degs.select(col("id"), col("out_degree"), col("id").as("lbl"), lit(true).as("active"))
-    }
-    var (state, activeCount, mass) = init
-      .select(col("id"), col("out_degree"), col("lbl"), col("active"))
-      .repartition(graph.numPartitions, col("id"))
-      .graftCutActive("active", Some("out_degree"))
-
-    val history = scala.collection.mutable.ArrayBuffer[Long]()
-    var i = resumed.getOrElse(0)
-    while (activeCount > 0 && i < maxIterations) {
-      history += activeCount
-      val t0 = System.nanoTime()
-      val msgs = Superstep.gather(
-        graph, state.where(col("active")).select(col("id"), col("lbl")),
-        signal = col("lbl"), combine = min,
-        activeEdges = mass, activeCount = activeCount, saltBuckets = salt)
-      // Hinted for the reason PageRank.run gives: unhinted, AQE
-      // re-plans it as a broadcast of `msgs`. Both sides are clustered
-      // by id, so the hash join needs no exchange.
-      val (next, n, m) = state.join(msgs.hint("shuffle_hash"), Seq("id"), "left")
-        .select(col("id"), col("out_degree"),
-          least(col("lbl"), col("msg")).as("lbl"),
-          coalesce(col("msg") < col("lbl"), lit(false)).as("active"))
-        .graftCutActive("active", Some("out_degree"))
-      state.graftFree()
-      state = next
-      activeCount = n
+    // the frontier's out-edge mass, returned by the cut that built it
+    var mass = 0L
+    def cut(state: DataFrame): Superstep.Cut = {
+      val (s, n, m) = state.graftCutActive("active", Some("out_degree"))
       mass = m
-      i += 1
-      Superstep.log(f"cc iter $i: active=$activeCount mass=$mass ${(System.nanoTime() - t0) / 1e9}%.2f s")
-      if (ckpt.nonEmpty && activeCount > 0 && (i % ckptEvery == 0))
-        ckpt.get.save(state.select(col("id"), col("lbl")), i, activeCount)
+      Superstep.Cut(s, n, more = n > 0)
     }
-    val labels = state.select(col("id"), col("lbl"))
-    ckpt.foreach(_.save(labels, i, activeCount))
-    Result(labels, i, history.toSeq)
+    val history = scala.collection.mutable.ArrayBuffer[Long]()
+    val r = Superstep.loop("cc", maxIterations, ckpt, ckptEvery, resume)(
+      start = resumed => cut((resumed match {
+        case Some(k) =>
+          // conservative resume frontier: every vertex re-sends its label
+          // once (min is idempotent, so the fixpoint is the same) — unless
+          // the checkpoint was saved at the fixpoint, where nothing moves
+          degs.join(ckpt.get.load(graph.spark, k), "id")
+            .withColumn("active", lit(ckpt.get.activeCount(k) > 0))
+        case None if initLabels.nonEmpty =>
+          // warm start ([[incremental]]): caller-supplied labels (must be
+          // constant per component of the already-processed edge subset)
+          // and a restricted frontier (endpoints of the new edges) — the
+          // fixpoint is identical to a cold run because min-propagation
+          // wakes exactly the vertices whose label can still drop.
+          val labelled = degs.join(initLabels.get.select(col("id"), col("lbl")), "id")
+          initFrontier match {
+            case Some(f) =>
+              labelled
+                .join(f.select(col("id")).distinct().withColumn("awake", lit(true)), Seq("id"), "left")
+                .withColumn("active", coalesce(col("awake"), lit(false)))
+            case None => labelled.withColumn("active", lit(true))
+          }
+        case None =>
+          degs.select(col("id"), col("out_degree"), col("id").as("lbl"), lit(true).as("active"))
+      }).select(col("id"), col("out_degree"), col("lbl"), col("active"))
+        .repartition(graph.numPartitions, col("id"))),
+      step = { c =>
+        history += c.count
+        val msgs = Superstep.gather(
+          graph, c.state.where(col("active")).select(col("id"), col("lbl")),
+          signal = col("lbl"), combine = min,
+          activeEdges = mass, activeCount = c.count, saltBuckets = salt)
+        // Hinted for the reason PageRank.run gives: unhinted, AQE
+        // re-plans it as a broadcast of `msgs`. Both sides are clustered
+        // by id, so the hash join needs no exchange.
+        cut(c.state.join(msgs.hint("shuffle_hash"), Seq("id"), "left")
+          .select(col("id"), col("out_degree"),
+            least(col("lbl"), col("msg")).as("lbl"),
+            coalesce(col("msg") < col("lbl"), lit(false)).as("active")))
+      },
+      saved = _.select(col("id"), col("lbl")))
+    Result(r.state.select(col("id"), col("lbl")), r.iterations, history.toSeq)
   }
 
   /** Number of distinct components (reference report, cc.cpp:90-104). */

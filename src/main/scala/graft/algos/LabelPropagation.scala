@@ -4,7 +4,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.syntax._
-import graft.{Checkpoint, LinkGraph, Superstep}
+import graft.{LinkGraph, Superstep}
 
 /**
  * Synchronous min-label propagation (north-rule algorithm; no direct
@@ -25,7 +25,6 @@ object LabelPropagation {
 
   def run(
       graph: LinkGraph,
-      ckpt: Option[Checkpoint] = None,
       maxIterations: Int = 10000,
       saltBuckets: Int = -1): Result = {
     val salt = Superstep.resolveSalt(graph, saltBuckets)
@@ -33,34 +32,27 @@ object LabelPropagation {
     // rounds, plus the flag the cut counts. One round = one gather and
     // one left join `state ⋈ msgs` into the cut (hinted as in
     // PageRank.run; both sides clustered by id): 2 Spark jobs.
-    var state = graph.vertices.select(col("id"), col("id").as("lbl"), lit(true).as("changed"))
-      .repartition(graph.numPartitions, col("id"))
-      .graftCut
     val history = scala.collection.mutable.ArrayBuffer[Long]()
-    var i = 0
-    var changed = -1L
-    while (changed != 0 && i < maxIterations) {
-      val msgs = Superstep.gather(
-        graph, state.select(col("id"), col("lbl")), signal = col("lbl"), combine = min,
-        activeEdges = graph.numEdges, activeCount = graph.numVertices,
-        saltBuckets = salt)
-      val (next, n, _) = state.join(msgs.hint("shuffle_hash"), Seq("id"), "left")
-        .select(col("id"),
-          least(col("lbl"), col("msg")).as("lbl"),
-          coalesce(col("msg") < col("lbl"), lit(false)).as("changed"))
-        .graftCutActive("changed")
-      state.graftFree()
-      state = next
-      changed = n
-      history += changed
-      i += 1
-      Superstep.log(f"lp iter $i: changed=$changed")
-      if (ckpt.nonEmpty && changed > 0 && (i % 5 == 0))
-        ckpt.get.save(state.select(col("id"), col("lbl")), i, changed)
-    }
-    val labels = state.select(col("id"), col("lbl"))
-    ckpt.foreach(_.save(labels, i, 0L))
-    Result(labels, i, history.toSeq)
+    val r = Superstep.loop("lp", maxIterations)(
+      start = _ => Superstep.Cut(
+        graph.vertices.select(col("id"), col("id").as("lbl"), lit(true).as("changed"))
+          .repartition(graph.numPartitions, col("id"))
+          .graftCut,
+        graph.numVertices, more = true),
+      step = { c =>
+        val msgs = Superstep.gather(
+          graph, c.state.select(col("id"), col("lbl")), signal = col("lbl"), combine = min,
+          activeEdges = graph.numEdges, activeCount = graph.numVertices,
+          saltBuckets = salt)
+        val (next, changed, _) = c.state.join(msgs.hint("shuffle_hash"), Seq("id"), "left")
+          .select(col("id"),
+            least(col("lbl"), col("msg")).as("lbl"),
+            coalesce(col("msg") < col("lbl"), lit(false)).as("changed"))
+          .graftCutActive("changed")
+        history += changed
+        Superstep.Cut(next, changed, more = changed != 0)
+      })
+    Result(r.state.select(col("id"), col("lbl")), r.iterations, history.toSeq)
   }
 
   /**

@@ -53,23 +53,6 @@ object PageRank {
     val limit = if (fixed) iterations else maxIterations
     val salt = Superstep.resolveSalt(graph, saltBuckets)
 
-    // (id, out_degree, v) where v = rank/out_degree; after a superstep
-    // also `raw` = the undivided rank (and `dterm` in convergence mode)
-    val resumed = if (resume) ckpt.flatMap(c => c.latestIteration()) else None
-    val startIter = resumed.getOrElse(0)
-    var state: DataFrame = resumed match {
-      case Some(k) =>
-        degs.join(ckpt.get.load(graph.spark, k), Seq("id"))
-          .repartition(graph.numPartitions, col("id"))
-          .graftCut
-      case None =>
-        degs.select(
-          col("id"), col("out_degree"),
-          when(col("out_degree") > 0, lit(1.0) / col("out_degree"))
-            .otherwise(lit(1.0)).as("v"))
-          .graftCut
-    }
-
     // Per-superstep math over the joined row (id, out_degree, v, msg);
     // `v` on the right-hand side is the previous iteration's value.
     val deg = col("out_degree")
@@ -80,47 +63,51 @@ object PageRank {
     val dterm = when(deg > 0, abs(raw / deg - col("v")) * deg)
       .otherwise(abs(raw - col("v"))).as("dterm")
 
+    // (id, out_degree, v) where v = rank/out_degree; after a superstep
+    // also `raw` = the undivided rank (and `dterm` in convergence mode)
+    val n = graph.numVertices
     val deltas = scala.collection.mutable.ArrayBuffer[Double]()
-    var i = startIter
-    var done = false
-    while (i < limit && !done) {
-      val sums = Superstep.gather(
-        graph, state, signal = col("v"), combine = sum,
-        activeEdges = graph.numEdges, activeCount = graph.numVertices,
-        saltBuckets = salt)
-      // Unhinted, AQE sees the small message table at run time and
-      // re-plans this join as a broadcast of `sums` — one more job per
-      // superstep, and a |V|-row table through the driver at scale.
-      // Both sides are clustered by id, so the hash join needs no
-      // exchange.
-      val joined = state.join(sums.hint("shuffle_hash"), Seq("id"), "left")
-      // In fixed-iteration (parity) mode the per-iteration delta is
-      // only reference REPORTING (pagerank.cpp:48-50) — skip its column
-      // and its sum.
-      val step =
-        if (fixed) joined.select(next: _*).graftCut
+    val r = Superstep.loop("pr", limit, ckpt, ckptEvery, resume)(
+      start = resumed => Superstep.Cut(resumed match {
+        case Some(k) =>
+          degs.join(ckpt.get.load(graph.spark, k), Seq("id"))
+            .repartition(graph.numPartitions, col("id"))
+            .graftCut
+        case None =>
+          degs.select(
+            col("id"), col("out_degree"),
+            when(col("out_degree") > 0, lit(1.0) / col("out_degree"))
+              .otherwise(lit(1.0)).as("v"))
+            .graftCut
+      }, n, more = true),
+      step = { c =>
+        val sums = Superstep.gather(
+          graph, c.state, signal = col("v"), combine = sum,
+          activeEdges = graph.numEdges, activeCount = n,
+          saltBuckets = salt)
+        // Unhinted, AQE sees the small message table at run time and
+        // re-plans this join as a broadcast of `sums` — one more job per
+        // superstep, and a |V|-row table through the driver at scale.
+        // Both sides are clustered by id, so the hash join needs no
+        // exchange.
+        val joined = c.state.join(sums.hint("shuffle_hash"), Seq("id"), "left")
+        // In fixed-iteration (parity) mode the per-iteration delta is
+        // only reference REPORTING (pagerank.cpp:48-50) — skip its column
+        // and its sum.
+        if (fixed) Superstep.Cut(joined.select(next: _*).graftCut, n, more = true)
         else {
-          val t0 = System.nanoTime()
           val (s, dsum) = joined.select(next :+ dterm: _*).graftCutSum("dterm")
-          val dlt = dsum / graph.numVertices
-          Superstep.log(f"pr iter ${i + 1}: delta=$dlt%.2e step=${(System.nanoTime() - t0) / 1e9}%.2f s")
-          deltas += dlt
-          s
+          deltas += dsum / n
+          Superstep.Cut(s, n, more = !(deltas.last <= tol))
         }
-      state.graftFree()
-      state = step
-      i += 1
-      if (ckpt.nonEmpty && (i % ckptEvery == 0))
-        ckpt.get.save(state.select(col("id"), col("v")), i, graph.numVertices)
-      if (!fixed && deltas.last <= tol) done = true
-    }
-    ckpt.foreach(_.save(state.select(col("id"), col("v")), i, graph.numVertices))
+      },
+      saved = _.select(col("id"), col("v")))
     val ranks =
-      if (i > startIter) state.select(col("id"), col("raw").as("rank"))
+      if (r.supersteps > 0) r.state.select(col("id"), col("raw").as("rank"))
       else
         // resumed at the iteration limit: undo the division to recover
         // the reportable (undivided) rank — raw = v·out_degree (deg>0).
-        state.select(col("id"), when(deg > 0, col("v") * deg).otherwise(col("v")).as("rank"))
-    Result(ranks, i, deltas.toSeq)
+        r.state.select(col("id"), when(deg > 0, col("v") * deg).otherwise(col("v")).as("rank"))
+    Result(ranks, r.iterations, deltas.toSeq)
   }
 }

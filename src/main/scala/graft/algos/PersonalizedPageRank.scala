@@ -50,57 +50,42 @@ object PersonalizedPageRank {
       .where(col("id").isin(seeds: _*))
       .select(col("id"), lit(1.0 / seeds.size).as("t"))
 
-    // state (id, raw, v): raw = score, v = raw/outdeg — nonzero rows only
-    var curr: DataFrame = null
-    var n = 0L
-    var startIter = 0
-    val resumed = if (resume) ckpt.flatMap(_.latestIteration()) else None
-    resumed match {
-      case Some(k) =>
-        val (st, cnt) = ckpt.get.load(graph.spark, k)
-          .repartition(graph.numPartitions, col("id"))
-          .graftCutCount
-        curr = st
-        n = cnt
-        startIter = k
-      case None =>
-        val (st, cnt) = tele.join(degs, "id")
+    // state (id, raw, v): raw = score, v = raw/outdeg — nonzero rows
+    // only; the count is the support size
+    def cut(state: DataFrame): Superstep.Cut = {
+      val (s, n) = state.graftCutCount
+      Superstep.Cut(s, n, more = true)
+    }
+    val r = Superstep.loop("ppr", iterations, ckpt, ckptEvery, resume)(
+      start = {
+        case Some(k) =>
+          cut(ckpt.get.load(graph.spark, k).repartition(graph.numPartitions, col("id")))
+        case None =>
+          cut(tele.join(degs, "id")
+            .select(
+              col("id"), col("t").as("raw"),
+              when(col("out_degree") > 0, col("t") / col("out_degree"))
+                .otherwise(col("t")).as("v")))
+      },
+      step = { c =>
+        val mass = Superstep.massOrBound(graph, c.state, c.count)
+        val msgs = Superstep.gather(
+          graph, c.state.select(col("id"), col("v")), signal = col("v"), combine = sum,
+          activeEdges = mass, activeCount = c.count)
+        // support = seeds ∪ message receivers (sparse full-outer merge)
+        cut(tele
+          .join(msgs, Seq("id"), "full_outer")
           .select(
-            col("id"), col("t").as("raw"),
-            when(col("out_degree") > 0, col("t") / col("out_degree"))
-              .otherwise(col("t")).as("v"))
-          .graftCutCount
-        curr = st
-        n = cnt
-    }
-    var prev = curr
-
-    for (i <- startIter + 1 to iterations) {
-      val mass = Superstep.massOrBound(graph, curr, n)
-      val msgs = Superstep.gather(
-        graph, curr.select(col("id"), col("v")), signal = col("v"), combine = sum,
-        activeEdges = mass, activeCount = n)
-      // support = seeds ∪ message receivers (sparse full-outer merge)
-      val (next, nNew) = tele
-        .join(msgs, Seq("id"), "full_outer")
-        .select(
-          col("id"),
-          (lit(1.0 - d) * coalesce(col("t"), lit(0.0)) +
-            lit(d) * coalesce(col("msg"), lit(0.0))).as("raw"))
-        .join(degs, "id")
-        .select(
-          col("id"), col("raw"),
-          when(col("out_degree") > 0, col("raw") / col("out_degree"))
-            .otherwise(col("raw")).as("v"))
-        .graftCutCount
-      prev.graftFree()
-      prev = next
-      curr = next
-      n = nNew
-      if (ckpt.nonEmpty && (i % ckptEvery == 0 || i == iterations))
-        ckpt.get.save(curr, i, n)
-    }
-    Result(curr.select(col("id"), col("raw").as("score")), iterations)
+            col("id"),
+            (lit(1.0 - d) * coalesce(col("t"), lit(0.0)) +
+              lit(d) * coalesce(col("msg"), lit(0.0))).as("raw"))
+          .join(degs, "id")
+          .select(
+            col("id"), col("raw"),
+            when(col("out_degree") > 0, col("raw") / col("out_degree"))
+              .otherwise(col("raw")).as("v")))
+      })
+    Result(r.state.select(col("id"), col("raw").as("score")), iterations)
   }
 
   /**

@@ -47,44 +47,37 @@ object WeightedPageRank {
         Seq("id"), "left")
       .select(col("id"), coalesce(col("wout"), lit(0.0)).as("wout"))
 
-    var curr: DataFrame = null // (id, raw, v = raw/wout)
-    var startIter = 0
-    val resumed = if (resume) ckpt.flatMap(_.latestIteration()) else None
-    resumed match {
-      case Some(k) =>
-        curr = ckpt.get.load(graph.spark, k)
-          .repartition(graph.numPartitions, col("id"))
+    // state (id, raw, v = raw/wout)
+    val n = graph.numVertices
+    val r = Superstep.loop("wpr", iterations, ckpt, ckptEvery, resume)(
+      start = resumed => Superstep.Cut(resumed match {
+        case Some(k) =>
+          ckpt.get.load(graph.spark, k)
+            .repartition(graph.numPartitions, col("id"))
+            .graftCut
+        case None =>
+          wout.select(
+            col("id"), lit(1.0).as("raw"),
+            when(col("wout") > 0, lit(1.0) / col("wout")).otherwise(lit(1.0)).as("v"))
+            .graftCut
+      }, n, more = true),
+      step = { c =>
+        val msgs = Superstep.gather(
+          graph, c.state.select(col("id"), col("v")),
+          signal = col("v") * col("weight"), combine = sum,
+          activeEdges = graph.numEdges, activeCount = n,
+          saltBuckets = salt)
+        val next = wout
+          .join(msgs, Seq("id"), "left")
+          .select(
+            col("id"), col("wout"),
+            (lit(1.0 - d) + lit(d) * coalesce(col("msg"), lit(0.0))).as("raw"))
+          .select(
+            col("id"), col("raw"),
+            when(col("wout") > 0, col("raw") / col("wout")).otherwise(col("raw")).as("v"))
           .graftCut
-        startIter = k
-      case None =>
-        curr = wout.select(
-          col("id"), lit(1.0).as("raw"),
-          when(col("wout") > 0, lit(1.0) / col("wout")).otherwise(lit(1.0)).as("v"))
-          .graftCut
-    }
-    var prev = curr
-
-    for (i <- startIter + 1 to iterations) {
-      val msgs = Superstep.gather(
-        graph, curr.select(col("id"), col("v")),
-        signal = col("v") * col("weight"), combine = sum,
-        activeEdges = graph.numEdges, activeCount = graph.numVertices,
-        saltBuckets = salt)
-      val next = wout
-        .join(msgs, Seq("id"), "left")
-        .select(
-          col("id"), col("wout"),
-          (lit(1.0 - d) + lit(d) * coalesce(col("msg"), lit(0.0))).as("raw"))
-        .select(
-          col("id"), col("raw"),
-          when(col("wout") > 0, col("raw") / col("wout")).otherwise(col("raw")).as("v"))
-        .graftCut
-      prev.graftFree()
-      prev = next
-      curr = next
-      if (ckpt.nonEmpty && (i % ckptEvery == 0 || i == iterations))
-        ckpt.get.save(curr, i, graph.numVertices)
-    }
-    Result(curr.select(col("id"), col("raw").as("rank")), iterations)
+        Superstep.Cut(next, n, more = true)
+      })
+    Result(r.state.select(col("id"), col("raw").as("rank")), iterations)
   }
 }

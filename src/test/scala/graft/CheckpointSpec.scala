@@ -1,8 +1,13 @@
 package graft
 
 import java.nio.file.Files
+import java.util.concurrent.atomic.AtomicInteger
 
+import org.apache.spark.graft.TestBus
+import org.apache.spark.sql.execution.QueryExecution
+import org.apache.spark.sql.execution.datasources.InsertIntoHadoopFsRelationCommand
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.util.QueryExecutionListener
 
 import graft.algos.{Betweenness, Bfs, ConnectedComponents, PageRank, Sssp}
 
@@ -87,6 +92,55 @@ class CheckpointSpec extends SparkSpec {
     assert(resumed.iterations == 4)
     assertRanksClose(g, full, resumed)
     assert(ck.load(spark, 4).columns.toSeq == Seq("id", "v"))
+  }
+
+  /** Parquet writes (one per `Checkpoint.save`) that `body` runs. */
+  private def writesOf(body: => Unit): Int = {
+    val n = new AtomicInteger()
+    val listener = new QueryExecutionListener {
+      override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+        if (qe.logical.exists(_.isInstanceOf[InsertIntoHadoopFsRelationCommand])) n.incrementAndGet()
+      override def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    TestBus.drain(spark.sparkContext)
+    spark.listenerManager.register(listener)
+    try { body; TestBus.drain(spark.sparkContext) }
+    finally spark.listenerManager.unregister(listener)
+    n.get
+  }
+
+  test("PageRank: k supersteps saved every iteration write k checkpoints") {
+    val g = graphOf(edges, symmetric = false)
+    val ck = Checkpoint(tmpDir())
+    val k = 3
+    assert(writesOf(PageRank.run(g, iterations = k, ckpt = Some(ck), ckptEvery = 1)) == k)
+    assert(ck.latestIteration().contains(k))
+  }
+
+  test("PageRank: a resume at the iteration limit writes no checkpoint") {
+    val g = graphOf(edges, symmetric = false)
+    val ck = Checkpoint(tmpDir())
+    PageRank.run(g, iterations = 3, ckpt = Some(ck), ckptEvery = 1)
+    assert(writesOf(PageRank.run(g, iterations = 3, ckpt = Some(ck), ckptEvery = 1, resume = true)) == 0)
+    assert(ck.latestIteration().contains(3))
+  }
+
+  test("WeightedPageRank: interrupted at iteration k, resumed run equals uninterrupted run") {
+    import graft.algos.WeightedPageRank
+    val w = edges.map { case (a, b) => (a, b) -> (1.0 + (a + b) % 3) }.toMap
+    val g = graphOf(edges, symmetric = false, weights = w)
+    val full = WeightedPageRank.run(g, iterations = 5)
+    val ck = Checkpoint(tmpDir())
+    WeightedPageRank.run(g, iterations = 2, ckpt = Some(ck), ckptEvery = 2) // "kill" at 2
+    assert(ck.latestIteration().contains(2))
+    val resumed = WeightedPageRank.run(g, iterations = 5, ckpt = Some(ck), ckptEvery = 2, resume = true)
+    assert(resumed.iterations == 5 && ck.latestIteration().contains(5))
+    val a = byIndex(g, full.ranks, "rank")
+    val b = byIndex(g, resumed.ranks, "rank")
+    assert(a.keySet == b.keySet)
+    a.foreach { case (i, v) =>
+      assert(math.abs(v.asInstanceOf[Double] - b(i).asInstanceOf[Double]) < 1e-9, s"vertex $i")
+    }
   }
 
   test("BFS: resume from checkpoint yields the identical tree") {

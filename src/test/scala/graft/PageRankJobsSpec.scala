@@ -7,11 +7,12 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 
 import org.apache.spark.sql.functions._
 
-import graft.algos.{ConnectedComponents, PageRank}
+import graft.algos.{ConnectedComponents, LabelPropagation, PageRank}
 
-/** Spark jobs per PageRank and ConnectedComponents superstep, under
- * the suite's default (production) broadcast thresholds. The marginal
- * count between k and k+4 supersteps cancels the fixed per-run jobs;
+/** Spark jobs per PageRank, ConnectedComponents and LabelPropagation
+ * superstep, under the suite's default (production) broadcast
+ * thresholds. The marginal count between k and k+4 supersteps cancels
+ * the fixed per-run jobs;
  * an added job per superstep (a re-broadcast edge or degree table, a
  * second state join, a separate edge-mass aggregation) fails here. */
 class PageRankJobsSpec extends SparkSpec {
@@ -88,5 +89,16 @@ class PageRankJobsSpec extends SparkSpec {
     assert(2 < path.numEdges / Superstep.denseThresholdFraction)
     assert(run(6).activeHistory == Seq.fill(6)(1L))
     assert(marginal(run(_).iterations) == ccSparseJobs)
+  }
+
+  /** LP jobs per round: the message shuffle's map stage and the cut
+   * (which also counts the changed labels). */
+  val lpJobs = 2
+
+  test("LabelPropagation: jobs per round pinned") {
+    // a 60-vertex path: the smallest label is still travelling at round 6
+    val path = graphOf((0 until 59).map(i => (i, i + 1)), symmetric = true)
+    assert(LabelPropagation.run(path, maxIterations = 6).changedHistory.last > 0)
+    assert(marginal(k => LabelPropagation.run(path, maxIterations = k).iterations) == lpJobs)
   }
 }
