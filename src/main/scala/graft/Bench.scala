@@ -159,6 +159,8 @@ object Bench {
 
     val results = scala.collection.mutable.LinkedHashMap[String, Double]()
     val reruns = scala.collection.mutable.ArrayBuffer[String]()
+    // queries that threw: listed, and kept out of `queries` and the total
+    val failed = scala.collection.mutable.ArrayBuffer[String]()
     val incPhases = scala.collection.mutable.LinkedHashMap[String, Double]()
 
     // Recorded per-query bands (the committed clean-session sweep) for
@@ -177,8 +179,9 @@ object Bench {
       val total = results.values.sum
       val partialField = if (partial) "\"partial\":true," else ""
       val rerunJson = reruns.map("\"" + _ + "\"").mkString("[", ",", "]")
+      val failedJson = failed.map("\"" + _ + "\"").mkString("[", ",", "]")
       val phasesJson = incPhases.map { case (k, v) => "\"" + k + f"\":$v%.3f" }.mkString("{", ",", "}")
-      s"""{$partialField"metric":"pagerank_edges_per_sec_per_iter","value":$edgesPerSecIter,"unit":"edges/sec/iter","pr_iterations":$prIters,"pr_seconds":$prSec,"pr_repeats":$repeatsJson,"num_edges":${gDir.numEdges},"num_vertices":${gDir.numVertices},"build_seconds":${buildDirSec + buildSymSec},"total_query_seconds":$total,"reruns":$rerunJson,"inc_phases":$phasesJson,"queries":$qs,"cpus":$cpus,"sf":"$sfDir"}"""
+      s"""{$partialField"metric":"pagerank_edges_per_sec_per_iter","value":$edgesPerSecIter,"unit":"edges/sec/iter","pr_iterations":$prIters,"pr_seconds":$prSec,"pr_repeats":$repeatsJson,"num_edges":${gDir.numEdges},"num_vertices":${gDir.numVertices},"build_seconds":${buildDirSec + buildSymSec},"total_query_seconds":$total,"failed":$failedJson,"reruns":$rerunJson,"inc_phases":$phasesJson,"queries":$qs,"cpus":$cpus,"sf":"$sfDir"}"""
     }
     // Crash-safe incremental dump: rewrite bench_out.json after EVERY
     // query (atomic rename), so a mid-sweep death loses one cell, not
@@ -217,10 +220,12 @@ object Bench {
     record("triangles", banded("triangles")(
       isolated(timed("triangles")(algos.TriangleCount.count(gSym))._2)))
     SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (name, fn) =>
-      val s = banded(name)(isolated(timed(name)(
-        try fn(spark, sfDir).count()
-        catch { case e: Throwable => System.err.println(s"[bench] $name FAILED: $e"); -1L })._2))
-      record(name, s)
+      try record(name, banded(name)(isolated(timed(name)(fn(spark, sfDir).count())._2)))
+      catch { case e: Throwable =>
+        System.err.println(s"[bench] $name FAILED: $e")
+        failed += name
+        flush(partial = true)
+      }
     }
 
     // Phase-wise accounting for the incremental operators: their sweep

@@ -63,7 +63,9 @@ object SparkEntry {
       val path = new java.io.File(System.getProperty("java.io.tmpdir"),
         s"graft_gemini_${Integer.toHexString(dir.hashCode)}.bin").getPath
       sources.GeminiEdgeList.writeFixture(pairs, path)
-      val g = sources.GeminiEdgeList.load(s, path, 2048L, symmetric = false)
+      // every id the pairs name, so none drops out of `degrees`
+      val numVertices = pairs.foldLeft(-1L) { case (m, (a, b)) => m max a max b } + 1
+      val g = sources.GeminiEdgeList.load(s, path, numVertices, symmetric = false)
       g.degrees.where(col("out_degree") + col("in_degree") > 0)
         .select(col("id"), col("out_degree"), col("in_degree"))
     }),

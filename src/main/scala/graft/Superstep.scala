@@ -132,8 +132,41 @@ object Superstep {
 
   /** One iteration's state as [[loop]] sees it: the lineage-cut
    * `state`, the `count` its checkpoint sidecar records as
-   * `active_count`, and whether another superstep should run from it. */
-  final case class Cut(state: DataFrame, count: Long, more: Boolean)
+   * `active_count`, whether another superstep should run from it, and
+   * (for a resident state, see [[cutActive]]) the frontier's out-edge
+   * mass. */
+  final case class Cut(state: DataFrame, count: Long, more: Boolean, mass: Long = 0L)
+
+  /** Cut a resident state `(id, out_degree, <payload>, active)` — every
+   * vertex's row plus the frontier flag, the Spark form of Gemini's
+   * vertex array and active bitmap (core/bitmap.hpp). The cut's one
+   * action also returns the active count and the frontier's exact
+   * out-edge mass (Σ out_degree over active rows); the loop goes on
+   * while any row is active. */
+  def cutActive(state: DataFrame): Cut = {
+    val (s, n, m) = state.graftCutActive("active", Some("out_degree"))
+    Cut(s, n, more = n > 0, mass = m)
+  }
+
+  /** One resident-state superstep's messages: [[gather]] from the
+   * active rows of `c.state` (their `id` and `payload` columns), then
+   * ONE left join `state ⋈ msgs` by id, so each row sees its combined
+   * message as a nullable `msg`. The join is hinted `shuffle_hash`:
+   * unhinted, AQE re-plans it as a broadcast of `msgs` (an extra job).
+   * Both sides are clustered by id, so the hash join needs no
+   * exchange. */
+  def withMessages(
+      graph: LinkGraph,
+      c: Cut,
+      payload: Seq[String],
+      signal: Column,
+      combine: Column => Column,
+      saltBuckets: Int = 0): DataFrame = {
+    val msgs = gather(
+      graph, c.state.where(col("active")).select(("id" +: payload).map(col): _*),
+      signal, combine, activeEdges = c.mass, activeCount = c.count, saltBuckets = saltBuckets)
+    c.state.join(msgs.hint("shuffle_hash"), Seq("id"), "left")
+  }
 
   /** The end of a [[loop]]: the last state, its iteration number, and
    * the supersteps this call ran (0 when it resumed at its limit or

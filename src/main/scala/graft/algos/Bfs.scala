@@ -11,14 +11,13 @@ import graft.{Checkpoint, LinkGraph, Superstep}
  * /root/reference/toolkits/bfs.cpp:22-109:
  *
  *  - `parent[root] = root`, everything else unvisited (:35-36); here
- *    the unvisited sentinel (`|V|`, bfs.cpp:35) becomes simply
- *    "absent row" — the sparse-state representation that scales.
+ *    the unvisited sentinel (`|V|`, bfs.cpp:35) is a null `parent`.
  *  - frontier pushes; unvisited dsts are claimed. The reference claim
  *    is a CAS race (:49-59, parent choice nondeterministic); we pin
  *    `parent = min(src)` — deterministic, levels identical
  *    (SURVEY.md §7.4.3).
- *  - visited set grows each step; the anti-join against it is the
- *    reference's `dense_selective` skip bitmap (bfs.cpp:77,
+ *  - a message to an already visited row changes nothing, the
+ *    reference's `dense_selective` skip (bfs.cpp:77,
  *    core/graph.hpp:1663-1689).
  *
  * Direction adaptivity is inherited from Superstep.gather: early and
@@ -26,17 +25,17 @@ import graft.{Checkpoint, LinkGraph, Superstep}
  * co-partitioned join — re-evaluated every superstep like the
  * reference's |E|/20 switch.
  *
- * Job budget: ONE materialization job per level (the lineage cut
- * doubles as the frontier count); the visited union stays lazy and is
- * compacted every `compactEvery` levels, at which point all cuts the
- * compacted copy superseded are freed — cached state stays O(|V|),
- * not O(|V|·diameter) (round-1 verdict "What's wrong" #5).
+ * The state `(id, out_degree, parent, level, active)` is complete and
+ * resident (see [[Superstep.cutActive]]); each level is one
+ * [[Superstep.withMessages]] join into the lineage cut, whose action
+ * also returns the frontier count and out-edge mass. That is 3 Spark
+ * jobs per sparse level (frontier broadcast, message shuffle's map
+ * stage, cut), pinned by PageRankJobsSpec. Checkpoints are the reached
+ * rows `(id, parent, level)`; a resume re-activates the last level.
  */
 object Bfs {
 
   final case class Result(tree: DataFrame, iterations: Int, found: Long)
-
-  val compactEvery = 8
 
   /** @return tree: (id, parent, level) for REACHED vertices only. */
   def run(
@@ -46,65 +45,37 @@ object Bfs {
       ckpt: Option[Checkpoint] = None,
       ckptEvery: Int = 8,
       resume: Boolean = false): Result = {
-    val spark = graph.spark
-    import spark.implicits._
-
-    var visited: DataFrame = null // (id, parent, level) — lazy union chain
-    var frontier: DataFrame = null
+    val degs = graph.degrees.select(col("id"), col("out_degree"))
+    val reached = col("parent").isNotNull
     var level = 0
-    var frontierCount = 1L
-    val resumed = if (resume) ckpt.flatMap(_.latestIteration()) else None
-    resumed match {
-      case Some(k) =>
-        visited = ckpt.get.load(spark, k)
-          .repartition(graph.numPartitions, col("id")).graftCut
-        level = k
-        val (f, n) = visited.where(col("level") === k).graftCutCount
-        frontier = f
-        frontierCount = n
-      case None =>
-        visited = Seq((rootId, rootId, 0)).toDF("id", "parent", "level")
-          .repartition(graph.numPartitions, col("id"))
-          .graftCut
-        frontier = visited
-    }
-
-    // `base` = the cut currently anchoring the lazy visited chain;
-    // `pendingFree` = frontier cuts the chain still references. Both
-    // are freed only AFTER a compaction materializes an independent
-    // copy (freeing earlier would drop localCheckpoint'd blocks the
-    // chain can no longer recompute).
-    var base = visited
-    var pendingFree = List[DataFrame]()
-    while (frontierCount > 0 && level < maxIterations) {
-      val mass = Superstep.massOrBound(graph, frontier, frontierCount)
-      val msgs = Superstep.gather(
-        graph, frontier.select(col("id")),
-        signal = col("src"), combine = min,
-        activeEdges = mass, activeCount = frontierCount)
-      val (claimed, n) = msgs
-        .join(visited, Seq("id"), "left_anti") // dense_selective
-        .select(col("id"), col("msg").as("parent"), lit(level + 1).as("level"))
-        .graftCutCount
-      frontierCount = n
-      level += 1
-      if (frontierCount > 0) {
-        pendingFree = frontier :: pendingFree
-        visited = visited.unionByName(claimed)
-        frontier = claimed
-        if (level % compactEvery == 0) {
-          visited = visited.graftCut
-          (base :: pendingFree).filter(_ ne frontier).foreach(_.graftFree())
-          pendingFree = Nil
-          base = visited
-        }
-        if (ckpt.nonEmpty && (level % ckptEvery == 0))
-          ckpt.get.save(visited, level, frontierCount)
-      }
-    }
-    val (tree, found) = visited.graftCutCount
-    (base :: frontier :: pendingFree).filter(_ ne tree).distinct.foreach(_.graftFree())
-    ckpt.foreach(_.save(tree, level, 0L))
-    Result(tree, level, found)
+    val r = Superstep.loop("bfs", maxIterations, ckpt, ckptEvery, resume)(
+      start = { resumed =>
+        level = resumed.getOrElse(0)
+        Superstep.cutActive((resumed match {
+          case Some(k) =>
+            degs.join(ckpt.get.load(graph.spark, k), Seq("id"), "left")
+              .withColumn("active", coalesce(col("level") === k, lit(false)))
+          case None =>
+            val root = col("id") === rootId
+            degs.select(col("id"), col("out_degree"), when(root, lit(rootId)).as("parent"),
+              when(root, lit(0)).as("level"), root.as("active"))
+        }).select(col("id"), col("out_degree"), col("parent"), col("level"), col("active"))
+          .repartition(graph.numPartitions, col("id")))
+      },
+      step = { c =>
+        level += 1
+        val claimed = !reached && col("msg").isNotNull
+        Superstep.cutActive(Superstep.withMessages(graph, c, Nil,
+            signal = col("src"), combine = min)
+          .select(col("id"), col("out_degree"),
+            when(claimed, col("msg")).otherwise(col("parent")).as("parent"),
+            when(claimed, lit(level)).otherwise(col("level")).as("level"),
+            claimed.as("active")))
+      },
+      saved = _.where(reached).select(col("id"), col("parent"), col("level")))
+    val (tree, found) = r.state.where(reached).select(col("id"), col("parent"), col("level"))
+      .graftCutCount
+    r.state.graftFree()
+    Result(tree, r.iterations, found)
   }
 }

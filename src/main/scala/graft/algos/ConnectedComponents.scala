@@ -52,16 +52,9 @@ object ConnectedComponents {
     val salt = Superstep.resolveSalt(graph, saltBuckets)
     val degs = graph.degrees.select(col("id"), col("out_degree"))
 
-    // the frontier's out-edge mass, returned by the cut that built it
-    var mass = 0L
-    def cut(state: DataFrame): Superstep.Cut = {
-      val (s, n, m) = state.graftCutActive("active", Some("out_degree"))
-      mass = m
-      Superstep.Cut(s, n, more = n > 0)
-    }
     val history = scala.collection.mutable.ArrayBuffer[Long]()
     val r = Superstep.loop("cc", maxIterations, ckpt, ckptEvery, resume)(
-      start = resumed => cut((resumed match {
+      start = resumed => Superstep.cutActive((resumed match {
         case Some(k) =>
           // conservative resume frontier: every vertex re-sends its label
           // once (min is idempotent, so the fixpoint is the same) — unless
@@ -88,14 +81,8 @@ object ConnectedComponents {
         .repartition(graph.numPartitions, col("id"))),
       step = { c =>
         history += c.count
-        val msgs = Superstep.gather(
-          graph, c.state.where(col("active")).select(col("id"), col("lbl")),
-          signal = col("lbl"), combine = min,
-          activeEdges = mass, activeCount = c.count, saltBuckets = salt)
-        // Hinted for the reason PageRank.run gives: unhinted, AQE
-        // re-plans it as a broadcast of `msgs`. Both sides are clustered
-        // by id, so the hash join needs no exchange.
-        cut(c.state.join(msgs.hint("shuffle_hash"), Seq("id"), "left")
+        Superstep.cutActive(Superstep.withMessages(graph, c, Seq("lbl"),
+            signal = col("lbl"), combine = min, saltBuckets = salt)
           .select(col("id"), col("out_degree"),
             least(col("lbl"), col("msg")).as("lbl"),
             coalesce(col("msg") < col("lbl"), lit(false)).as("active")))

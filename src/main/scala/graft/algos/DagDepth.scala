@@ -19,13 +19,16 @@ import graft.{Checkpoint, LinkGraph, Superstep}
  * the scheduling/critical-path semantics the reference's fixed
  * toolkit set lacks.
  *
- * Superstep shape (it keeps the improved-only chain; CC and LP now
- * keep a complete resident state instead): the
- * improved-only frontier joins the src-clustered edge table
+ * Superstep shape: [[Sssp]]'s complete resident state, here
+ * `(id, out_degree, d, active)` with every vertex at d = 0 and active
+ * at the start; the active rows join the src-clustered edge table
  * (broadcast under the |E|/20 switch), messages combine per dst with
- * `max`, only improved rows materialize. On a DAG the loop terminates
- * in exactly longest-path-length supersteps; `maxIterations` guards
- * accidental cyclic input (where max-plus diverges).
+ * `max`, and one [[Superstep.withMessages]] join into the lineage cut
+ * raises `d` and sets the next frontier: 2 Spark jobs per dense
+ * superstep, 3 per sparse one (plus the frontier broadcast). On a DAG
+ * the loop terminates in exactly longest-path-length supersteps;
+ * `maxIterations` guards accidental cyclic input (where max-plus
+ * diverges). Checkpoints are `(id, d)`.
  */
 object DagDepth {
 
@@ -39,63 +42,24 @@ object DagDepth {
       ckptEvery: Int = 5,
       resume: Boolean = false): Result = {
     require(!graph.symmetric, "longest path is defined on the directed DAG")
-    var depth: DataFrame = null
-    var frontier: DataFrame = null
-    var active = 0L
-    var i = 0
-    val resumed = if (resume) ckpt.flatMap(_.latestIteration()) else None
-    resumed match {
-      case Some(k) =>
-        depth = ckpt.get.load(graph.spark, k)
-          .repartition(graph.numPartitions, col("id")).graftCut
-        // conservative resume frontier (CC pattern): re-push every
-        // depth once — max-relax is idempotent, the fixpoint is the
-        // same and the resumed run converges from where it stopped
-        frontier = depth.graftCut
-        active = graph.numVertices
-        i = k
-      case None =>
-        depth = graph.vertices.select(col("id"), lit(0L).as("d"))
-          .repartition(graph.numPartitions, col("id")).graftCut
-        frontier = depth
-        active = graph.numVertices
-    }
-    val compactEvery = 4
-    var base = depth
-    var pendingFree = List[DataFrame]()
-    while (active > 0 && i < maxIterations) {
-      val mass = Superstep.massOrBound(graph, frontier, active)
-      val msgs = Superstep.gather(
-        graph, frontier, signal = col("d") + lit(1L), combine = max,
-        activeEdges = mass, activeCount = active)
-      val (improved, n) = msgs
-        .join(depth.select(col("id"), col("d").as("old")), Seq("id"), "left")
-        .where(col("msg") > col("old"))
-        .select(col("id"), col("msg").as("d"))
-        .graftCutCount
-      if (n > 0) {
-        pendingFree = frontier :: pendingFree
-        depth = depth
-          .join(improved.select(col("id"), col("d").as("nd")), Seq("id"), "left")
-          .select(col("id"), coalesce(col("nd"), col("d")).as("d"))
-        frontier = improved
-      }
-      active = n
-      i += 1
-      if (active > 0 && i % compactEvery == 0) {
-        depth = depth.graftCut
-        (base :: pendingFree).filter(_ ne frontier).foreach(_.graftFree())
-        pendingFree = Nil
-        base = depth
-      }
-      if (ckpt.nonEmpty && active > 0 && (i % ckptEvery == 0))
-        ckpt.get.save(depth, i, active)
-      Superstep.log(f"dagdepth iter $i: active=$active")
-    }
-    val fin = depth.graftCut
-    ckpt.foreach(_.save(fin, i, 0L))
-    (base :: frontier :: pendingFree).filter(_ ne fin).distinct.foreach(_.graftFree())
-    Result(fin, i)
+    val degs = graph.degrees.select(col("id"), col("out_degree"))
+    val r = Superstep.loop("dagdepth", maxIterations, ckpt, ckptEvery, resume)(
+      start = resumed => Superstep.cutActive((resumed match {
+        case Some(k) =>
+          // conservative resume frontier (CC pattern): re-push every
+          // depth once — max-relax is idempotent, the fixpoint is the
+          // same — unless the checkpoint was saved at the fixpoint
+          degs.join(ckpt.get.load(graph.spark, k), "id")
+            .withColumn("active", lit(ckpt.get.activeCount(k) > 0))
+        case None => degs.withColumn("d", lit(0L)).withColumn("active", lit(true))
+      }).select(col("id"), col("out_degree"), col("d"), col("active"))
+        .repartition(graph.numPartitions, col("id"))),
+      step = c => Superstep.cutActive(Superstep.withMessages(graph, c, Seq("d"),
+          signal = col("d") + lit(1L), combine = max)
+        .select(col("id"), col("out_degree"), greatest(col("d"), col("msg")).as("d"),
+          coalesce(col("msg") > col("d"), lit(false)).as("active"))),
+      saved = _.select(col("id"), col("d")))
+    Result(r.state.select(col("id"), col("d")), r.iterations)
   }
 
   /**

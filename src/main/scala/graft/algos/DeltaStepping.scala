@@ -27,8 +27,8 @@ import graft.{Checkpoint, LinkGraph, Superstep}
  * row is hard evidence the bucketed schedule changes only the job
  * count, never a distance.
  *
- * State is sparse like [[Sssp]] (reached vertices only): the distance
- * table is a compacted merge chain, `pending` (ids not yet relaxed
+ * State is sparse (reached vertices only): the distance table is a
+ * compacted merge chain, `pending` (ids not yet relaxed
  * from their current distance) and the per-bucket member set are id
  * frames that join distance co-partitioned. The light/heavy edge
  * splits are filtered views of the resident clustered layout, persisted

@@ -124,7 +124,8 @@ object KCore {
       }
       if (n == 0) done = true
     }
-    if (!done) ckpt.foreach(_.save(alive, rounds, n)) // maxRounds interrupt
+    // maxRounds interrupt, unless the cadence already saved this round
+    if (!done && rounds % ckptEvery != 0) ckpt.foreach(_.save(alive, rounds, n))
     val core =
       if (degNow != null) degNow
       else alive.select(col("id"), lit(0L).as("deg")).limit(0) // empty core

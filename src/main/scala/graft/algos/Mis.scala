@@ -113,11 +113,14 @@ object Mis {
     }
     val (result, size) = mis.graftCutCount
     ckpt.foreach { c =>
-      if (activeCount > 0) // maxRounds interrupt: keep the undecided set
-        c.save(result.select(col("id"), col("round"))
-          .unionByName(active.select(col("id"), lit(-1).as("round"))),
-          round, activeCount)
-      else c.save(result, round, 0L) // converged: members only
+      // maxRounds interrupt: keep the undecided set, unless the cadence
+      // already saved this round
+      if (activeCount > 0) {
+        if (round % ckptEvery != 0)
+          c.save(result.select(col("id"), col("round"))
+            .unionByName(active.select(col("id"), lit(-1).as("round"))),
+            round, activeCount)
+      } else c.save(result, round, 0L) // converged: members only
     }
     (active :: freeLater).distinct.foreach(_.graftFree())
     Result(result, round, size)

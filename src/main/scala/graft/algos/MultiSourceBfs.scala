@@ -9,22 +9,27 @@ import graft.{Checkpoint, LinkGraph, Superstep}
 /**
  * Multi-source BFS: level-synchronous distances from K roots in ONE
  * frontier loop — the batched form of the reference's per-root BFS
- * (/root/reference/toolkits/bfs.cpp:22-109). State is the sparse set
- * of (id, root, dist) triples: all K searches share every superstep's
- * edge join, so K landmarks cost O(diameter) jobs total instead of
- * K·O(diameter) — the standard building block for landmark/closeness/
- * diameter estimation over a 10^12-edge graph, where per-root loops
- * are unaffordable driver-job-wise.
+ * (toolkits/bfs.cpp:22-109). State is the set of
+ * reached (id, root, dist, active) pairs: all K searches share every
+ * superstep's edge join, so K landmarks cost O(diameter) jobs total
+ * instead of K·O(diameter) — the standard building block for
+ * landmark/closeness/diameter estimation over a 10^12-edge graph,
+ * where per-root loops are unaffordable driver-job-wise. A complete
+ * state would be K·|V| rows, so unreached pairs have no row.
  *
- * Plan per superstep (mirrors Bfs.run): frontier pairs join the
- * src-clustered edge table (broadcast when the frontier's edge mass is
- * under the |E|/20 switch, co-partitioned shuffle join otherwise),
- * dedup to one row per (dst, root), anti-join the visited set
- * (bfs.cpp:77's `dense_selective` skip), claim at dist = level+1.
- * ONE materialization job per level (the lineage cut doubles as the
- * frontier count); the visited union chain is compacted every
- * [[Bfs.compactEvery]] levels and superseded cuts freed, so cached
- * state stays O(K·|V|), not O(K·|V|·diameter).
+ * Plan per superstep: the active pairs join the src-clustered edge
+ * table (broadcast when the frontier's edge mass is under the |E|/20
+ * switch, co-partitioned shuffle join otherwise), dedup to one message
+ * per (dst, root), and ONE anti-join against the state keeps the
+ * unreached pairs (bfs.cpp:77's `dense_selective` skip), claimed at
+ * dist = level+1 and appended to the state with every old pair made
+ * inactive. Both halves stay clustered by (id, root), so the lineage
+ * cut keeps that partitioning and its action returns the frontier
+ * count. Edge mass is over PAIRS (each pair signals along all of its
+ * id's out-edges); pairs carry no out-degree, so it comes from
+ * [[Superstep.massOrBound]]. 3 Spark jobs per sparse level (frontier
+ * broadcast, message shuffle's map stage, cut). Checkpoints are
+ * `(id, root, dist)`; a resume re-activates the last level.
  */
 object MultiSourceBfs {
 
@@ -43,67 +48,43 @@ object MultiSourceBfs {
     val spark = graph.spark
     import spark.implicits._
 
-    var visited: DataFrame = null // (id, root, dist) — lazy union chain
-    var frontier: DataFrame = null
+    def cut(state: DataFrame): Superstep.Cut = {
+      val (s, n, _) = state.graftCutActive("active")
+      Superstep.Cut(s, n, more = n > 0)
+    }
     var level = 0
-    var frontierCount = 0L
-    val resumed = if (resume) ckpt.flatMap(_.latestIteration()) else None
-    resumed match {
-      case Some(k) =>
-        visited = ckpt.get.load(spark, k)
-          .repartition(graph.numPartitions, col("id"), col("root")).graftCut
-        level = k
-        val (f, n) = visited.where(col("dist") === k).graftCutCount
-        frontier = f
-        frontierCount = n
-      case None =>
-        visited = roots.map(r => (r, r, 0)).toDF("id", "root", "dist")
-          .repartition(graph.numPartitions, col("id"), col("root"))
-          .graftCut
-        frontier = visited
-        frontierCount = roots.size.toLong
-    }
-
-    var base = visited
-    var pendingFree = List[DataFrame]()
-    while (frontierCount > 0 && level < maxIterations) {
-      // Edge mass of the frontier = Σ out_degree(id) over PAIRS (each
-      // pair signals along all of its id's out-edges independently).
-      val mass = Superstep.massOrBound(graph, frontier, frontierCount)
-      val sparse = mass < graph.numEdges / Superstep.denseThresholdFraction &&
-        frontierCount < Superstep.broadcastRowCap
-      val src = frontier.select(col("id").as("src"), col("root"))
-      val joined =
-        if (sparse) graph.edgesBySrc.join(broadcast(src), "src")
-        else graph.edgesBySrc.join(src.repartition(graph.numPartitions, col("src")), "src")
-      // distinct = the message combine (all messages this level carry
-      // the same dist, so combining is dedup); it also clusters the
-      // claims by (id, root) for the anti-join
-      val (claimed, n) = joined
-        .select(col("dst").as("id"), col("root")).distinct()
-        .join(visited, Seq("id", "root"), "left_anti")
-        .select(col("id"), col("root"), lit(level + 1).as("dist"))
-        .graftCutCount
-      frontierCount = n
-      level += 1
-      if (frontierCount > 0) {
-        pendingFree = frontier :: pendingFree
-        visited = visited.unionByName(claimed)
-        frontier = claimed
-        if (level % Bfs.compactEvery == 0) {
-          visited = visited.graftCut
-          (base :: pendingFree).filter(_ ne frontier).foreach(_.graftFree())
-          pendingFree = Nil
-          base = visited
-        }
-        if (ckpt.nonEmpty && (level % ckptEvery == 0))
-          ckpt.get.save(visited, level, frontierCount)
-      }
-    }
-    val (dists, reached) = visited.graftCutCount
-    (base :: frontier :: pendingFree).filter(_ ne dists).distinct.foreach(_.graftFree())
-    ckpt.foreach(_.save(dists, level, 0L))
-    Result(dists, level, reached)
+    val r = Superstep.loop("msbfs", maxIterations, ckpt, ckptEvery, resume)(
+      start = { resumed =>
+        level = resumed.getOrElse(0)
+        cut((resumed match {
+          case Some(k) => ckpt.get.load(spark, k).withColumn("active", col("dist") === k)
+          case None => roots.map(r => (r, r, 0, true)).toDF("id", "root", "dist", "active")
+        }).repartition(graph.numPartitions, col("id"), col("root")))
+      },
+      step = { c =>
+        level += 1
+        val frontier = c.state.where(col("active"))
+        val mass = Superstep.massOrBound(graph, frontier, c.count)
+        val sparse = mass < graph.numEdges / Superstep.denseThresholdFraction &&
+          c.count < Superstep.broadcastRowCap
+        val src = frontier.select(col("id").as("src"), col("root"))
+        val joined =
+          if (sparse) graph.edgesBySrc.join(broadcast(src), "src")
+          else graph.edgesBySrc.join(src.repartition(graph.numPartitions, col("src")), "src")
+        // distinct = the message combine (all messages this level carry
+        // the same dist, so combining is dedup); it also clusters the
+        // claims by (id, root) for the anti-join
+        val claimed = joined
+          .select(col("dst").as("id"), col("root")).distinct()
+          .join(c.state, Seq("id", "root"), "left_anti")
+          .select(col("id"), col("root"), lit(level).as("dist"), lit(true).as("active"))
+        cut(c.state.select(col("id"), col("root"), col("dist"), lit(false).as("active"))
+          .union(claimed))
+      },
+      saved = _.select(col("id"), col("root"), col("dist")))
+    val (dists, reached) = r.state.select(col("id"), col("root"), col("dist")).graftCutCount
+    r.state.graftFree()
+    Result(dists, r.iterations, reached)
   }
 
   /** Harmonic closeness centrality of each root over its reachable

@@ -4,7 +4,6 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.{LinkGraph, Superstep}
-import graft.syntax._
 
 /**
  * Bipartiteness / odd-cycle census per connected component: a parity
@@ -24,18 +23,17 @@ import graft.syntax._
  * EDGE SET depends on the seed (only the zero/non-zero verdict does
  * not), so the seed choice is part of the cross-engine contract.
  *
- * Scale shape: identical to [[MultiSourceBfs]] with one root per
- * component but WITHOUT the K-fold state: each vertex is reached by
- * exactly its own component's seed, so the visited set is O(|V|)
- * rows total; the frontier loop is O(max component diameter)
- * supersteps; the conflict count is one co-partitioned join over the
- * oriented edge set. Same compaction/free discipline as [[Bfs]].
+ * Scale shape: [[MultiSourceBfs]] with one root per component but
+ * WITHOUT the K-fold state: each vertex is reached by exactly its own
+ * component's seed, so the state is [[Bfs]]'s complete resident
+ * `(id, out_degree, level, active)`, a null `level` while unreached;
+ * the frontier loop is O(max component diameter) supersteps of 2
+ * Spark jobs dense, 3 sparse; the conflict count is one co-partitioned
+ * join over the oriented edge set.
  */
 object OddCycle {
 
   final case class Result(census: DataFrame, rounds: Int)
-
-  val compactEvery = 8
 
   /** @param labels (id, lbl) from any CC run on the same graph
    *  @return census: (component, n_vertices, n_conflicts, bipartite)
@@ -44,41 +42,18 @@ object OddCycle {
     require(graph.symmetric, "parity BFS expects the symmetrized graph")
     val np = graph.numPartitions
 
-    var visited = labels.join(graph.vertices, "id")
+    val seeds = labels.join(graph.vertices, "id")
       .groupBy(col("lbl")).agg(min_by(col("id"), col("key")).as("id"))
       .select(col("id"), lit(0).as("level"))
-      .repartition(np, col("id")).graftCut
-    var frontier = visited
-    var frontierCount = visited.count()
-    var level = 0
-    var base = visited
-    var pendingFree = List[DataFrame]()
-    while (frontierCount > 0 && level < maxIterations) {
-      val mass = Superstep.massOrBound(graph, frontier, frontierCount)
-      val msgs = Superstep.gather(
-        graph, frontier.select(col("id")),
-        signal = lit(level + 1), combine = min,
-        activeEdges = mass, activeCount = frontierCount)
-      val (claimed, n) = msgs
-        .join(visited, Seq("id"), "left_anti")
-        .select(col("id"), col("msg").cast("int").as("level"))
-        .graftCutCount
-      frontierCount = n
-      level += 1
-      if (frontierCount > 0) {
-        pendingFree = frontier :: pendingFree
-        visited = visited.unionByName(claimed)
-        frontier = claimed
-        if (level % compactEvery == 0) {
-          visited = visited.graftCut
-          (base :: pendingFree).filter(_ ne frontier).foreach(_.graftFree())
-          pendingFree = Nil
-          base = visited
-        }
-      }
-    }
-    val lv = visited.graftCut
-    (base :: frontier :: pendingFree).filter(_ ne lv).distinct.foreach(_.graftFree())
+    val r = Superstep.loop("oddcycle", maxIterations)(
+      start = _ => Superstep.cutActive(graph.degrees.join(seeds, Seq("id"), "left")
+        .select(col("id"), col("out_degree"), col("level"), col("level").isNotNull.as("active"))
+        .repartition(np, col("id"))),
+      step = c => Superstep.cutActive(Superstep.withMessages(graph, c, Seq("level"),
+          signal = col("level") + 1, combine = min)
+        .select(col("id"), col("out_degree"), coalesce(col("level"), col("msg")).as("level"),
+          (col("level").isNull && col("msg").isNotNull).as("active"))))
+    val lv = r.state.where(col("level").isNotNull).select(col("id"), col("level"))
 
     val conflicts = graph.edgesBySrc
       .where(col("src") < col("dst")) // each undirected edge once
@@ -96,6 +71,6 @@ object OddCycle {
       .select(col("component"), col("n_vertices"),
         coalesce(col("n_conflicts"), lit(0L)).as("n_conflicts"),
         (coalesce(col("n_conflicts"), lit(0L)) === 0).cast("long").as("bipartite"))
-    Result(census, level)
+    Result(census, r.iterations)
   }
 }

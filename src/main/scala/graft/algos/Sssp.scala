@@ -3,7 +3,6 @@ package graft.algos
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-import graft.syntax._
 import graft.{Checkpoint, LinkGraph, Superstep}
 
 /**
@@ -11,8 +10,7 @@ import graft.{Checkpoint, LinkGraph, Superstep}
  * /root/reference/toolkits/sssp.cpp:24-105:
  *
  *  - `distance[root] = 0`, everything else the 1e9 sentinel (:33-34)
- *    — here "absent row" (sparse state; the 1e9 sentinel would
- *    materialize 10^12 rows of infinity at scale).
+ *    — here a null `dist`.
  *  - relax: `min(distance[src] + weight)` over the frontier's
  *    out-edges (`write_min`, :46-59); improved vertices form the next
  *    frontier; terminate on empty frontier (:37).
@@ -22,18 +20,18 @@ import graft.{Checkpoint, LinkGraph, Superstep}
  * are Double (the reference uses float; Double avoids accumulation
  * noise vs the oracle, SURVEY.md §7.4.3).
  *
- * Job budget (round-2): each superstep materializes ONLY the improved
- * rows (cut + count in one job); the full distance table is a lazy
- * outer-join chain compacted every `compactEvery` supersteps, with
- * superseded cuts freed at compaction — O(1) jobs per superstep and
- * O(|reached|) cached state, vs 3 jobs + a full-table cut per
- * superstep in round 1 (36 s → see BENCH_r02).
+ * The state `(id, out_degree, dist, active)` is complete and resident
+ * (see [[Superstep.cutActive]]); each superstep is one
+ * [[Superstep.withMessages]] join into the lineage cut, whose action
+ * also returns the frontier count and out-edge mass. That is 2 Spark
+ * jobs per dense superstep (message shuffle's map stage, cut) and 3
+ * per sparse one (plus the frontier broadcast); PageRankJobsSpec pins
+ * the dense count. Checkpoints are the reached rows
+ * `(id, dist, improved)`, `improved` being the frontier flag.
  */
 object Sssp {
 
   final case class Result(distances: DataFrame, iterations: Int)
-
-  val compactEvery = 4
 
   /** @return distances: (id, dist) for REACHED vertices only. */
   def run(
@@ -43,78 +41,26 @@ object Sssp {
       ckpt: Option[Checkpoint] = None,
       ckptEvery: Int = 8,
       resume: Boolean = false): Result = {
-    val spark = graph.spark
-    import spark.implicits._
-
-    var dist: DataFrame = null // (id, dist) — lazy merge chain over cuts
-    var frontier: DataFrame = null // (id, dist) of just-improved vertices
-    var active = 1L
-    var i = 0
-    val resumed = if (resume) ckpt.flatMap(_.latestIteration()) else None
-    resumed match {
-      case Some(k) =>
-        val st = ckpt.get.load(spark, k)
-          .repartition(graph.numPartitions, col("id")).graftCut
-        dist = st.select(col("id"), col("dist"))
-        val (f, n) = st.where(col("improved"))
-          .select(col("id"), col("dist")).graftCutCount
-        frontier = f
-        active = n
-        i = k
-      case None =>
-        dist = Seq((rootId, 0.0)).toDF("id", "dist")
-          .repartition(graph.numPartitions, col("id"))
-          .graftCut
-        frontier = dist
-    }
-
-    var base = dist // cut anchoring the lazy chain
-    var pendingFree = List[DataFrame]()
-    while (active > 0 && i < maxIterations) {
-      val mass = Superstep.massOrBound(graph, frontier, active)
-      val msgs = Superstep.gather(
-        graph, frontier,
-        signal = col("dist") + col("weight"), combine = min,
-        activeEdges = mass, activeCount = active)
-      // improved-only materialization: the write_min that actually won
-      val (improved, n) = msgs
-        .join(dist.select(col("id"), col("dist").as("old")), Seq("id"), "left")
-        .where(col("old").isNull || col("msg") < col("old"))
-        .select(col("id"), col("msg").as("dist"))
-        .graftCutCount
-      if (n > 0) {
-        pendingFree = frontier :: pendingFree
-        dist = dist
-          .join(improved.select(col("id"), col("dist").as("nd")), Seq("id"), "full_outer")
-          .select(col("id"), coalesce(col("nd"), col("dist")).as("dist"))
-        frontier = improved
-      }
-      active = n
-      i += 1
-      if (active > 0 && i % compactEvery == 0) {
-        dist = dist.graftCut
-        (base :: pendingFree).filter(_ ne frontier).foreach(_.graftFree())
-        pendingFree = Nil
-        base = dist
-      }
-      if (ckpt.nonEmpty && active > 0 && (i % ckptEvery == 0))
-        ckpt.get.save(
-          dist.join(
-            frontier.select(col("id"), lit(true).as("fimp")), Seq("id"), "left")
-            .select(col("id"), col("dist"),
-              coalesce(col("fimp"), lit(false)).as("improved")),
-          i, active)
-    }
-    val finalDist = dist.graftCut
-    // final snapshot keeps the REAL frontier flags: a run stopped at
-    // maxIterations must resume with its live frontier, not an empty one
-    ckpt.foreach(_.save(
-      finalDist.join(
-        frontier.select(col("id"), lit(true).as("fimp")), Seq("id"), "left")
-        .select(col("id"), col("dist"),
-          (coalesce(col("fimp"), lit(false)) && lit(active > 0)).as("improved")),
-      i, active))
-    (base :: frontier :: pendingFree).filter(_ ne finalDist).distinct.foreach(_.graftFree())
-    Result(finalDist, i)
+    val degs = graph.degrees.select(col("id"), col("out_degree"))
+    val reached = col("dist").isNotNull
+    val r = Superstep.loop("sssp", maxIterations, ckpt, ckptEvery, resume)(
+      start = resumed => Superstep.cutActive((resumed match {
+        case Some(k) =>
+          degs.join(ckpt.get.load(graph.spark, k), Seq("id"), "left")
+            .withColumn("active", coalesce(col("improved"), lit(false)))
+        case None =>
+          val root = col("id") === rootId
+          degs.select(col("id"), col("out_degree"), when(root, lit(0.0)).as("dist"),
+            root.as("active"))
+      }).select(col("id"), col("out_degree"), col("dist"), col("active"))
+        .repartition(graph.numPartitions, col("id"))),
+      step = c => Superstep.cutActive(Superstep.withMessages(graph, c, Seq("dist"),
+          signal = col("dist") + col("weight"), combine = min)
+        .select(col("id"), col("out_degree"),
+          least(col("dist"), col("msg")).as("dist"),
+          // the write_min that won: a first reach or a shorter distance
+          coalesce(col("msg") < col("dist"), col("msg").isNotNull).as("active"))),
+      saved = _.where(reached).select(col("id"), col("dist"), col("active").as("improved")))
+    Result(r.state.where(reached).select(col("id"), col("dist")), r.iterations)
   }
 }

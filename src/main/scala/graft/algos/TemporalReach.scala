@@ -23,9 +23,11 @@ import graft.syntax._
  * Scale notes: the temporal edge table is persisted clustered by
  * src, the frontier joins it co-partitioned, messages partially
  * aggregate (min) before the shuffle — the same Gemini push shape as
- * the other frontier loops; job budget matches round-2 SSSP (one
- * cut+count per superstep, lazy merged arrival table compacted every
- * [[compactEvery]]).
+ * the other frontier loops. Job budget: one cut+count per superstep
+ * over the improved rows only, with the arrival table a lazy merge
+ * chain compacted every [[compactEvery]] supersteps (the chain [[Sssp]]
+ * replaced with a resident state over the LinkGraph's degrees; this
+ * loop runs over its own key-space edge table instead).
  */
 object TemporalReach {
 

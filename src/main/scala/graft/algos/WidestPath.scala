@@ -3,7 +3,6 @@ package graft.algos
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-import graft.syntax._
 import graft.{LinkGraph, Superstep}
 
 /**
@@ -29,9 +28,9 @@ import graft.{LinkGraph, Superstep}
  * step h-1 is propagated at step h, and non-improving arrivals were
  * already dominated. So running EXACTLY `maxHops` supersteps (or
  * stopping early on an empty frontier) yields the exact hop-bounded
- * answer. Same improved-rows-only job budget as [[Sssp]]: one
- * cut+count job per superstep, lazy merge chain compacted every
- * [[Sssp.compactEvery]] steps.
+ * answer. Same resident state and superstep as [[Sssp]], with
+ * `(id, out_degree, cap, active)` and a null `cap` while unreached:
+ * 2 Spark jobs per dense superstep, 3 per sparse one.
  */
 object WidestPath {
 
@@ -45,46 +44,17 @@ object WidestPath {
   /** @return caps: (id, cap) for vertices REACHED within maxHops
    *          (root included, at [[RootCap]]). */
   def run(graph: LinkGraph, rootId: Long, maxHops: Int = 12): Result = {
-    val spark = graph.spark
-    import spark.implicits._
-
-    var cap = Seq((rootId, RootCap)).toDF("id", "cap")
-      .repartition(graph.numPartitions, col("id"))
-      .graftCut
-    var frontier = cap
-    var active = 1L
-    var i = 0
-    var base = cap
-    var pendingFree = List[DataFrame]()
-    while (active > 0 && i < maxHops) {
-      val mass = Superstep.massOrBound(graph, frontier, active)
-      val msgs = Superstep.gather(
-        graph, frontier,
-        signal = least(col("cap"), col("weight")), combine = max,
-        activeEdges = mass, activeCount = active)
-      val (improved, n) = msgs
-        .join(cap.select(col("id"), col("cap").as("old")), Seq("id"), "left")
-        .where(col("old").isNull || col("msg") > col("old"))
-        .select(col("id"), col("msg").as("cap"))
-        .graftCutCount
-      if (n > 0) {
-        pendingFree = frontier :: pendingFree
-        cap = cap
-          .join(improved.select(col("id"), col("cap").as("nc")), Seq("id"), "full_outer")
-          .select(col("id"), coalesce(col("nc"), col("cap")).as("cap"))
-        frontier = improved
-      }
-      active = n
-      i += 1
-      if (active > 0 && i % Sssp.compactEvery == 0) {
-        cap = cap.graftCut
-        (base :: pendingFree).filter(_ ne frontier).foreach(_.graftFree())
-        pendingFree = Nil
-        base = cap
-      }
-    }
-    val finalCap = cap.graftCut
-    (base :: frontier :: pendingFree).filter(_ ne finalCap).distinct.foreach(_.graftFree())
-    Result(finalCap, i)
+    val root = col("id") === rootId
+    val r = Superstep.loop("widest", maxHops)(
+      start = _ => Superstep.cutActive(graph.degrees
+        .select(col("id"), col("out_degree"), when(root, lit(RootCap)).as("cap"),
+          root.as("active"))
+        .repartition(graph.numPartitions, col("id"))),
+      step = c => Superstep.cutActive(Superstep.withMessages(graph, c, Seq("cap"),
+          signal = least(col("cap"), col("weight")), combine = max)
+        .select(col("id"), col("out_degree"),
+          greatest(col("cap"), col("msg")).as("cap"),
+          coalesce(col("msg") > col("cap"), col("msg").isNotNull).as("active"))))
+    Result(r.state.where(col("cap").isNotNull).select(col("id"), col("cap")), r.iterations)
   }
 }

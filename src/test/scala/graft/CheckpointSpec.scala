@@ -172,6 +172,32 @@ class CheckpointSpec extends SparkSpec {
     assert(a.exceptAll(b).count() == 0 && b.exceptAll(a).count() == 0)
   }
 
+  test("BFS: a run stopped at its limit writes each iteration once and records its live frontier") {
+    val g = graphOf(edges, symmetric = true)
+    val ck = Checkpoint(tmpDir())
+    assert(writesOf(Bfs.run(g, 0L, maxIterations = 2, ckpt = Some(ck), ckptEvery = 1)) == 2)
+    assert(ck.latestIteration().contains(2))
+    assert(ck.activeCount(2) > 0, ck.lineage(2))
+  }
+
+  test("SSSP: a run stopped at its limit writes each iteration once") {
+    val w = edges.map { case (a, b) => (a, b) -> (1.0 + (a + b) % 3) }.toMap
+    val g = graphOf(edges, symmetric = true, weights = w)
+    val ck = Checkpoint(tmpDir())
+    assert(writesOf(Sssp.run(g, 0L, maxIterations = 2, ckpt = Some(ck), ckptEvery = 1)) == 2)
+    assert(ck.latestIteration().contains(2))
+  }
+
+  test("MSBFS: a run stopped at its limit writes each iteration once") {
+    import graft.algos.MultiSourceBfs
+    val g = graphOf(edges, symmetric = true)
+    val roots = Seq(0L, 8L).map(i => indexOf(g).collectFirst {
+      case (id, idx) if idx == i => id }.get)
+    val ck = Checkpoint(tmpDir())
+    assert(writesOf(MultiSourceBfs.run(g, roots, maxIterations = 2, ckpt = Some(ck), ckptEvery = 1)) == 2)
+    assert(ck.latestIteration().contains(2))
+  }
+
   test("BC: forward phase resumes from the per-level sigma snapshot") {
     val g = graphOf(edges, symmetric = true)
     val root = 0L
@@ -289,5 +315,22 @@ class CheckpointSpec extends SparkSpec {
     val b = resumed.core
     assert(a.exceptAll(b).count() == 0 && b.exceptAll(a).count() == 0)
     assert(full.core.count() > 0, "fixture must have a nonempty 2-core")
+  }
+
+  test("k-core: a peel stopped at maxRounds writes that round once") {
+    import graft.algos.KCore
+    val g = graphOf(edges :+ ((4, 1)), symmetric = true)
+    val ck = Checkpoint(tmpDir())
+    assert(writesOf(KCore.run(g, k = 2, maxRounds = 1, ckpt = Some(ck), ckptEvery = 1)) == 1)
+    assert(ck.latestIteration().contains(1))
+  }
+
+  test("MIS: a run stopped at maxRounds writes that round once") {
+    import graft.algos.Mis
+    val g = graphOf((0 until 59).map(i => (i, i + 1)), symmetric = true)
+    val ck = Checkpoint(tmpDir())
+    assert(writesOf(Mis.run(g, maxRounds = 1, ckpt = Some(ck), ckptEvery = 1)) == 1)
+    assert(ck.latestIteration().contains(1))
+    assert(ck.activeCount(1) > 0, "fixture must still have undecided vertices after round 1")
   }
 }

@@ -7,10 +7,10 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 
 import org.apache.spark.sql.functions._
 
-import graft.algos.{ConnectedComponents, LabelPropagation, PageRank}
+import graft.algos.{Bfs, ConnectedComponents, LabelPropagation, PageRank, Sssp}
 
-/** Spark jobs per PageRank, ConnectedComponents and LabelPropagation
- * superstep, under the suite's default (production) broadcast
+/** Spark jobs per PageRank, ConnectedComponents, LabelPropagation, Bfs
+ * and Sssp superstep, under the suite's default (production) broadcast
  * thresholds. The marginal count between k and k+4 supersteps cancels
  * the fixed per-run jobs;
  * an added job per superstep (a re-broadcast edge or degree table, a
@@ -100,5 +100,36 @@ class PageRankJobsSpec extends SparkSpec {
     val path = graphOf((0 until 59).map(i => (i, i + 1)), symmetric = true)
     assert(LabelPropagation.run(path, maxIterations = 6).changedHistory.last > 0)
     assert(marginal(k => LabelPropagation.run(path, maxIterations = k).iterations) == lpJobs)
+  }
+
+  /** BFS jobs per sparse level: the frontier broadcast, the message
+   * shuffle's map stage and the cut (which also returns the frontier
+   * count and edge mass). */
+  val bfsSparseJobs = 3
+
+  test("Bfs: jobs per sparse level pinned") {
+    // a 60-vertex path from one end: one vertex (out-edge mass ≤ 2,
+    // under |E|/20) is claimed per level
+    val path = graphOf((0 until 59).map(i => (i, i + 1)), symmetric = true)
+    val end = indexOf(path).collectFirst { case (id, 0) => id }.get
+    assert(Bfs.run(path, end, maxIterations = 6).found == 7)
+    assert(marginal(k => Bfs.run(path, end, maxIterations = k).iterations) == bfsSparseJobs)
+  }
+
+  /** SSSP jobs per dense superstep: the message shuffle's map stage and
+   * the cut. */
+  val ssspDenseJobs = 2
+
+  test("Sssp: jobs per dense superstep pinned") {
+    // 40 chains of 15 vertices hanging off one root: from superstep 2
+    // on, the frontier is one vertex per chain, 40 vertices of
+    // out-degree 2 (mass 80), over |E|/20 = 60
+    val star = graphOf(
+      for (c <- 0 until 40; p <- 0 until 15)
+        yield (if (p == 0) 0 else 1 + c * 15 + p - 1, 1 + c * 15 + p),
+      symmetric = true)
+    val root = indexOf(star).collectFirst { case (id, 0) => id }.get
+    assert(80 >= star.numEdges / Superstep.denseThresholdFraction)
+    assert(marginal(k => Sssp.run(star, root, maxIterations = k).iterations) == ssspDenseJobs)
   }
 }
