@@ -56,6 +56,19 @@ object Bench {
     qsec.findAllMatchIn(json).map(m => m.group(1) -> m.group(2).toDouble).toMap
   }
 
+  /** The bands recorded in the file at `path`. A file that cannot be
+   * read, or holds no band, is an error naming the path: an empty map
+   * would switch the tail re-run protocol off without a word. */
+  def readBands(path: String): Map[String, Double] = {
+    val json =
+      try new String(java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(path)), "UTF-8")
+      catch { case e: java.io.IOException =>
+        throw new IllegalStateException(s"cannot read the bench band file $path: $e", e) }
+    val bands = parseBands(json)
+    if (bands.isEmpty) throw new IllegalStateException(s"the bench band file $path holds no band")
+    bands
+  }
+
   /** Fork ONE fresh-JVM headline cell ([[BenchHeadlineCell]]) and
    * parse its `[hcell] iters sec` line. A fresh JVM per repeat means
    * one of this host's session-scoped slow windows cannot poison all
@@ -87,6 +100,13 @@ object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    // Recorded per-query bands (the committed clean-session sweep) for
+    // the tail re-run protocol: a single-run cell landing far above
+    // its band is overwhelmingly a host slow window, not a regression
+    // (the BENCH_r04 artifact misreported five cells 2-2.5×); re-run
+    // it once and take the min, flagging the cell in `reruns`. Read
+    // first, so a missing file stops the run before any work.
+    val baseline = readBands(baselinePath)
     val spark = session(cpus)
     // ERROR not WARN: the per-superstep localCheckpoint unpersists emit
     // thousands of "lineage has been truncated" WARN lines that flood
@@ -132,6 +152,9 @@ object Bench {
     // cut must predate every per-query snapshot or the first consumer's
     // teardown would free blocks later consumers still reference.
     timed("build-cc-labels")(Graphs.ccLabels(spark, sfDir))
+    // The shared capacity graph likewise: a teardown would unpersist the
+    // build's lineage cuts too, and its tables could not be recomputed.
+    timed("build-capacity")(Graphs.getCapacity(spark, sfDir))
 
     // Headline: PageRank to 1e-6 convergence, edges/sec/iteration.
     // Reference protocol (pagerank.cpp:144-147): 1 untimed warmup +
@@ -162,17 +185,6 @@ object Bench {
     // queries that threw: listed, and kept out of `queries` and the total
     val failed = scala.collection.mutable.ArrayBuffer[String]()
     val incPhases = scala.collection.mutable.LinkedHashMap[String, Double]()
-
-    // Recorded per-query bands (the committed clean-session sweep) for
-    // the tail re-run protocol: a single-run cell landing far above
-    // its band is overwhelmingly a host slow window, not a regression
-    // (the BENCH_r04 artifact misreported five cells 2-2.5×); re-run
-    // it once and take the min, flagging the cell in `reruns`.
-    val baseline: Map[String, Double] =
-      try {
-        parseBands(new String(java.nio.file.Files.readAllBytes(
-          java.nio.file.Paths.get(baselinePath)), "UTF-8"))
-      } catch { case _: Throwable => Map.empty }
 
     def renderJson(partial: Boolean): String = {
       val qs = results.map { case (k, v) => "\"" + k + f"\":$v%.3f" }.mkString("{", ",", "}")

@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
 import graft.sources.VertexDict
+import graft.syntax._
 
 /**
  * The engine's graph container — the Spark-first analogue of the
@@ -81,32 +82,17 @@ final case class LinkGraph(
    * reference likewise symmetrizes during load by sending each edge
    * twice, core/graph.hpp:572-587, not by re-reading). Identical
    * output to `fromKeyEdges(keyEdges, symmetric = true, n)`: the
-   * dictionary is deterministic on the (same) key set. */
+   * dictionary is deterministic on the (same) key set. The same tail
+   * as [[LinkGraph.fromKeyEdges]]: one exchange for the edges, none for
+   * the degrees (the vertices and the new edges are both clustered by
+   * id), and one persist fill and count each — 5 Spark jobs, pinned by
+   * GraphBuildJobsSpec. */
   def symmetrize: LinkGraph = {
     require(!symmetric, "already symmetric")
-    val e1 = edgesBySrc.unionByName(
-      edgesBySrc.select(col("dst").as("src"), col("src").as("dst"), col("weight")))
-    val edges = e1
-      .where(col("src") =!= col("dst"))
-      .groupBy(col("src"), col("dst")).agg(min(col("weight")).as("weight"))
-    val esym = edges
-      .repartition(numPartitions, col("src"))
-      .sortWithinPartitions("src", "dst")
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val nE = esym.count()
-    val eByDst = esym
-      .select(col("dst").as("src"), col("src").as("dst"), col("weight"))
-      .select(col("src"), col("dst"), col("weight"))
-    val outD = esym.groupBy(col("src").as("id")).agg(count(lit(1)).as("out_degree"))
-    val degs = vertices.select(col("id"))
-      .join(outD, Seq("id"), "left")
-      .select(col("id"),
-        coalesce(col("out_degree"), lit(0L)).as("out_degree"),
-        coalesce(col("out_degree"), lit(0L)).as("in_degree"))
-      .repartition(numPartitions, col("id"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    degs.count()
-    LinkGraph(spark, vertices, esym, eByDst, degs,
+    val (esym, nE) = LinkGraph.clusterEdges(
+      edgesBySrc.unionByName(LinkGraph.swapped(edgesBySrc)), numPartitions)
+    LinkGraph(spark, vertices, esym, LinkGraph.swapped(esym),
+      LinkGraph.degreesOf(vertices, esym, symmetric = true, numPartitions),
       numVertices, nE, numPartitions, symmetric = true)
   }
 }
@@ -119,22 +105,37 @@ object LinkGraph {
    * `load_undirected_from_directed` :349-756): id-encode endpoints,
    * optionally symmetrize (union with swapped endpoints, :572-587),
    * dedup + drop self-loops, count degrees, persist dual layouts.
+   *
+   * Each piece of work runs once. The key edges are cut once and feed
+   * both the dictionary and the two key→id joins; the dictionary's cut
+   * also returns its bucket sizes, whose sum is |V|; the edges and the
+   * degrees each take one exchange, and the jobs that fill their
+   * persists also count them. A directed build from transcripts runs
+   * 18 Spark jobs, pinned by GraphBuildJobsSpec.
+   *
+   * The two cuts are not freed: Spark may re-execute a persisted
+   * table's plan instead of reading its cache (a `symmetrize` at one
+   * partition re-reads the key-edge cut), and a graph made by
+   * [[LinkGraph.symmetrize]] shares `vertices`, so unpersisting it must
+   * leave the dictionary recomputable. The ContextCleaner frees both
+   * once the graph is unreachable.
    */
   def fromKeyEdges(
       keyEdges: DataFrame,
       symmetric: Boolean,
       numPartitions: Int): LinkGraph = {
-    val dict = VertexDict.build(keyEdges, numPartitions)
-      .repartition(numPartitions, col("id"))
+    val keyed = keyEdges.select(col("src_key"), col("dst_key"), col("weight")).graftCut
+    val (ids, numVertices) = VertexDict.assign(keyed, numPartitions)
+    val dict = ids.repartition(numPartitions, col("id"))
       .persist(StorageLevel.MEMORY_AND_DISK)
 
     val srcDict = dict.select(col("key").as("src_key"), col("id").as("src"))
     val dstDict = dict.select(col("key").as("dst_key"), col("id").as("dst"))
-    val e0 = keyEdges
+    val e0 = keyed
       .join(srcDict, "src_key")
       .join(dstDict, "dst_key")
       .select(col("src"), col("dst"), col("weight").cast("double").as("weight"))
-    finishBuild(dict, e0, symmetric, numPartitions)
+    finishBuild(dict, numVertices, e0, symmetric, numPartitions)
   }
 
   /**
@@ -159,59 +160,86 @@ object LinkGraph {
        else edges.withColumn("weight", lit(1.0)))
         .select(col("src").cast("long"), col("dst").cast("long"),
           col("weight").cast("double").as("weight"))
-    finishBuild(dict, e0, symmetric, numPartitions)
+    finishBuild(dict, numVertices, e0, symmetric, numPartitions)
   }
 
   /** Shared build tail: symmetrize/dedup/self-loop-drop, dual
-   * clustered persists, degree table. */
+   * clustered layouts, degree table. The dictionary `dict` is
+   * materialised by the jobs that read it. */
   private def finishBuild(
       dict: DataFrame,
+      numVertices: Long,
       e0: DataFrame,
       symmetric: Boolean,
       numPartitions: Int): LinkGraph = {
-    val spark = e0.sparkSession
     val e1 =
-      if (symmetric)
-        e0.unionByName(e0.select(col("dst").as("src"), col("src").as("dst"), col("weight")))
+      if (symmetric) e0.unionByName(swapped(e0))
       else e0
-    val edges = e1
-      .where(col("src") =!= col("dst"))
-      .groupBy(col("src"), col("dst")).agg(min(col("weight")).as("weight"))
-
-    val edgesBySrc = edges
-      .repartition(numPartitions, col("src"))
-      .sortWithinPartitions("src", "dst")
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val numEdges = edgesBySrc.count()
+    val (edgesBySrc, numEdges) = clusterEdges(e1, numPartitions)
 
     // Symmetric: the src-clustered rows, column-swapped, ARE the
-    // dst-clustered layout (edge set is its own transpose).
+    // dst-clustered layout (edge set is its own transpose). Directed:
+    // one exchange of the built edges on first use.
     val edgesByDst =
-      if (symmetric)
-        edgesBySrc.select(col("dst").as("src"), col("src").as("dst"), col("weight"))
-          .select(col("src"), col("dst"), col("weight"))
+      if (symmetric) swapped(edgesBySrc)
       else
-        edges.repartition(numPartitions, col("dst"))
+        edgesBySrc.repartition(numPartitions, col("dst"))
           .sortWithinPartitions("dst", "src")
           .persist(StorageLevel.MEMORY_AND_DISK)
 
-    val outD = edgesBySrc.groupBy(col("src").as("id"))
-      .agg(count(lit(1)).as("out_degree"))
-    val inD = edgesBySrc.groupBy(col("dst").as("id"))
-      .agg(count(lit(1)).as("in_degree"))
-    val degrees = dict.select(col("id"))
-      .join(outD, Seq("id"), "left")
-      .join(inD, Seq("id"), "left")
-      .select(
-        col("id"),
-        coalesce(col("out_degree"), lit(0L)).as("out_degree"),
-        coalesce(col("in_degree"), lit(0L)).as("in_degree"))
-      .repartition(numPartitions, col("id"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val numVertices = dict.count()
-    degrees.count() // materialize
-
-    LinkGraph(spark, dict, edgesBySrc, edgesByDst, degrees,
+    LinkGraph(e0.sparkSession, dict, edgesBySrc, edgesByDst,
+      degreesOf(dict, edgesBySrc, symmetric, numPartitions),
       numVertices, numEdges, numPartitions, symmetric)
+  }
+
+  private def swapped(e: DataFrame): DataFrame =
+    e.select(col("dst").as("src"), col("src").as("dst"), col("weight"))
+
+  /** Drop self-loops, dedup to the least weight per (src, dst), and
+   * persist clustered by src and sorted — one exchange, since the
+   * dedup's grouping reuses the src partitioning. Returns the table and
+   * its row count. */
+  private def clusterEdges(e: DataFrame, numPartitions: Int): (DataFrame, Long) = {
+    val bySrc = e
+      .where(col("src") =!= col("dst"))
+      .repartition(numPartitions, col("src"))
+      .groupBy(col("src"), col("dst")).agg(min(col("weight")).as("weight"))
+      .sortWithinPartitions("src", "dst")
+    persistCounted(bySrc)
+  }
+
+  /** (id, out_degree, in_degree) for every vertex of `vertices`,
+   * clustered by id, persisted and materialised: one exchange of the
+   * rows (id, 0, 0) per vertex, (src, 1, 0) and (dst, 0, 1) per edge,
+   * summed per id. A symmetric graph's in-degree is its out-degree. */
+  private def degreesOf(
+      vertices: DataFrame,
+      edgesBySrc: DataFrame,
+      symmetric: Boolean,
+      numPartitions: Int): DataFrame = {
+    def rows(from: DataFrame, id: String, out: Long, in: Long) = {
+      // the self-loop filter drops null ends, but a nullable input column
+      // would still make the degree table's id nullable
+      val c = if (from.schema(id).nullable) coalesce(col(id), lit(-1L)) else col(id)
+      from.select(c.as("id"), lit(out).as("o"), lit(in).as("i"))
+    }
+    val ends = rows(edgesBySrc, "src", 1, 0)
+    val all = rows(vertices, "id", 0, 0).unionByName(
+      if (symmetric) ends else ends.unionByName(rows(edgesBySrc, "dst", 0, 1)))
+    val out = coalesce(sum(col("o")), lit(0L))
+    val degrees = all
+      .repartition(numPartitions, col("id"))
+      .groupBy(col("id"))
+      .agg(out.as("out_degree"),
+        (if (symmetric) out else coalesce(sum(col("i")), lit(0L))).as("in_degree"))
+    persistCounted(degrees)._1
+  }
+
+  /** Persist `df`, fill it and count its rows: two jobs, a fill and a
+   * count over the cached rows, where `Dataset.count` runs three (the
+   * fill, then its own exchange and result stages). */
+  private def persistCounted(df: DataFrame): (DataFrame, Long) = {
+    df.persist(StorageLevel.MEMORY_AND_DISK)
+    (df, df.queryExecution.toRdd.count())
   }
 }

@@ -1,6 +1,6 @@
 package graft.sources
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, GraftLineage}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -12,9 +12,10 @@ import org.apache.spark.sql.functions._
  * Two-phase distributed assignment:
  *   1. hash-bucket the distinct keys (`pmod(xxhash64(key), B)`), rank
  *      within each bucket by key (window partitioned by bucket — a
- *      per-bucket sort, never a global one);
- *   2. collect the B bucket counts (B ≈ shuffle parallelism, tiny),
- *      prefix-sum them on the driver, broadcast-join the offsets back.
+ *      per-bucket sort, never a global one), and cut the ranked rows;
+ *      the cut's one job also returns the B bucket sizes;
+ *   2. prefix-sum the sizes on the driver (B ≈ shuffle parallelism,
+ *      tiny), broadcast-join the offsets back.
  *
  * Deterministic: same keys ⇒ same ids, at any parallelism. At
  * 100 TB the per-bucket sort is the only cost and B scales with the
@@ -23,27 +24,24 @@ import org.apache.spark.sql.functions._
 object VertexDict {
 
   /** @param keyEdges (src_key, dst_key, ...) — returns (id: long, key: string). */
-  def build(keyEdges: DataFrame, numBuckets: Int): DataFrame = {
+  def build(keyEdges: DataFrame, numBuckets: Int): DataFrame = assign(keyEdges, numBuckets)._1
+
+  /** [[build]], plus |V|: the sum of the bucket sizes. */
+  private[graft] def assign(keyEdges: DataFrame, numBuckets: Int): (DataFrame, Long) = {
     val spark = keyEdges.sparkSession
     val keys = keyEdges.select(col("src_key").as("key"))
       .unionByName(keyEdges.select(col("dst_key").as("key")))
       .distinct()
     val bucketed = keys.withColumn(
       "b", pmod(xxhash64(col("key")), lit(numBuckets.toLong)).cast("int"))
-    val ranked = bucketed
-      .withColumn("r", row_number().over(Window.partitionBy(col("b")).orderBy(col("key"))))
-      .persist()
-    val counts: Array[(Int, Long)] = ranked.groupBy(col("b"))
-      .agg(count(lit(1)).as("cnt"))
-      .collect()
-      .map(r => (r.getInt(0), r.getLong(1)))
-      .sortBy(_._1)
-    var acc = 0L
-    val offsets = counts.map { case (b, c) => val o = (b, acc); acc += c; o }
-    val offDf = spark.createDataFrame(offsets).toDF("b", "off")
+    val (ranked, sizes) = GraftLineage.cutBucketSizes(
+      bucketed.withColumn("r", row_number().over(Window.partitionBy(col("b")).orderBy(col("key")))),
+      "b", numBuckets)
+    val offsets = sizes.scanLeft(0L)(_ + _) // offsets(b) = keys in buckets < b
+    val offDf = spark.createDataFrame(offsets.init.zipWithIndex.map(_.swap).toSeq).toDF("b", "off")
     val dict = ranked
       .join(broadcast(offDf), "b")
       .select((col("off") + col("r") - 1).as("id"), col("key"))
-    dict
+    (dict, offsets.last)
   }
 }

@@ -72,6 +72,17 @@ object GraftLineage {
     (cut, n, mass)
   }
 
+  /** [[cut]] that also counts rows per bucket: `bucketCol` is an int
+   * column in `[0, numBuckets)`, and slot b of the returned array holds
+   * the number of rows in bucket b, from the same single job. The
+   * vertex dictionary prefix-sums these sizes into its id offsets. */
+  def cutBucketSizes(df: DataFrame, bucketCol: String, numBuckets: Int): (DataFrame, Array[Long]) = {
+    val b = indexOf(df, bucketCol)
+    materialize(df)(_.aggregate(new Array[Long](numBuckets))(
+      (acc, row) => { acc(row.getInt(b)) += 1; acc },
+      (x, y) => { x.indices.foreach(i => x(i) += y(i)); x }))
+  }
+
   private def indexOf(df: DataFrame, name: String): Int = {
     val idx = df.columns.indexOf(name)
     require(idx >= 0, s"column $name not found")

@@ -16,4 +16,14 @@ class BenchSpec extends AnyFunSuite {
     assert(bands.contains("cc") && bands.contains("pagerank_converge"))
     assert(Bench.parseBands("""{"cc":1.5,"q_x_1" : 2}""") == Map("cc" -> 1.5, "q_x_1" -> 2.0))
   }
+
+  test("a band file that is missing or holds no band fails, naming its path") {
+    assert(Bench.readBands(Bench.baselinePath).size >= 200)
+    val missing = Files.createTempDirectory("graft-bands").resolve("absent.json").toString
+    assert(intercept[IllegalStateException](Bench.readBands(missing)).getMessage.contains(missing))
+    val empty = Files.createTempFile("graft-bands", ".json")
+    Files.write(empty, "{}".getBytes("UTF-8"))
+    assert(intercept[IllegalStateException](Bench.readBands(empty.toString))
+      .getMessage.contains(empty.toString))
+  }
 }

@@ -2,7 +2,9 @@ package graft
 
 import java.sql.Timestamp
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
 import graft.sources.{EdgeBuilder, Transcripts, VertexDict}
 
@@ -59,6 +61,28 @@ class BuilderSpec extends SparkSpec {
     assert(d1 == d2)
     val ids = d1.map(_._1)
     assert(ids == (0L until ids.size).toSet, "ids are dense 0..|V|-1")
+  }
+
+  test("fromKeyEdges: VertexDict.build's ids, |V| = vertex count, degree schema") {
+    import spark.implicits._
+    val keyEdges = EdgeBuilder.keyEdges(transcripts3)
+    val g = LinkGraph.fromKeyEdges(keyEdges, symmetric = false, numPartitions)
+    def rows(df: DataFrame) =
+      df.collect().map(r => (r.getLong(0), r.getString(1))).sortBy(_._1).toSeq
+    assert(rows(g.vertices) == rows(VertexDict.build(keyEdges, numPartitions)))
+    assert(g.numVertices == g.vertices.count())
+    val degreeSchema = StructType(Seq("id", "out_degree", "in_degree")
+      .map(StructField(_, LongType, nullable = false)))
+    // nullable id columns in the input do not reach the degree table
+    val idEdges = Seq[(java.lang.Long, java.lang.Long)]((0L, 1L), (1L, 2L)).toDF("src", "dst")
+    for (d <- Seq(g, g.symmetrize, LinkGraph.fromIdEdges(idEdges, 3, symmetric = false, numPartitions)))
+      assert(d.degrees.schema == degreeSchema)
+  }
+
+  test("unpersisting a symmetrized graph leaves its source graph usable") {
+    val g = graphOf(Seq((0, 1), (1, 2), (2, 0)), symmetric = false)
+    g.symmetrize.unpersist()
+    assert(g.vertices.count() == 3 && g.degrees.count() == 3 && g.edgesByDst.count() == 3)
   }
 
   test("synthetic transcripts are deterministic and well-formed") {

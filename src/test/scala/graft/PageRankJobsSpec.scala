@@ -1,10 +1,5 @@
 package graft
 
-import java.util.concurrent.atomic.AtomicInteger
-
-import org.apache.spark.graft.TestBus
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-
 import org.apache.spark.sql.functions._
 
 import graft.algos.{Bfs, ConnectedComponents, LabelPropagation, PageRank, Sssp}
@@ -20,18 +15,6 @@ class PageRankJobsSpec extends SparkSpec {
   /** Jobs per superstep with AQE on: the message shuffle's map stage
    * and the lineage cut (which also carries the delta sum). */
   val jobsPerSuperstep = 2
-
-  private def jobsOf(body: => Unit): Int = {
-    val n = new AtomicInteger()
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit = n.incrementAndGet()
-    }
-    TestBus.drain(spark.sparkContext)
-    spark.sparkContext.addSparkListener(listener)
-    try { body; TestBus.drain(spark.sparkContext) }
-    finally spark.sparkContext.removeSparkListener(listener)
-    n.get
-  }
 
   lazy val g: LinkGraph = graphOf(
     (0 until 30).map(i => (i, (i + 1) % 30)) ++ Seq((0, 15), (3, 9), (9, 3), (4, 22)) ++

@@ -1,5 +1,9 @@
 package graft
 
+import java.util.concurrent.atomic.AtomicInteger
+
+import org.apache.spark.graft.TestBus
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -37,6 +41,19 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
     val idx = indexOf(g)
     df.select(col("id"), col(col2)).collect()
       .map(r => idx(r.getLong(0)) -> r.get(1)).toMap
+  }
+
+  /** Spark jobs started while `body` runs, each delivered event counted. */
+  def jobsOf(body: => Unit): Int = {
+    val n = new AtomicInteger()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = n.incrementAndGet()
+    }
+    TestBus.drain(spark.sparkContext)
+    spark.sparkContext.addSparkListener(listener)
+    try { body; TestBus.drain(spark.sparkContext) }
+    finally spark.sparkContext.removeSparkListener(listener)
+    n.get
   }
 }
 
