@@ -47,19 +47,15 @@ final case class LinkGraph(
     numPartitions: Int,
     symmetric: Boolean) {
 
-  /** max out-degree, max in-degree, mean in-degree — one aggregation
-   * job per graph, on first use. */
+  /** max in-degree, mean in-degree — one aggregation job per graph,
+   * on first use. */
   private lazy val degreeStats: Row =
-    degrees.agg(max(col("out_degree")), max(col("in_degree")), avg(col("in_degree"))).first()
-
-  /** Largest out-degree — bounds a frontier's edge mass without a
-   * per-superstep aggregation job. */
-  lazy val maxOutDegree: Long = degreeStats.getLong(0)
+    degrees.agg(max(col("in_degree")), avg(col("in_degree"))).first()
 
   /** Largest and mean in-degree — the hub-skew statistic behind
    * [[Superstep.autoSaltBuckets]]. */
-  lazy val maxInDegree: Long = degreeStats.getLong(1)
-  lazy val meanInDegree: Double = degreeStats.getDouble(2)
+  lazy val maxInDegree: Long = degreeStats.getLong(0)
+  lazy val meanInDegree: Double = degreeStats.getDouble(1)
 
   /** Reverse every edge in O(1) — the reference's `transpose()`
    * (core/graph.hpp:758-768): swap the two clustered layouts. */

@@ -7,8 +7,7 @@ import graft.syntax._
 
 /**
  * The engine's dataflow core — the Spark-first re-expression of the
- * reference's `process_edges` (core/graph.hpp:1491-1866) with its
- * adaptive sparse(push)/dense(pull) dual mode.
+ * reference's `process_edges` (core/graph.hpp:1491-1866).
  *
  * One superstep = "every active vertex signals along its out-edges;
  * messages to the same dst are combined; dst state is updated".
@@ -18,19 +17,17 @@ import graft.syntax._
  * `write_add`/`write_min`, core/atomic.hpp:24-51 → `sum`/`min`), and
  * the caller-side state merge.
  *
- * Mode adaptivity (core/graph.hpp:1501-1508, re-evaluated every
- * superstep): sparse iff the frontier's out-edge mass < |E|/20.
- *  - SPARSE/push → the (small) active state is BROADCAST to the
- *    co-partitioned edge table: zero shuffle of edges, zero shuffle
- *    of messages until the final combine.
- *  - DENSE/pull → co-partitioned shuffle-free join (state is
- *    hash-partitioned by id = edgesBySrc's src partitioning), partial
- *    aggregation before the message exchange = Gemini's mirror-side
- *    combining (core/graph.hpp:1747-1799).
- *
- * The broadcast is additionally gated by an absolute row cap so a
- * mid-algorithm frontier explosion can never OOM the driver — the
- * shuffle join is the always-safe fallback (SURVEY.md §7.4.5).
+ * One gather path, whatever the frontier's size: the active state is
+ * the build side of a co-partitioned hash join with `edgesBySrc` (state
+ * hash-partitioned by id = the edge table's src partitioning), and
+ * partial aggregation before the message exchange is Gemini's
+ * mirror-side combining (core/graph.hpp:1747-1799). Gemini's sparse
+ * mode (core/graph.hpp:1501-1508) pays because it touches only the
+ * active vertices' out-edges. A broadcast of a small frontier would
+ * still stream all |E| edges, and the resident states are already
+ * clustered by id, so it would save no shuffle and cost a job per
+ * superstep. Frontier-proportional work needs a per-partition index
+ * over the edge table instead.
  */
 object Superstep {
 
@@ -38,16 +35,9 @@ object Superstep {
   val verbose: Boolean = sys.env.get("GRAFT_VERBOSE").contains("1")
   def log(msg: => String): Unit = if (verbose) System.err.println(s"[superstep] $msg")
 
-  /** Same constant as the reference: sparse iff active out-edges < |E|/20
-   * (core/graph.hpp:1508). */
-  val denseThresholdFraction = 20L
-
-  /** Hard cap on rows we are willing to broadcast in push mode. */
-  val broadcastRowCap = 4000000L
-
-  /** Out-edge mass of a frontier = Σ out_degree over active ids —
-   * the statistic Gemini computes with process_vertices before every
-   * superstep (core/graph.hpp:1502-1507). */
+  /** Out-edge mass of a frontier = Σ out_degree over active ids (one
+   * aggregation job). Kept only for linkbench's layer probe, which
+   * still reports it; it goes in the next change to the benchmark. */
   def frontierEdgeMass(graph: LinkGraph, frontierState: DataFrame): Long = {
     val r = frontierState.select(col("id"))
       .join(graph.degrees, "id")
@@ -56,17 +46,25 @@ object Superstep {
     r.getLong(0)
   }
 
-  /** Frontier edge mass, skipping the aggregation job when
-   * `activeCount · maxOutDegree` already proves the frontier sparse —
-   * the exact statistic is only needed near the |E|/20 threshold.
-   * Halves the per-superstep job count on long-diameter graphs
-   * (transcript chains) where frontiers stay tiny for hundreds of
-   * supersteps. */
-  def massOrBound(graph: LinkGraph, frontierState: DataFrame, activeCount: Long): Long = {
-    val bound = activeCount * graph.maxOutDegree
-    if (bound < graph.numEdges / denseThresholdFraction) bound
-    else frontierEdgeMass(graph, frontierState)
-  }
+  /**
+   * The out-edges of `active(id, <payload>)`: `edgesBySrc ⋈ active` on
+   * src, as rows `(src, dst, weight, <payload>)`.
+   *
+   * The `shuffle_hash` hint makes the active rows the build side and is
+   * what keeps this join co-partitioned. A cut state is a stats-free
+   * LogicalRDD, so the planner sizes it at defaultSizeInBytes while the
+   * cached edge table reports its real size: unhinted, a graph under
+   * the broadcast threshold plans a BroadcastHashJoin that ships the
+   * WHOLE edge table every superstep (pinned by PlanSpec's
+   * production-thresholds test). The repartition is a no-op when the
+   * rows are already clustered by id; any other clustering (MSBFS's
+   * `(id, root)`) pays one exchange of the active rows.
+   */
+  def outEdges(graph: LinkGraph, active: DataFrame): DataFrame =
+    graph.edgesBySrc.join(
+      active.withColumnRenamed("id", "src")
+        .repartition(graph.numPartitions, col("src")).hint("shuffle_hash"),
+      "src")
 
   /**
    * One gather step: join `activeState(id, <cols>)` to out-edges and
@@ -74,11 +72,9 @@ object Superstep {
    *
    * @param activeState state rows of ACTIVE vertices only (id + payload)
    * @param signal      expression over the joined row (state cols +
-   *                    `weight`) producing the message value
+   *                    `src`, `weight`) producing the message value
    * @param combine     aggregate over `col("msg")`, e.g. `sum(...)`,
    *                    `min(...)`
-   * @param activeEdges out-edge mass of the frontier (precomputed by
-   *                    the caller, which usually needs it anyway)
    * @return (id, msg) — combined message per destination, clustered by id
    */
   def gather(
@@ -86,27 +82,9 @@ object Superstep {
       activeState: DataFrame,
       signal: Column,
       combine: Column => Column,
-      activeEdges: Long,
-      activeCount: Long,
       saltBuckets: Int = 0): DataFrame = {
-    val sparse = activeEdges < graph.numEdges / denseThresholdFraction &&
-      activeCount < broadcastRowCap
-    val src = activeState.withColumnRenamed("id", "src")
-    val joined =
-      if (sparse)
-        graph.edgesBySrc.join(broadcast(src), "src")
-      else
-        // The hint is what keeps this join co-partitioned. A cut state
-        // is a stats-free LogicalRDD, so the planner sizes it at
-        // defaultSizeInBytes while the cached edge table reports its
-        // real size: unhinted, a graph under the broadcast threshold
-        // plans a BroadcastHashJoin that ships the WHOLE edge table
-        // every superstep (pinned by PlanSpec's production-thresholds
-        // test). The state is the build side; the repartition is a
-        // no-op when the state is already clustered by id.
-        graph.edgesBySrc.join(
-          src.repartition(graph.numPartitions, col("src")).hint("shuffle_hash"), "src")
-    val msgs = joined.select(col("dst").as("id"), signal.as("msg"), col("src"))
+    val msgs = outEdges(graph, activeState)
+      .select(col("dst").as("id"), signal.as("msg"), col("src"))
     if (saltBuckets > 1) {
       // Explicit two-level salted aggregation for hub destinations
       // (north rule; Gemini's analogue is chunk tuning + work stealing,
@@ -130,22 +108,31 @@ object Superstep {
     }
   }
 
+  /** [[gather]] with the two frontier statistics the removed broadcast
+   * branch chose its plan by. Both are ignored. Kept only because
+   * linkbench's layer probe still passes them; it goes in the next
+   * change to the benchmark. */
+  def gather(
+      graph: LinkGraph,
+      activeState: DataFrame,
+      signal: Column,
+      combine: Column => Column,
+      activeEdges: Long,
+      activeCount: Long): DataFrame =
+    gather(graph, activeState, signal, combine)
+
   /** One iteration's state as [[loop]] sees it: the lineage-cut
    * `state`, the `count` its checkpoint sidecar records as
-   * `active_count`, whether another superstep should run from it, and
-   * (for a resident state, see [[cutActive]]) the frontier's out-edge
-   * mass. */
-  final case class Cut(state: DataFrame, count: Long, more: Boolean, mass: Long = 0L)
+   * `active_count`, and whether another superstep should run from it. */
+  final case class Cut(state: DataFrame, count: Long, more: Boolean)
 
-  /** Cut a resident state `(id, out_degree, <payload>, active)` — every
-   * vertex's row plus the frontier flag, the Spark form of Gemini's
-   * vertex array and active bitmap (core/bitmap.hpp). The cut's one
-   * action also returns the active count and the frontier's exact
-   * out-edge mass (Σ out_degree over active rows); the loop goes on
-   * while any row is active. */
+  /** Cut a resident state `(id, <payload>, active)` — every row plus
+   * the frontier flag, the Spark form of Gemini's vertex array and
+   * active bitmap (core/bitmap.hpp). The cut's one action also returns
+   * the active count; the loop goes on while any row is active. */
   def cutActive(state: DataFrame): Cut = {
-    val (s, n, m) = state.graftCutActive("active", Some("out_degree"))
-    Cut(s, n, more = n > 0, mass = m)
+    val (s, n) = state.graftCutActive("active")
+    Cut(s, n, more = n > 0)
   }
 
   /** One resident-state superstep's messages: [[gather]] from the
@@ -164,7 +151,7 @@ object Superstep {
       saltBuckets: Int = 0): DataFrame = {
     val msgs = gather(
       graph, c.state.where(col("active")).select(("id" +: payload).map(col): _*),
-      signal, combine, activeEdges = c.mass, activeCount = c.count, saltBuckets = saltBuckets)
+      signal, combine, saltBuckets)
     c.state.join(msgs.hint("shuffle_hash"), Seq("id"), "left")
   }
 
@@ -218,15 +205,12 @@ object Superstep {
     Looped(cut.state, i, i - first)
   }
 
-  /** Default skew thresholds for [[autoSaltBuckets]], env-overridable
-   * (GRAFT_SALT_MIN_DEGREE / GRAFT_SALT_SKEW). The production default
-   * is conservative: salting pays an extra reduce stage per superstep,
-   * worth it only when one hub's combined input exceeds a task even
-   * after map-side partial aggregation (≥ ~10^6 in-edges). */
-  val saltMinDegree: Long =
-    sys.env.get("GRAFT_SALT_MIN_DEGREE").map(_.toLong).getOrElse(1000000L)
-  val saltSkewFactor: Double =
-    sys.env.get("GRAFT_SALT_SKEW").map(_.toDouble).getOrElse(50.0)
+  /** Default skew thresholds for [[autoSaltBuckets]]. Conservative:
+   * salting pays an extra reduce stage per superstep, worth it only
+   * when one hub's combined input exceeds a task even after map-side
+   * partial aggregation (≥ ~10^6 in-edges). */
+  val saltMinDegree: Long = 1000000L
+  val saltSkewFactor: Double = 50.0
 
   /** Salt-bucket heuristic: salt when the worst hub's in-degree is both
    * skewed (≫ mean) and large in absolute terms. Reads the graph's

@@ -78,10 +78,7 @@ object Betweenness {
 
     var visitedBase = visited
     while (frontierCount > 0) {
-      val mass = Superstep.massOrBound(graph, frontier, frontierCount)
-      val msgs = Superstep.gather(
-        graph, frontier, signal = col("sigma"), combine = sum,
-        activeEdges = mass, activeCount = frontierCount)
+      val msgs = Superstep.gather(graph, frontier, signal = col("sigma"), combine = sum)
       val (next, n) = msgs.join(visited, Seq("id"), "left_anti")
         .select(col("id"), col("msg").as("sigma")).graftCutCount
       frontierCount = n
@@ -116,11 +113,7 @@ object Betweenness {
       val dep =
         if (depFrontier == null) withInv.select(col("id"), col("inv").as("dep"))
         else {
-          val cnt = depFrontier.count()
-          val mass = Superstep.massOrBound(t, depFrontier, cnt)
-          val msgs = Superstep.gather(
-            t, depFrontier, signal = col("dep"), combine = sum,
-            activeEdges = mass, activeCount = cnt)
+          val msgs = Superstep.gather(t, depFrontier, signal = col("dep"), combine = sum)
           // only THIS level's members may receive (visited guard,
           // bc.cpp:139,160): restrict the merge to lvl
           withInv.join(msgs, Seq("id"), "left")
@@ -223,20 +216,13 @@ object Betweenness {
     }
     var visitedBase = visited
 
-    def gatherBy(g: LinkGraph, active: DataFrame, valueCol: String, n: Long): DataFrame = {
-      val mass = Superstep.massOrBound(g, active, n)
-      val sparse = mass < g.numEdges / Superstep.denseThresholdFraction &&
-        n < Superstep.broadcastRowCap
-      val src = active.select(col("id").as("src"), col("root"), col(valueCol))
-      val joined =
-        if (sparse) g.edgesBySrc.join(broadcast(src), "src")
-        else g.edgesBySrc.join(src.repartition(g.numPartitions, col("src")), "src")
-      joined.groupBy(col("dst").as("id"), col("root"))
+    def gatherBy(g: LinkGraph, active: DataFrame, valueCol: String): DataFrame =
+      Superstep.outEdges(g, active.select(col("id"), col("root"), col(valueCol)))
+        .groupBy(col("dst").as("id"), col("root"))
         .agg(sum(col(valueCol)).as(valueCol))
-    }
 
     while (frontierCount > 0) {
-      val msgs = gatherBy(graph, frontier, "sigma", frontierCount)
+      val msgs = gatherBy(graph, frontier, "sigma")
       val (next, n) = msgs.join(visited, Seq("id", "root"), "left_anti")
         .graftCutCount
       frontierCount = n
@@ -265,8 +251,7 @@ object Betweenness {
         if (depFrontier == null)
           withInv.select(col("id"), col("root"), col("inv").as("dep"))
         else {
-          val cnt = depFrontier.count()
-          val msgs = gatherBy(t, depFrontier, "dep", cnt)
+          val msgs = gatherBy(t, depFrontier, "dep")
           // visited guard (bc.cpp:139,160): only THIS level's members
           // of the SAME root's search may receive
           withInv.join(msgs, Seq("id", "root"), "left")

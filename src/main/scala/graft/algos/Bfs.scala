@@ -20,18 +20,17 @@ import graft.{Checkpoint, LinkGraph, Superstep}
  *    reference's `dense_selective` skip (bfs.cpp:77,
  *    core/graph.hpp:1663-1689).
  *
- * Direction adaptivity is inherited from Superstep.gather: early and
- * late (small) frontiers broadcast, mid (dense) frontiers use the
- * co-partitioned join — re-evaluated every superstep like the
- * reference's |E|/20 switch.
+ * Every level, small or large, takes the one co-partitioned gather of
+ * [[Superstep.gather]]; the reference's |E|/20 push/pull switch has no
+ * counterpart here.
  *
- * The state `(id, out_degree, parent, level, active)` is complete and
- * resident (see [[Superstep.cutActive]]); each level is one
+ * The state `(id, parent, level, active)` is complete and resident
+ * (see [[Superstep.cutActive]]); each level is one
  * [[Superstep.withMessages]] join into the lineage cut, whose action
- * also returns the frontier count and out-edge mass. That is 3 Spark
- * jobs per sparse level (frontier broadcast, message shuffle's map
- * stage, cut), pinned by PageRankJobsSpec. Checkpoints are the reached
- * rows `(id, parent, level)`; a resume re-activates the last level.
+ * also returns the frontier count. That is 2 Spark jobs per level
+ * (message shuffle's map stage, cut), pinned by PageRankJobsSpec.
+ * Checkpoints are the reached rows `(id, parent, level)`; a resume
+ * re-activates the last level.
  */
 object Bfs {
 
@@ -45,7 +44,7 @@ object Bfs {
       ckpt: Option[Checkpoint] = None,
       ckptEvery: Int = 8,
       resume: Boolean = false): Result = {
-    val degs = graph.degrees.select(col("id"), col("out_degree"))
+    val ids = graph.degrees.select(col("id"))
     val reached = col("parent").isNotNull
     var level = 0
     val r = Superstep.loop("bfs", maxIterations, ckpt, ckptEvery, resume)(
@@ -53,13 +52,13 @@ object Bfs {
         level = resumed.getOrElse(0)
         Superstep.cutActive((resumed match {
           case Some(k) =>
-            degs.join(ckpt.get.load(graph.spark, k), Seq("id"), "left")
+            ids.join(ckpt.get.load(graph.spark, k), Seq("id"), "left")
               .withColumn("active", coalesce(col("level") === k, lit(false)))
           case None =>
             val root = col("id") === rootId
-            degs.select(col("id"), col("out_degree"), when(root, lit(rootId)).as("parent"),
+            ids.select(col("id"), when(root, lit(rootId)).as("parent"),
               when(root, lit(0)).as("level"), root.as("active"))
-        }).select(col("id"), col("out_degree"), col("parent"), col("level"), col("active"))
+        }).select(col("id"), col("parent"), col("level"), col("active"))
           .repartition(graph.numPartitions, col("id")))
       },
       step = { c =>
@@ -67,7 +66,7 @@ object Bfs {
         val claimed = !reached && col("msg").isNotNull
         Superstep.cutActive(Superstep.withMessages(graph, c, Nil,
             signal = col("src"), combine = min)
-          .select(col("id"), col("out_degree"),
+          .select(col("id"),
             when(claimed, col("msg")).otherwise(col("parent")).as("parent"),
             when(claimed, lit(level)).otherwise(col("level")).as("level"),
             claimed.as("active")))

@@ -21,8 +21,8 @@ import graft.{LinkGraph, Superstep}
  * best ≤ radS + radT the answer is final. Disconnected pairs exhaust
  * one frontier and report −1.
  *
- * Scale shape: per round one adaptive gather (broadcast for small
- * frontiers, co-partitioned join for dense ones), one anti-join
+ * Scale shape: per round one co-partitioned gather
+ * ([[Superstep.gather]]), one anti-join
  * against that side's visited set, one scalar meet-check aggregate
  * against the OTHER side's ball (the Allreduce analog). All state
  * cuts through the lineage cut; superseded cuts are freed each round.
@@ -50,13 +50,10 @@ object BidirBfs {
     while (best > radS + radT && cntS > 0 && cntT > 0 && rounds < maxRounds) {
       rounds += 1
       val expandS = cntS <= cntT
-      val (vis, fr, cnt, rad, other) =
-        if (expandS) (visS, frS, cntS, radS, visT)
-        else (visT, frT, cntT, radT, visS)
-      val mass = Superstep.massOrBound(graph, fr, cnt)
-      val msgs = Superstep.gather(
-        graph, fr.select(col("id")), signal = lit(1L), combine = min,
-        activeEdges = mass, activeCount = cnt)
+      val (vis, fr, rad, other) =
+        if (expandS) (visS, frS, radS, visT)
+        else (visT, frT, radT, visS)
+      val msgs = Superstep.gather(graph, fr.select(col("id")), signal = lit(1L), combine = min)
       val (claimed, n) = msgs
         .join(vis, Seq("id"), "left_anti")
         .select(col("id"), lit(rad + 1L).as("d"))

@@ -19,7 +19,7 @@ import graft.{LinkGraph, Superstep}
  * core, then two frontier closures — forward over the edge layout,
  * backward over the O(1) [[LinkGraph.transpose]] (the reference's D5
  * layout swap, core/graph.hpp:758-768). Each closure is one BFS-style
- * loop (adaptive gather + anti-join per level).
+ * loop (co-partitioned gather + anti-join per level).
  *
  * @return (cls, n, min_key, max_key) — one row per non-empty class,
  *         keys being the lexicographic extremes for a hash-stable
@@ -48,10 +48,7 @@ object BowTie {
       var frontier = visited
       var cnt = visited.count()
       while (cnt > 0) {
-        val mass = Superstep.massOrBound(g, frontier, cnt)
-        val msgs = Superstep.gather(
-          g, frontier.select(col("id")), signal = lit(1L), combine = min,
-          activeEdges = mass, activeCount = cnt)
+        val msgs = Superstep.gather(g, frontier.select(col("id")), signal = lit(1L), combine = min)
         val (claimed, n) = msgs.select(col("id"))
           .join(visited, Seq("id"), "left_anti").graftCutCount
         val newVis = visited.unionByName(claimed).graftCut

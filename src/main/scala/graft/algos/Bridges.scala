@@ -67,11 +67,8 @@ object Bridges {
     var base = visited
     var pendingFree = List[DataFrame]()
     while (frontierCount > 0) {
-      val mass = Superstep.massOrBound(graph, frontier, frontierCount)
       val msgs = Superstep.gather(
-        graph, frontier.select(col("id")),
-        signal = col("src"), combine = min,
-        activeEdges = mass, activeCount = frontierCount)
+        graph, frontier.select(col("id")), signal = col("src"), combine = min)
       val (claimed, n) = msgs
         .join(visited, Seq("id"), "left_anti")
         .select(col("id"), col("msg").as("parent"), lit(level + 1).as("level"))

@@ -28,8 +28,8 @@ import graft.{LinkGraph, Superstep}
  * out-edge, sum-combined), an accumulate into the pending-count
  * state, and a threshold test; cum counts equal "activated
  * in-neighbors so far" because every vertex activates in exactly one
- * round and signals exactly once. Frontiers are tiny → push mode
- * with a broadcast frontier; the edge side never moves.
+ * round and signals exactly once. The frontier is the build side of
+ * the co-partitioned gather; the edge side never moves.
  */
 object Cascade {
 
@@ -62,12 +62,9 @@ object Cascade {
 
     while (frontierCount > 0 && round < maxRounds) {
       round += 1
-      val mass = Superstep.massOrBound(
-        graph, frontier.select(col("id")), frontierCount)
       val msgs = Superstep.gather(
         graph, frontier.select(col("id"), lit(1L).as("v")),
-        signal = col("v"), combine = sum,
-        activeEdges = mass, activeCount = frontierCount)
+        signal = col("v"), combine = sum)
 
       // accumulate activated-in-neighbor counts
       val prevCum = cum

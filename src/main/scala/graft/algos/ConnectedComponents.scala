@@ -17,23 +17,15 @@ import graft.{Checkpoint, LinkGraph, Superstep}
  *    and joins the next frontier (:44-79)
  *  - terminate when no vertex was activated (:39).
  *
- * The frontier shrinks fast, so this is where the adaptive push/pull
- * mode switch (Superstep.gather) earns its keep: early rounds are
- * dense co-partitioned joins; late rounds broadcast the few remaining
- * improved labels.
- *
- * The state `(id, out_degree, lbl, active)` is complete and resident:
- * every vertex's label plus the frontier flag, the Spark form of
- * Gemini's vertex array and its active bitmap (core/bitmap.hpp). A
- * superstep gathers from `state.where(active)` and runs ONE left join
+ * The state `(id, lbl, active)` is complete and resident: every
+ * vertex's label plus the frontier flag, the Spark form of Gemini's
+ * vertex array and its active bitmap (core/bitmap.hpp). A superstep
+ * gathers from `state.where(active)` and runs ONE left join
  * `state ⋈ msgs` into the lineage cut, whose single action also
- * returns the activated count and the new frontier's out-edge mass
- * (Σ out_degree over active rows — the reference's active-edge count
- * that picks push or pull, core/graph.hpp:1502-1507). That is 2 Spark
- * jobs per dense superstep (the message shuffle's map stage and the
- * cut) and 3 per sparse one (plus the frontier broadcast);
- * PageRankJobsSpec pins both. Checkpoints stay `(id, lbl)`; resume
- * joins them to the degrees once.
+ * returns the activated count. That is 2 Spark jobs per superstep
+ * whatever the frontier's size (the message shuffle's map stage and
+ * the cut); PageRankJobsSpec pins it. Checkpoints are the state's
+ * `(id, lbl)`, which a resume loads as they are.
  */
 object ConnectedComponents {
 
@@ -50,7 +42,6 @@ object ConnectedComponents {
       initFrontier: Option[DataFrame] = None): Result = {
     require(graph.symmetric, "CC expects a symmetrized graph (cc.cpp:121)")
     val salt = Superstep.resolveSalt(graph, saltBuckets)
-    val degs = graph.degrees.select(col("id"), col("out_degree"))
 
     val history = scala.collection.mutable.ArrayBuffer[Long]()
     val r = Superstep.loop("cc", maxIterations, ckpt, ckptEvery, resume)(
@@ -59,15 +50,16 @@ object ConnectedComponents {
           // conservative resume frontier: every vertex re-sends its label
           // once (min is idempotent, so the fixpoint is the same) — unless
           // the checkpoint was saved at the fixpoint, where nothing moves
-          degs.join(ckpt.get.load(graph.spark, k), "id")
+          ckpt.get.load(graph.spark, k)
             .withColumn("active", lit(ckpt.get.activeCount(k) > 0))
         case None if initLabels.nonEmpty =>
-          // warm start ([[incremental]]): caller-supplied labels (must be
-          // constant per component of the already-processed edge subset)
-          // and a restricted frontier (endpoints of the new edges) — the
-          // fixpoint is identical to a cold run because min-propagation
-          // wakes exactly the vertices whose label can still drop.
-          val labelled = degs.join(initLabels.get.select(col("id"), col("lbl")), "id")
+          // warm start ([[incremental]]): caller-supplied labels, one row
+          // per vertex (constant per component of the already-processed
+          // edge subset), and a restricted frontier (endpoints of the new
+          // edges) — the fixpoint is identical to a cold run because
+          // min-propagation wakes exactly the vertices whose label can
+          // still drop.
+          val labelled = initLabels.get.select(col("id"), col("lbl"))
           initFrontier match {
             case Some(f) =>
               labelled
@@ -76,14 +68,14 @@ object ConnectedComponents {
             case None => labelled.withColumn("active", lit(true))
           }
         case None =>
-          degs.select(col("id"), col("out_degree"), col("id").as("lbl"), lit(true).as("active"))
-      }).select(col("id"), col("out_degree"), col("lbl"), col("active"))
+          graph.degrees.select(col("id"), col("id").as("lbl"), lit(true).as("active"))
+      }).select(col("id"), col("lbl"), col("active"))
         .repartition(graph.numPartitions, col("id"))),
       step = { c =>
         history += c.count
         Superstep.cutActive(Superstep.withMessages(graph, c, Seq("lbl"),
             signal = col("lbl"), combine = min, saltBuckets = salt)
-          .select(col("id"), col("out_degree"),
+          .select(col("id"),
             least(col("lbl"), col("msg")).as("lbl"),
             coalesce(col("msg") < col("lbl"), lit(false)).as("active")))
       },

@@ -20,12 +20,11 @@ import graft.{Checkpoint, LinkGraph, Superstep}
  * toolkit set lacks.
  *
  * Superstep shape: [[Sssp]]'s complete resident state, here
- * `(id, out_degree, d, active)` with every vertex at d = 0 and active
- * at the start; the active rows join the src-clustered edge table
- * (broadcast under the |E|/20 switch), messages combine per dst with
- * `max`, and one [[Superstep.withMessages]] join into the lineage cut
- * raises `d` and sets the next frontier: 2 Spark jobs per dense
- * superstep, 3 per sparse one (plus the frontier broadcast). On a DAG
+ * `(id, d, active)` with every vertex at d = 0 and active at the
+ * start; the active rows join the src-clustered edge table, messages
+ * combine per dst with `max`, and one [[Superstep.withMessages]] join
+ * into the lineage cut raises `d` and sets the next frontier: 2 Spark
+ * jobs per superstep. On a DAG
  * the loop terminates in exactly longest-path-length supersteps;
  * `maxIterations` guards accidental cyclic input (where max-plus
  * diverges). Checkpoints are `(id, d)`.
@@ -42,21 +41,20 @@ object DagDepth {
       ckptEvery: Int = 5,
       resume: Boolean = false): Result = {
     require(!graph.symmetric, "longest path is defined on the directed DAG")
-    val degs = graph.degrees.select(col("id"), col("out_degree"))
     val r = Superstep.loop("dagdepth", maxIterations, ckpt, ckptEvery, resume)(
       start = resumed => Superstep.cutActive((resumed match {
         case Some(k) =>
           // conservative resume frontier (CC pattern): re-push every
           // depth once — max-relax is idempotent, the fixpoint is the
           // same — unless the checkpoint was saved at the fixpoint
-          degs.join(ckpt.get.load(graph.spark, k), "id")
+          ckpt.get.load(graph.spark, k)
             .withColumn("active", lit(ckpt.get.activeCount(k) > 0))
-        case None => degs.withColumn("d", lit(0L)).withColumn("active", lit(true))
-      }).select(col("id"), col("out_degree"), col("d"), col("active"))
+        case None => graph.degrees.select(col("id"), lit(0L).as("d"), lit(true).as("active"))
+      }).select(col("id"), col("d"), col("active"))
         .repartition(graph.numPartitions, col("id"))),
       step = c => Superstep.cutActive(Superstep.withMessages(graph, c, Seq("d"),
           signal = col("d") + lit(1L), combine = max)
-        .select(col("id"), col("out_degree"), greatest(col("d"), col("msg")).as("d"),
+        .select(col("id"), greatest(col("d"), col("msg")).as("d"),
           coalesce(col("msg") > col("d"), lit(false)).as("active"))),
       saved = _.select(col("id"), col("d")))
     Result(r.state.select(col("id"), col("d")), r.iterations)

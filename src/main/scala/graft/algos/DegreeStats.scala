@@ -33,8 +33,7 @@ object DegreeStats {
     import graft.Superstep
     val hop = (h: DataFrame) => {
       val msgs = Superstep.gather(
-        graph, h, signal = col("h"), combine = sum,
-        activeEdges = graph.numEdges, activeCount = graph.numVertices)
+        graph, h, signal = col("h"), combine = sum)
       graph.vertices.select(col("id"))
         .join(msgs, Seq("id"), "left")
         .select(col("id"), coalesce(col("msg"), lit(0L)).as("h"))
@@ -188,8 +187,7 @@ object DegreeStats {
           lit("|"), col("key")).as("pi"))
       .repartition(graph.numPartitions, col("id"))
     val msgs = graft.Superstep.gather(
-      graph, state, signal = col("pi"), combine = max,
-      activeEdges = graph.numEdges, activeCount = graph.numVertices)
+      graph, state, signal = col("pi"), combine = max)
     state.join(msgs, Seq("id"), "left")
       .select(col("id"),
         substring(greatest(col("pi"), coalesce(col("msg"), col("pi"))), 14, 1000000)

@@ -134,8 +134,7 @@ object DeltaStepping {
             else members.unionByName(f.select(col("id")))
           if (gLight.numEdges > 0) {
             val msgs = Superstep.gather(
-              gLight, f, signal = col("dist") + col("weight"), combine = min,
-              activeEdges = Superstep.massOrBound(gLight, f, nf), activeCount = nf)
+              gLight, f, signal = col("dist") + col("weight"), combine = min)
             val (improved, n) = msgs
               .join(dist.select(col("id"), col("dist").as("old")), Seq("id"), "left")
               .where(col("old").isNull || col("msg") < col("old"))
@@ -157,8 +156,7 @@ object DeltaStepping {
         junk = bm :: junk
         if (nb > 0) {
           val msgs = Superstep.gather(
-            gHeavy, bm, signal = col("dist") + col("weight"), combine = min,
-            activeEdges = Superstep.massOrBound(gHeavy, bm, nb), activeCount = nb)
+            gHeavy, bm, signal = col("dist") + col("weight"), combine = min)
           val (improved, n) = msgs
             .join(dist.select(col("id"), col("dist").as("old")), Seq("id"), "left")
             .where(col("old").isNull || col("msg") < col("old"))

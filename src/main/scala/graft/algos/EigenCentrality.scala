@@ -43,8 +43,7 @@ object EigenCentrality {
     while (i < iterations) {
       i += 1
       val msgs = Superstep.gather(
-        graph, x, signal = col("x"), combine = sum,
-        activeEdges = graph.numEdges, activeCount = graph.numVertices)
+        graph, x, signal = col("x"), combine = sum)
       val raw = graph.vertices.select(col("id"))
         .join(msgs, Seq("id"), "left")
         .select(col("id"), coalesce(col("msg"), lit(0L)).as("s"))

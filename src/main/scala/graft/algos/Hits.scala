@@ -68,7 +68,6 @@ object Hits {
     for (i <- startIter + 1 to iterations) {
       val aMsgs = Superstep.gather(
         graph, hub, signal = col("v"), combine = sum,
-        activeEdges = graph.numEdges, activeCount = graph.numVertices,
         saltBuckets = salt)
       auth = ids.join(aMsgs, Seq("id"), "left")
         .select(col("id"), coalesce(col("msg"), lit(0L)).as("v"))
@@ -78,7 +77,6 @@ object Hits {
 
       val hMsgs = Superstep.gather(
         rev, auth, signal = col("v"), combine = sum,
-        activeEdges = graph.numEdges, activeCount = graph.numVertices,
         saltBuckets = salt)
       hub = ids.join(hMsgs, Seq("id"), "left")
         .select(col("id"), coalesce(col("msg"), lit(0L)).as("v"))

@@ -16,7 +16,7 @@ import graft.{Checkpoint, LinkGraph, Superstep}
  * shared tools — pure linear chains peel away).
  *
  * Spark shape per peel round (same skeleton as the HashMin CC loop):
- * ONE dense/sparse-adaptive gather counts each destination's alive
+ * ONE co-partitioned gather counts each destination's alive
  * in-neighbors (`signal = 1, combine = sum` — degree-among-alive for
  * every vertex in one co-partitioned join, the edge side never
  * re-shuffles), then the survivor filter + count is the lineage-cut
@@ -93,16 +93,7 @@ object KCore {
     var done = false
 
     while (!done && rounds < maxRounds) {
-      // While most vertices survive, the gather is dense with near
-      // certainty — skip the exact frontier-mass job (one job/round
-      // saved; mass only matters near the |E|/20 push threshold,
-      // unreachable when alive covers > 1/8 of the graph)
-      val mass =
-        if (n > graph.numVertices / 8) graph.numEdges
-        else Superstep.massOrBound(graph, alive, n)
-      val msgs = Superstep.gather(
-        graph, alive, signal = col("v"), combine = sum,
-        activeEdges = mass, activeCount = n)
+      val msgs = Superstep.gather(graph, alive, signal = col("v"), combine = sum)
       val (next, nNew) = alive.select(col("id"))
         .join(msgs, Seq("id"), "left")
         .select(col("id"), coalesce(col("msg"), lit(0L)).as("deg"))

@@ -43,8 +43,7 @@ object Katz {
       // one dense superstep: every vertex with a nonzero walk count
       // signals it along out-edges; sum per destination
       val msgs = Superstep.gather(
-        graph, p, signal = col("c"), combine = sum,
-        activeEdges = graph.numEdges, activeCount = graph.numVertices)
+        graph, p, signal = col("c"), combine = sum)
       val pNext = graph.vertices.select(col("id"))
         .join(msgs, Seq("id"), "left")
         .select(col("id"), coalesce(col("msg"), lit(0L)).as("c"))

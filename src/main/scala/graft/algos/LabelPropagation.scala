@@ -42,9 +42,8 @@ object LabelPropagation {
       step = { c =>
         val msgs = Superstep.gather(
           graph, c.state.select(col("id"), col("lbl")), signal = col("lbl"), combine = min,
-          activeEdges = graph.numEdges, activeCount = graph.numVertices,
           saltBuckets = salt)
-        val (next, changed, _) = c.state.join(msgs.hint("shuffle_hash"), Seq("id"), "left")
+        val (next, changed) = c.state.join(msgs.hint("shuffle_hash"), Seq("id"), "left")
           .select(col("id"),
             least(col("lbl"), col("msg")).as("lbl"),
             coalesce(col("msg") < col("lbl"), lit(false)).as("changed"))

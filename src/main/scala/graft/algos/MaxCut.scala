@@ -47,8 +47,7 @@ object MaxCut {
     for (_ <- 1 to rounds) {
       val msgs = Superstep.gather(
         graph, side.select(col("id"), col("side")),
-        signal = col("side"), combine = sum,
-        activeEdges = graph.numEdges, activeCount = graph.numVertices)
+        signal = col("side"), combine = sum)
       // positive-gain candidates: more same-side than cross-side nbrs
       val cand = side
         .join(msgs, Seq("id"), "left")
@@ -59,10 +58,7 @@ object MaxCut {
         .select(col("id"), col("pi"))
       val (candCut, nCand) = cand.graftCutCount
       if (nCand > 0) {
-        val mass = Superstep.massOrBound(graph, candCut.select(col("id")), nCand)
-        val nbrMin = Superstep.gather(
-          graph, candCut, signal = col("pi"), combine = min,
-          activeEdges = mass, activeCount = nCand)
+        val nbrMin = Superstep.gather(graph, candCut, signal = col("pi"), combine = min)
         side = side
           .join(candCut.select(col("id"), col("pi").as("cpi")), Seq("id"), "left")
           .join(nbrMin, Seq("id"), "left")

@@ -78,25 +78,20 @@ object Mis {
 
     while (activeCount > 0 && round < maxRounds) {
       round += 1
-      val mass = Superstep.frontierEdgeMass(graph, active)
       // min (pri, key) over ACTIVE neighbors (struct min = lexicographic)
       val minNbr = Superstep.gather(
         graph, active,
         signal = struct(col("pri").as("p"), col("key").as("k")),
-        combine = min,
-        activeEdges = mass, activeCount = activeCount)
-      val (winners, nWin) = active
+        combine = min)
+      val winners = active
         .join(minNbr, Seq("id"), "left")
         .where(col("msg").isNull ||
           struct(col("pri").as("p"), col("key").as("k")) < col("msg"))
         .select(col("id"), col("key"), col("pri"))
-        .graftCutCount
+        .graftCut
       // neighbors of winners drop out
       val losers = Superstep.gather(
-        graph, winners.select(col("id")),
-        signal = lit(1), combine = min,
-        activeEdges = Superstep.massOrBound(graph, winners, nWin),
-        activeCount = nWin)
+        graph, winners.select(col("id")), signal = lit(1), combine = min)
       val (nextActive, n) = active
         .join(winners.select(col("id")), Seq("id"), "left_anti")
         .join(losers.select(col("id")), Seq("id"), "left_anti")

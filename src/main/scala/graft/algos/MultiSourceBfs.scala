@@ -18,18 +18,16 @@ import graft.{Checkpoint, LinkGraph, Superstep}
  * state would be K·|V| rows, so unreached pairs have no row.
  *
  * Plan per superstep: the active pairs join the src-clustered edge
- * table (broadcast when the frontier's edge mass is under the |E|/20
- * switch, co-partitioned shuffle join otherwise), dedup to one message
+ * table through [[Superstep.outEdges]] (the pairs are clustered by
+ * (id, root), so they pay one exchange to src), dedup to one message
  * per (dst, root), and ONE anti-join against the state keeps the
  * unreached pairs (bfs.cpp:77's `dense_selective` skip), claimed at
  * dist = level+1 and appended to the state with every old pair made
  * inactive. Both halves stay clustered by (id, root), so the lineage
  * cut keeps that partitioning and its action returns the frontier
- * count. Edge mass is over PAIRS (each pair signals along all of its
- * id's out-edges); pairs carry no out-degree, so it comes from
- * [[Superstep.massOrBound]]. 3 Spark jobs per sparse level (frontier
- * broadcast, message shuffle's map stage, cut). Checkpoints are
- * `(id, root, dist)`; a resume re-activates the last level.
+ * count ([[Superstep.cutActive]]). PageRankJobsSpec pins the jobs per
+ * level. Checkpoints are `(id, root, dist)`; a resume re-activates the
+ * last level.
  */
 object MultiSourceBfs {
 
@@ -48,37 +46,27 @@ object MultiSourceBfs {
     val spark = graph.spark
     import spark.implicits._
 
-    def cut(state: DataFrame): Superstep.Cut = {
-      val (s, n, _) = state.graftCutActive("active")
-      Superstep.Cut(s, n, more = n > 0)
-    }
     var level = 0
     val r = Superstep.loop("msbfs", maxIterations, ckpt, ckptEvery, resume)(
       start = { resumed =>
         level = resumed.getOrElse(0)
-        cut((resumed match {
+        Superstep.cutActive((resumed match {
           case Some(k) => ckpt.get.load(spark, k).withColumn("active", col("dist") === k)
           case None => roots.map(r => (r, r, 0, true)).toDF("id", "root", "dist", "active")
         }).repartition(graph.numPartitions, col("id"), col("root")))
       },
       step = { c =>
         level += 1
-        val frontier = c.state.where(col("active"))
-        val mass = Superstep.massOrBound(graph, frontier, c.count)
-        val sparse = mass < graph.numEdges / Superstep.denseThresholdFraction &&
-          c.count < Superstep.broadcastRowCap
-        val src = frontier.select(col("id").as("src"), col("root"))
-        val joined =
-          if (sparse) graph.edgesBySrc.join(broadcast(src), "src")
-          else graph.edgesBySrc.join(src.repartition(graph.numPartitions, col("src")), "src")
         // distinct = the message combine (all messages this level carry
         // the same dist, so combining is dedup); it also clusters the
         // claims by (id, root) for the anti-join
-        val claimed = joined
+        val claimed = Superstep
+          .outEdges(graph, c.state.where(col("active")).select(col("id"), col("root")))
           .select(col("dst").as("id"), col("root")).distinct()
           .join(c.state, Seq("id", "root"), "left_anti")
           .select(col("id"), col("root"), lit(level).as("dist"), lit(true).as("active"))
-        cut(c.state.select(col("id"), col("root"), col("dist"), lit(false).as("active"))
+        Superstep.cutActive(c.state
+          .select(col("id"), col("root"), col("dist"), lit(false).as("active"))
           .union(claimed))
       },
       saved = _.select(col("id"), col("root"), col("dist")))

@@ -26,10 +26,10 @@ import graft.{LinkGraph, Superstep}
  * Scale shape: [[MultiSourceBfs]] with one root per component but
  * WITHOUT the K-fold state: each vertex is reached by exactly its own
  * component's seed, so the state is [[Bfs]]'s complete resident
- * `(id, out_degree, level, active)`, a null `level` while unreached;
- * the frontier loop is O(max component diameter) supersteps of 2
- * Spark jobs dense, 3 sparse; the conflict count is one co-partitioned
- * join over the oriented edge set.
+ * `(id, level, active)`, a null `level` while unreached; the frontier
+ * loop is O(max component diameter) supersteps of 2 Spark jobs each;
+ * the conflict count is one co-partitioned join over the oriented edge
+ * set.
  */
 object OddCycle {
 
@@ -47,11 +47,11 @@ object OddCycle {
       .select(col("id"), lit(0).as("level"))
     val r = Superstep.loop("oddcycle", maxIterations)(
       start = _ => Superstep.cutActive(graph.degrees.join(seeds, Seq("id"), "left")
-        .select(col("id"), col("out_degree"), col("level"), col("level").isNotNull.as("active"))
+        .select(col("id"), col("level"), col("level").isNotNull.as("active"))
         .repartition(np, col("id"))),
       step = c => Superstep.cutActive(Superstep.withMessages(graph, c, Seq("level"),
           signal = col("level") + 1, combine = min)
-        .select(col("id"), col("out_degree"), coalesce(col("level"), col("msg")).as("level"),
+        .select(col("id"), coalesce(col("level"), col("msg")).as("level"),
           (col("level").isNull && col("msg").isNotNull).as("active"))))
     val lv = r.state.where(col("level").isNotNull).select(col("id"), col("level"))
 

@@ -83,7 +83,6 @@ object PageRank {
       step = { c =>
         val sums = Superstep.gather(
           graph, c.state, signal = col("v"), combine = sum,
-          activeEdges = graph.numEdges, activeCount = n,
           saltBuckets = salt)
         // Unhinted, AQE sees the small message table at run time and
         // re-plans this join as a broadcast of `sums` — one more job per

@@ -122,11 +122,8 @@ object PageRankInc {
     val (aCut, nAff) = aState.graftCutCount
     if (nAff > 0) {
       // corrections to OLD out-neighbors: −sent(u) each
-      val mass = Superstep.massOrBound(oldGraph, aCut.select(col("id")), nAff)
       val corr = Superstep.gather(
-        oldGraph, aCut.select(col("id"), col("sent")),
-        signal = -col("sent"), combine = sum,
-        activeEdges = mass, activeCount = nAff)
+        oldGraph, aCut.select(col("id"), col("sent")), signal = -col("sent"), combine = sum)
       val prev = state
       state = state
         .join(aCut.select(col("id"), lit(true).as("aff")), Seq("id"), "left")
@@ -199,11 +196,8 @@ object PageRankInc {
       return next
     }
     history += nAct
-    val mass = Superstep.massOrBound(g, actCut.select(col("id")), nAct)
     val msgs = Superstep.gather(
-      g, actCut.select(col("id"), col("share")),
-      signal = col("share"), combine = sum,
-      activeEdges = mass, activeCount = nAct)
+      g, actCut.select(col("id"), col("share")), signal = col("share"), combine = sum)
     // merge: active non-dangling take (p2, lft, sent2); active
     // dangling absorb (p+r, 0); inactive pass through; everyone adds
     // incoming corrections

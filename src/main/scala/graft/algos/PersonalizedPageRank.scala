@@ -21,11 +21,9 @@ import graft.{Checkpoint, LinkGraph, Superstep}
  *
  * Unlike global PageRank (all vertices active ⇒ always dense,
  * pagerank.cpp:32-33), PPR mass RADIATES from the seeds: the nonzero
- * support starts at |S| vertices and grows one hop per iteration, so
- * early supersteps ride the sparse/push path (broadcast frontier,
- * zero edge-side shuffle) and the engine's adaptive mode switch —
- * Gemini's |E|/20 rule (core/graph.hpp:1501-1508) — picks the
- * crossover automatically. State stays sparse throughout: only
+ * support starts at |S| vertices and grows one hop per iteration; the
+ * support rows are the build side of the co-partitioned gather, so
+ * the edge side never shuffles. State stays sparse throughout: only
  * nonzero rows are materialized per superstep; zeros are filled in
  * once at the end.
  */
@@ -68,10 +66,8 @@ object PersonalizedPageRank {
                 .otherwise(col("t")).as("v")))
       },
       step = { c =>
-        val mass = Superstep.massOrBound(graph, c.state, c.count)
         val msgs = Superstep.gather(
-          graph, c.state.select(col("id"), col("v")), signal = col("v"), combine = sum,
-          activeEdges = mass, activeCount = c.count)
+          graph, c.state.select(col("id"), col("v")), signal = col("v"), combine = sum)
         // support = seeds ∪ message receivers (sparse full-outer merge)
         cut(tele
           .join(msgs, Seq("id"), "full_outer")

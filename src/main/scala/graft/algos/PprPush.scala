@@ -13,8 +13,8 @@ import graft.{LinkGraph, Superstep}
  * INDEPENDENT of graph size. The scale story is the inverse of the
  * power-iteration PPR ([[PersonalizedPageRank]] touches every edge
  * every iteration): at 10^12 edges a hub-seeded push query touches
- * only the seed's neighborhood — exactly the frontier-sparse schedule
- * the engine's push mode broadcasts for free.
+ * only the seed's neighborhood. Here each round's gather still scans
+ * the co-partitioned edge table once; only the pushing rows move.
  *
  * Synchronized integer variant (bulk push — all above-threshold
  * vertices push each round; ACL's sequential queue order only
@@ -72,12 +72,9 @@ object PprPush {
         actCut.graftFree()
         prev = state
       } else {
-        val mass = Superstep.massOrBound(
-          graph, actCut.select(col("id")), nAct)
         val msgs = Superstep.gather(
           graph, actCut.select(col("id"), col("share")),
-          signal = col("share"), combine = sum,
-          activeEdges = mass, activeCount = nAct)
+          signal = col("share"), combine = sum)
         val pushed = st.select(col("id"), col("p"), col("r"), col("active"))
           .join(actCut.select(col("id"), col("p2"), col("left")), Seq("id"), "left")
           .select(col("id"),

@@ -4,7 +4,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.LinkGraph
+import graft.{LinkGraph, Superstep}
 import graft.syntax._
 
 /**
@@ -21,13 +21,15 @@ import graft.syntax._
  * express a frontier walk but its toolkits don't sample walks); at
  * corpus scale this runs with MILLIONS of simultaneous walkers —
  * per step: one join of the walker frontier against the co-partitioned
- * out-edge table (broadcast while the frontier is small), one
- * min-struct combine per walker, no job whose cost depends on |V|.
+ * out-edge table, one min-struct combine per walker, no job whose cost
+ * depends on |V|.
  * Per-step work is O(Σ out_degree(cur)); the walker state never
  * exceeds (numWalkers) rows.
  *
- * Spark shape per step: frontier ⋈ edgesBySrc (broadcast: the frontier
- * is ≤ numWalkers rows) → attach neighbor keys from the vertex dict
+ * Spark shape per step: frontier ⋈ edgesBySrc ([[Superstep.outEdges]]:
+ * the ≤ numWalkers walker rows are the build side, one small exchange
+ * to the edge table's src partitioning) → attach neighbor keys from the
+ * vertex dict
  * (broadcast of the candidate rows, so the big table never shuffles)
  * → groupBy(walker).agg(min(struct(prio, nbr_key, nbr_id))).
  */
@@ -92,9 +94,7 @@ object RandomWalk {
     var frontiers = List(cur)
 
     for (t <- 1 to steps) {
-      // frontier ⋈ out-edges: broadcast the ≤|roots| walker rows
-      val nbrs = graph.edgesBySrc
-        .join(broadcast(cur.withColumnRenamed("id", "src")), "src")
+      val nbrs = Superstep.outEdges(graph, cur)
         .select(col("root"), col("key").as("cur_key"), col("dst"), col("weight"))
       // neighbor keys: broadcast the (small) candidate set against the
       // vertex dict so the dict never shuffles
@@ -170,8 +170,7 @@ object RandomWalk {
     var frontiers = List(cur)
 
     for (t <- 1 to steps) {
-      val nbrs = graph.edgesBySrc
-        .join(broadcast(cur.withColumnRenamed("id", "src")), "src")
+      val nbrs = Superstep.outEdges(graph, cur)
         .select(col("root"), col("prev"), col("src").as("cur_id"),
           col("key").as("cur_key"), col("dst"), col("weight"))
       val keyed = graph.vertices

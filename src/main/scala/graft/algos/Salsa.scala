@@ -64,7 +64,6 @@ object Salsa {
       val aMsgs = Superstep.gather(
         graph, hub.join(outDeg, "id"),
         signal = expr("v div deg"), combine = sum,
-        activeEdges = graph.numEdges, activeCount = graph.numVertices,
         saltBuckets = salt)
       auth = ids.join(aMsgs, Seq("id"), "left")
         .select(col("id"), coalesce(col("msg"), lit(0L)).as("v"))
@@ -78,7 +77,6 @@ object Salsa {
       val hMsgs = Superstep.gather(
         rev, auth.join(inDeg, "id"),
         signal = expr("v div deg"), combine = sum,
-        activeEdges = graph.numEdges, activeCount = graph.numVertices,
         saltBuckets = salt)
       hub = ids.join(hMsgs, Seq("id"), "left")
         .select(col("id"), coalesce(col("msg"), lit(0L)).as("v"))

@@ -63,13 +63,12 @@ object Scc {
       // alive×alive edge subset, src-clustered (semi joins keep the
       // probe side's hash partitioning; the explicit repartition is a
       // no-op when AQE already preserved it)
-      val aliveE = graph.edgesBySrc
+      val (aliveE, nE) = graph.edgesBySrc
         .join(alive.select(col("id").as("src")), Seq("src"), "left_semi")
         .join(alive.select(col("id").as("dst")), Seq("dst"), "left_semi")
         .select(col("src"), col("dst"), col("weight"))
         .repartition(parts, col("src"))
-        .graftCut
-      val nE = math.max(aliveE.count(), 1L)
+        .graftCutCount
       val sub = graph.copy(
         edgesBySrc = aliveE,
         edgesByDst = aliveE, // backward phase repartitions explicitly
@@ -84,10 +83,7 @@ object Scc {
       var it = 0
       while (active > 0) {
         it += 1
-        val mass = Superstep.massOrBound(sub, frontier, active)
-        val msgs = Superstep.gather(
-          sub, frontier, signal = col("lbl"), combine = min,
-          activeEdges = mass, activeCount = active)
+        val msgs = Superstep.gather(sub, frontier, signal = col("lbl"), combine = min)
         val (improved, n) = msgs
           .join(colors.select(col("id"), col("lbl").as("old")), Seq("id"), "left")
           .where(col("msg") < col("old"))

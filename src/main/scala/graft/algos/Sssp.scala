@@ -20,13 +20,12 @@ import graft.{Checkpoint, LinkGraph, Superstep}
  * are Double (the reference uses float; Double avoids accumulation
  * noise vs the oracle, SURVEY.md §7.4.3).
  *
- * The state `(id, out_degree, dist, active)` is complete and resident
- * (see [[Superstep.cutActive]]); each superstep is one
+ * The state `(id, dist, active)` is complete and resident (see
+ * [[Superstep.cutActive]]); each superstep is one
  * [[Superstep.withMessages]] join into the lineage cut, whose action
- * also returns the frontier count and out-edge mass. That is 2 Spark
- * jobs per dense superstep (message shuffle's map stage, cut) and 3
- * per sparse one (plus the frontier broadcast); PageRankJobsSpec pins
- * the dense count. Checkpoints are the reached rows
+ * also returns the frontier count. That is 2 Spark jobs per superstep
+ * (message shuffle's map stage, cut), pinned by PageRankJobsSpec.
+ * Checkpoints are the reached rows
  * `(id, dist, improved)`, `improved` being the frontier flag.
  */
 object Sssp {
@@ -41,22 +40,21 @@ object Sssp {
       ckpt: Option[Checkpoint] = None,
       ckptEvery: Int = 8,
       resume: Boolean = false): Result = {
-    val degs = graph.degrees.select(col("id"), col("out_degree"))
+    val ids = graph.degrees.select(col("id"))
     val reached = col("dist").isNotNull
     val r = Superstep.loop("sssp", maxIterations, ckpt, ckptEvery, resume)(
       start = resumed => Superstep.cutActive((resumed match {
         case Some(k) =>
-          degs.join(ckpt.get.load(graph.spark, k), Seq("id"), "left")
+          ids.join(ckpt.get.load(graph.spark, k), Seq("id"), "left")
             .withColumn("active", coalesce(col("improved"), lit(false)))
         case None =>
           val root = col("id") === rootId
-          degs.select(col("id"), col("out_degree"), when(root, lit(0.0)).as("dist"),
-            root.as("active"))
-      }).select(col("id"), col("out_degree"), col("dist"), col("active"))
+          ids.select(col("id"), when(root, lit(0.0)).as("dist"), root.as("active"))
+      }).select(col("id"), col("dist"), col("active"))
         .repartition(graph.numPartitions, col("id"))),
       step = c => Superstep.cutActive(Superstep.withMessages(graph, c, Seq("dist"),
           signal = col("dist") + col("weight"), combine = min)
-        .select(col("id"), col("out_degree"),
+        .select(col("id"),
           least(col("dist"), col("msg")).as("dist"),
           // the write_min that won: a first reach or a shorter distance
           coalesce(col("msg") < col("dist"), col("msg").isNotNull).as("active"))),

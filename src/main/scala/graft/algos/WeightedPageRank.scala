@@ -65,7 +65,6 @@ object WeightedPageRank {
         val msgs = Superstep.gather(
           graph, c.state.select(col("id"), col("v")),
           signal = col("v") * col("weight"), combine = sum,
-          activeEdges = graph.numEdges, activeCount = n,
           saltBuckets = salt)
         val next = wout
           .join(msgs, Seq("id"), "left")

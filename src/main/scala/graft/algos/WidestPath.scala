@@ -29,8 +29,8 @@ import graft.{LinkGraph, Superstep}
  * already dominated. So running EXACTLY `maxHops` supersteps (or
  * stopping early on an empty frontier) yields the exact hop-bounded
  * answer. Same resident state and superstep as [[Sssp]], with
- * `(id, out_degree, cap, active)` and a null `cap` while unreached:
- * 2 Spark jobs per dense superstep, 3 per sparse one.
+ * `(id, cap, active)` and a null `cap` while unreached: 2 Spark jobs
+ * per superstep.
  */
 object WidestPath {
 
@@ -47,12 +47,11 @@ object WidestPath {
     val root = col("id") === rootId
     val r = Superstep.loop("widest", maxHops)(
       start = _ => Superstep.cutActive(graph.degrees
-        .select(col("id"), col("out_degree"), when(root, lit(RootCap)).as("cap"),
-          root.as("active"))
+        .select(col("id"), when(root, lit(RootCap)).as("cap"), root.as("active"))
         .repartition(graph.numPartitions, col("id"))),
       step = c => Superstep.cutActive(Superstep.withMessages(graph, c, Seq("cap"),
           signal = least(col("cap"), col("weight")), combine = max)
-        .select(col("id"), col("out_degree"),
+        .select(col("id"),
           greatest(col("cap"), col("msg")).as("cap"),
           coalesce(col("msg") > col("cap"), col("msg").isNotNull).as("active"))))
     Result(r.state.where(col("cap").isNotNull).select(col("id"), col("cap")), r.iterations)

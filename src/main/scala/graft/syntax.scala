@@ -13,10 +13,10 @@ object syntax {
     /** Cut + the sum of a double column, in the same single job. */
     def graftCutSum(sumCol: String): (DataFrame, Double) =
       org.apache.spark.sql.GraftLineage.cutSummed(df, sumCol)
-    /** Cut + (active rows, Σ `massCol` over them) of a state that flags
-     * its active rows, in the same single job. */
-    def graftCutActive(activeCol: String, massCol: Option[String] = None): (DataFrame, Long, Long) =
-      org.apache.spark.sql.GraftLineage.cutActive(df, activeCol, massCol)
+    /** Cut + the number of active rows of a state that flags them, in
+     * the same single job. */
+    def graftCutActive(activeCol: String): (DataFrame, Long) =
+      org.apache.spark.sql.GraftLineage.cutActive(df, activeCol)
     /** Unpersist a superseded graftCut state (no-op otherwise). */
     def graftFree(): Unit = org.apache.spark.sql.GraftLineage.free(df)
   }

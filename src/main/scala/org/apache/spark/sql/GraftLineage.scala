@@ -56,20 +56,12 @@ object GraftLineage {
   }
 
   /** [[cut]] of a resident state that flags its active rows: also
-   * returns the active row count and the sum of the long `massCol`
-   * over active rows (0 without one), from the same single job. With
-   * `massCol` = out-degree this is the frontier's out-edge mass, the
-   * statistic Gemini's process_vertices returns before every superstep
-   * (core/graph.hpp:1502-1507). */
-  def cutActive(df: DataFrame, activeCol: String, massCol: Option[String]): (DataFrame, Long, Long) = {
+   * returns the active row count, from the same single job. */
+  def cutActive(df: DataFrame, activeCol: String): (DataFrame, Long) = {
     val a = indexOf(df, activeCol)
-    val m = massCol.map(indexOf(df, _)).getOrElse(-1)
-    val (cut, (n, mass)) = materialize(df)(_.aggregate((0L, 0L))(
-      (acc, row) =>
-        if (row.isNullAt(a) || !row.getBoolean(a)) acc
-        else (acc._1 + 1, acc._2 + (if (m < 0 || row.isNullAt(m)) 0L else row.getLong(m))),
-      (x, y) => (x._1 + y._1, x._2 + y._2)))
-    (cut, n, mass)
+    materialize(df)(_.aggregate(0L)(
+      (n, row) => if (row.isNullAt(a) || !row.getBoolean(a)) n else n + 1,
+      _ + _))
   }
 
   /** [[cut]] that also counts rows per bucket: `bucketCol` is an int

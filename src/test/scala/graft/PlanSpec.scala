@@ -70,8 +70,7 @@ class PlanSpec extends SparkSpec {
       .repartition(numPartitions, col("id"))
       .graftCut
     val msgs = Superstep.gather(
-      g, state, signal = col("v"), combine = sum,
-      activeEdges = Long.MaxValue, activeCount = g.numVertices)
+      g, state, signal = col("v"), combine = sum)
     val plan = executed(msgs)
     assert(broadcasts(plan) == 0, s"dense mode must not broadcast:\n$plan")
     assert(shuffles(plan) == 1,
@@ -95,8 +94,7 @@ class PlanSpec extends SparkSpec {
         .repartition(numPartitions, col("id"))
         .graftCut
       val msgs = Superstep.gather(
-        g, state, signal = col("v"), combine = sum,
-        activeEdges = Long.MaxValue, activeCount = g.numVertices)
+        g, state, signal = col("v"), combine = sum)
       val plan = executed(msgs)
       assert(broadcasts(plan) == 0,
         s"dense mode must not broadcast (the stats-free state makes the edges look small):\n$plan")
@@ -105,18 +103,22 @@ class PlanSpec extends SparkSpec {
     }
   }
 
-  test("sparse gather: frontier broadcast, no edge-side shuffle before the combine") {
-    val frontier = g.degrees.limit(3)
-      .select(col("id"), lit(1.0).as("v"))
-      .repartition(numPartitions, col("id"))
-      .graftCut
-    val msgs = Superstep.gather(
-      g, frontier, signal = col("v"), combine = sum,
-      activeEdges = 0L, activeCount = 3L)
-    val plan = executed(msgs)
-    assert(broadcasts(plan) == 1, s"sparse mode must broadcast the frontier:\n$plan")
-    assert(shuffles(plan) <= 1,
-      s"sparse gather shuffles at most the combined messages (got ${shuffles(plan)}):\n$plan")
+  test("small frontier: no broadcast, only the message shuffle") {
+    // three active vertices, clustered by id as a resident state's
+    // active rows are, under thresholds that make both the frontier and
+    // the edges broadcast candidates: the same co-partitioned join as a
+    // dense gather
+    withProductionThresholds {
+      val frontier = g.degrees.limit(3)
+        .select(col("id"), lit(1.0).as("v"))
+        .repartition(numPartitions, col("id"))
+        .graftCut
+      val msgs = Superstep.gather(g, frontier, signal = col("v"), combine = sum)
+      val plan = executed(msgs)
+      assert(broadcasts(plan) == 0, s"a small frontier must not be broadcast:\n$plan")
+      assert(shuffles(plan) == 1,
+        s"a small frontier's gather shuffles ONLY the combined messages (got ${shuffles(plan)}):\n$plan")
+    }
   }
 
   test("salted gather adds exactly one extra combine stage, still no edge shuffle") {
@@ -125,8 +127,7 @@ class PlanSpec extends SparkSpec {
       .repartition(numPartitions, col("id"))
       .graftCut
     val msgs = Superstep.gather(
-      g, state, signal = col("v"), combine = sum,
-      activeEdges = Long.MaxValue, activeCount = g.numVertices, saltBuckets = 4)
+      g, state, signal = col("v"), combine = sum, saltBuckets = 4)
     val plan = executed(msgs)
     assert(shuffles(plan) == 2,
       s"salted gather = per-(dst,salt) combine + final combine (got ${shuffles(plan)}):\n$plan")

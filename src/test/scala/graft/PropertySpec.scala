@@ -5,6 +5,7 @@ import org.scalacheck.{Gen, Prop, Test => SCTest}
 import org.scalacheck.Prop.propBoolean
 
 import graft.algos.{ConnectedComponents, PageRank}
+import graft.syntax._
 
 /** Property-based tests (SURVEY.md §5.4) on seeded random graphs. */
 class PropertySpec extends SparkSpec {
@@ -23,23 +24,36 @@ class PropertySpec extends SparkSpec {
     } yield (a, b))
   } yield edges.distinct
 
-  test("push-plan ≡ pull-plan: the two gather modes compute identical supersteps") {
-    // The key Gemini property (pagerank.cpp:53-74 push≡pull): a
-    // sparse/broadcast gather and a dense/co-partitioned gather over
-    // the same frontier must combine to identical messages.
-    check(Prop.forAll(graphGen) { edges =>
+  test("random sub-frontier gather matches a join-then-group reference, by id or not") {
+    // The one gather path must combine exactly the active vertices'
+    // out-edge messages, whatever the frontier's size and however its
+    // rows arrive partitioned: a resident state's active rows are
+    // clustered by id, a fresh frontier need not be. The reference is
+    // the plain relational superstep, evaluated on the driver.
+    val gen = for {
+      edges <- graphGen
+      active <- Gen.listOfN(16, Gen.oneOf(true, false))
+    } yield (edges, active)
+    check(Prop.forAll(gen) { case (edges, active) =>
       edges.nonEmpty ==> {
         val g = graphOf(edges, symmetric = false)
-        val state = g.degrees.select(col("id"), (col("id") * 7 + 1).cast("double").as("v"))
-        def run(forcedMass: Long) = Superstep.gather(
-          g, state, signal = col("v"), combine = min,
-          activeEdges = forcedMass, activeCount = g.numVertices)
-          .collect().map(r => (r.getLong(0), r.getDouble(1))).toSet
-        val push = run(0L) // below threshold → broadcast/push
-        val pull = run(Long.MaxValue) // above → co-partitioned/pull
-        val same = push == pull
+        val byId = indexOf(g)
+        val chosen = byId.collect { case (id, i) if active(i) => id }.toSeq
+        val frontier = g.degrees.where(col("id").isin(chosen: _*))
+          .select(col("id"), (col("id") * 7 + 1).cast("double").as("v"))
+        val v = chosen.map(id => id -> (id * 7 + 1).toDouble).toMap
+        val expected = g.edgesBySrc.collect().toSeq
+          .map(r => (r.getLong(0), r.getLong(1)))
+          .collect { case (src, dst) if v.contains(src) => dst -> v(src) }
+          .groupMapReduce(_._1)(_._2)(math.min)
+        def gathered(layout: org.apache.spark.sql.DataFrame) = Superstep.gather(
+          g, layout.graftCut, signal = col("v"), combine = min)
+          .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
+        val clustered = gathered(frontier.repartition(numPartitions, col("id")))
+        val scattered = gathered(frontier.repartition(3, col("v") % 3))
         g.unpersist()
-        same
+        (clustered == expected) :| s"clustered: $clustered != $expected" &&
+          (scattered == expected) :| s"not clustered by id: $scattered != $expected"
       }
     })
   }
@@ -54,9 +68,7 @@ class PropertySpec extends SparkSpec {
         val state = g.degrees.select(col("id"), (col("id") * 7 + 1).cast("double").as("v"))
         def run(saltBuckets: Int, combiner: org.apache.spark.sql.Column => org.apache.spark.sql.Column) =
           Superstep.gather(
-            g, state, signal = col("v"), combine = combiner,
-            activeEdges = Long.MaxValue, activeCount = g.numVertices,
-            saltBuckets = saltBuckets)
+            g, state, signal = col("v"), combine = combiner, saltBuckets = saltBuckets)
             .collect().map(r => (r.getLong(0), r.getDouble(1))).toSet
         val same = run(0, sum) == run(4, sum) && run(0, min) == run(4, min)
         g.unpersist()
