@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.sources.BucketedLayout
@@ -18,15 +17,7 @@ object PartitionAudit {
   def main(args: Array[String]): Unit = {
     val sfDir = args.lift(0).getOrElse("/root/testdata/sf0.1")
     val nb = args.lift(1).map(_.toInt).getOrElse(32)
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .appName("graft-partition-audit")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.file.transferTo", "false")
-      .config("spark.shuffle.sort.bypassMergeThreshold", "8")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Bench.session("8")
     spark.sparkContext.setLogLevel("WARN")
 
     def stats(xs: Seq[Long]): String = {

@@ -30,12 +30,17 @@ import graft.{Checkpoint, LinkGraph, Superstep}
  * a NaN column is not a useful contract). Output carries σ too —
  * the reference prints the (dependency, num_paths) pair.
  *
- * Checkpoint: the forward phase (the expensive frontier loop) saves
- * the cumulative (id, sigma, lvl) table per level; resume rebuilds
- * the levels list from the latest snapshot and continues the
- * expansion. The backward pass always runs from the reconstructed
- * levels. All per-level cuts (forward σ levels and backward dep
- * frontiers) are freed once the final bc table materializes.
+ * Both passes are one body for [[run]] (rows keyed by `id`) and
+ * [[runBatch]] (keyed by `(id, root)`). The forward pass runs on
+ * [[Superstep.loop]] with the reached rows `(keys…, sigma, lvl,
+ * active)` as its resident state, the MultiSourceBfs shape: the
+ * level's messages are summed per key, anti-joined against the state
+ * and appended as the new active level, all inside one lineage cut.
+ * The backward pass reads each level as `state.where(lvl === l)`.
+ * Checkpoints are `(keys…, sigma, lvl)` after each forward superstep;
+ * a resume re-activates the last level and replays the rest of the
+ * forward pass, and the backward pass always runs from the final
+ * forward state.
  */
 object Betweenness {
 
@@ -49,85 +54,6 @@ object Betweenness {
       resume: Boolean = false): Result = {
     val spark = graph.spark
     import spark.implicits._
-
-    // ---- forward: levels(k) = (id, sigma) of vertices at depth k
-    var levels = List[DataFrame]()
-    var frontier: DataFrame = null
-    var visited: DataFrame = null
-    var frontierCount = 0L
-    val resumed = if (resume) ckpt.flatMap(_.latestIteration()) else None
-    resumed match {
-      case Some(k) =>
-        val st = ckpt.get.load(spark, k)
-          .repartition(graph.numPartitions, col("id")).graftCut
-        // rebuild the per-level list from the cumulative snapshot
-        val maxLvl = st.agg(max(col("lvl"))).first().getInt(0)
-        levels = (0 to maxLvl).map(l =>
-          st.where(col("lvl") === l).select(col("id"), col("sigma")).graftCut)
-          .reverse.toList
-        frontier = levels.head
-        visited = st.select(col("id")).graftCut
-        frontierCount = frontier.count()
-      case None =>
-        frontier = Seq((rootId, 1.0)).toDF("id", "sigma")
-          .repartition(graph.numPartitions, col("id")).graftCut
-        visited = frontier.select(col("id")).graftCut
-        levels = frontier :: levels
-        frontierCount = 1L
-    }
-
-    var visitedBase = visited
-    while (frontierCount > 0) {
-      val msgs = Superstep.gather(graph, frontier, signal = col("sigma"), combine = sum)
-      val (next, n) = msgs.join(visited, Seq("id"), "left_anti")
-        .select(col("id"), col("msg").as("sigma")).graftCutCount
-      frontierCount = n
-      if (frontierCount > 0) {
-        // append-only: the per-level frontiers are already cut, so the
-        // union is cheap lineage; compact + free the base periodically
-        visited = visited.unionByName(next.select(col("id")))
-        if (levels.length % 8 == 0) {
-          visited = visited.graftCut
-          visitedBase.graftFree()
-          visitedBase = visited
-        }
-        frontier = next
-        levels = next :: levels
-        if (ckpt.nonEmpty && (levels.length % ckptEvery == 0)) {
-          val cumulative = levels.reverse.zipWithIndex.map { case (lvl, l) =>
-            lvl.select(col("id"), col("sigma"), lit(l).as("lvl"))
-          }.reduce(_ unionByName _)
-          ckpt.get.save(cumulative, levels.length - 1, frontierCount)
-        }
-      }
-    }
-    // levels head = deepest, last = root level
-    val depth = levels.length - 1
-
-    // ---- backward on the transposed graph
-    val t = graph.transpose
-    var depFrontier: DataFrame = null // (id, dep) of the level just processed
-    var done: List[DataFrame] = Nil // finished (id, dep) per level
-    levels.foreach { lvl =>
-      val withInv = lvl.select(col("id"), (lit(1.0) / col("sigma")).as("inv"))
-      val dep =
-        if (depFrontier == null) withInv.select(col("id"), col("inv").as("dep"))
-        else {
-          val msgs = Superstep.gather(t, depFrontier, signal = col("dep"), combine = sum)
-          // only THIS level's members may receive (visited guard,
-          // bc.cpp:139,160): restrict the merge to lvl
-          withInv.join(msgs, Seq("id"), "left")
-            .select(col("id"), (col("inv") + coalesce(col("msg"), lit(0.0))).as("dep"))
-        }
-      val cut = dep.graftCut
-      depFrontier = cut
-      done = cut :: done
-    }
-
-    val allDeps = done.reduce(_ unionByName _)
-    val sigmas = levels.reverse.zipWithIndex.map { case (lv, l) =>
-      lv.select(col("id"), col("sigma"), lit(l).as("lvl"))
-    }.reduce(_ unionByName _)
     // Emit the reference's per-vertex report pair (dependencies,
     // num_paths) — bc.cpp:184-190 prints both; σ is an exact integer
     // so it doubles as a hash-exact oracle column. dep and the BFS
@@ -135,18 +61,11 @@ object Betweenness {
     // the EXACT backward-pass dependency instead of re-deriving it
     // from bc — the (bc+1)/σ inversion loses low double bits for
     // large dep·σ.
-    val bc = allDeps.join(sigmas, "id")
-      .select(col("id"), col("sigma"), (col("dep") * col("sigma") - 1.0).as("bc"),
-        col("dep"), col("lvl"))
-      .graftCut
-    ckpt.foreach { c =>
-      val cumulative = levels.reverse.zipWithIndex.map { case (lvl, l) =>
-        lvl.select(col("id"), col("sigma"), lit(l).as("lvl"))
-      }.reduce(_ unionByName _)
-      c.save(cumulative, depth, 0L)
-    }
-    // free every retained per-level cut now that bc is materialized
-    (visitedBase :: levels ::: done).filter(_ ne bc).distinct.foreach(_.graftFree())
+    val (bc, depth) = brandes(graph, Seq("id"),
+      Seq((rootId, 1.0, 0, true)).toDF("id", "sigma", "lvl", "active"),
+      ckpt, ckptEvery, resume)(
+      _.select(col("id"), col("sigma"), (col("dep") * col("sigma") - 1.0).as("bc"),
+        col("dep"), col("lvl")))
     Result(bc, depth)
   }
 
@@ -168,7 +87,7 @@ object Betweenness {
    * report shape, bc.cpp:184-190) so the estimator stays a trivial
    * grouped sum.
    *
-   * Roots advance in lockstep: levels(l) holds (id, root, sigma) for
+   * Roots advance in lockstep: level l holds (id, root, sigma) for
    * every pair at distance l FROM ITS ROOT; a root whose search
    * exhausts early simply stops contributing rows. The backward
    * unwind processes global levels deepest-first — a shallow root's
@@ -184,93 +103,73 @@ object Betweenness {
     require(roots.nonEmpty && roots.distinct.size == roots.size, "roots must be distinct")
     val spark = graph.spark
     import spark.implicits._
-
-    def cumulative(lvls: List[DataFrame]): DataFrame =
-      lvls.reverse.zipWithIndex.map { case (lvl, l) =>
-        lvl.select(col("id"), col("root"), col("sigma"), lit(l).as("lvl"))
-      }.reduce(_ unionByName _)
-
-    // ---- forward: per-level (id, root, sigma)
-    var levels = List[DataFrame]()
-    var frontier: DataFrame = null
-    var visited: DataFrame = null
-    var frontierCount = 0L
-    val resumed = if (resume) ckpt.flatMap(_.latestIteration()) else None
-    resumed match {
-      case Some(k) =>
-        val st = ckpt.get.load(spark, k)
-          .repartition(graph.numPartitions, col("id")).graftCut
-        val maxLvl = st.agg(max(col("lvl"))).first().getInt(0)
-        levels = (0 to maxLvl).map(l =>
-          st.where(col("lvl") === l).select(col("id"), col("root"), col("sigma")).graftCut)
-          .reverse.toList
-        frontier = levels.head
-        visited = st.select(col("id"), col("root")).graftCut
-        frontierCount = frontier.count()
-      case None =>
-        frontier = roots.map(r => (r, r, 1.0)).toDF("id", "root", "sigma")
-          .repartition(graph.numPartitions, col("id")).graftCut
-        visited = frontier.select(col("id"), col("root")).graftCut
-        levels = frontier :: levels
-        frontierCount = roots.size.toLong
-    }
-    var visitedBase = visited
-
-    def gatherBy(g: LinkGraph, active: DataFrame, valueCol: String): DataFrame =
-      Superstep.outEdges(g, active.select(col("id"), col("root"), col(valueCol)))
-        .groupBy(col("dst").as("id"), col("root"))
-        .agg(sum(col(valueCol)).as(valueCol))
-
-    while (frontierCount > 0) {
-      val msgs = gatherBy(graph, frontier, "sigma")
-      val (next, n) = msgs.join(visited, Seq("id", "root"), "left_anti")
-        .graftCutCount
-      frontierCount = n
-      if (frontierCount > 0) {
-        visited = visited.unionByName(next.select(col("id"), col("root")))
-        if (levels.length % 8 == 0) {
-          visited = visited.graftCut
-          visitedBase.graftFree()
-          visitedBase = visited
-        }
-        frontier = next
-        levels = next :: levels
-        if (ckpt.nonEmpty && (levels.length % ckptEvery == 0))
-          ckpt.get.save(cumulative(levels), levels.length - 1, frontierCount)
-      }
-    }
-    val depth = levels.length - 1
-
-    // ---- backward on the transposed graph, global levels deepest-first
-    val t = graph.transpose
-    var depFrontier: DataFrame = null // (id, root, dep) of the level just processed
-    var done: List[DataFrame] = Nil
-    levels.foreach { lvl =>
-      val withInv = lvl.select(col("id"), col("root"), (lit(1.0) / col("sigma")).as("inv"))
-      val dep =
-        if (depFrontier == null)
-          withInv.select(col("id"), col("root"), col("inv").as("dep"))
-        else {
-          val msgs = gatherBy(t, depFrontier, "dep")
-          // visited guard (bc.cpp:139,160): only THIS level's members
-          // of the SAME root's search may receive
-          withInv.join(msgs, Seq("id", "root"), "left")
-            .select(col("id"), col("root"),
-              (col("inv") + coalesce(col("dep"), lit(0.0))).as("dep"))
-        }
-      val cut = dep.graftCut
-      depFrontier = cut
-      done = cut :: done
-    }
-
-    val allDeps = done.reduce(_ unionByName _)
-    val sigmas = levels.reduce(_ unionByName _)
-    val bc = allDeps.join(sigmas, Seq("id", "root"))
-      .select(col("id"), col("root"), col("sigma"),
-        (col("dep") * col("sigma") - 1.0).as("bc"))
-      .graftCut
-    ckpt.foreach(_.save(cumulative(levels), depth, 0L))
-    (visitedBase :: levels ::: done).filter(_ ne bc).distinct.foreach(_.graftFree())
+    val (bc, depth) = brandes(graph, Seq("id", "root"),
+      roots.map(r => (r, r, 1.0, 0, true)).toDF("id", "root", "sigma", "lvl", "active"),
+      ckpt, ckptEvery, resume)(
+      _.select(col("id"), col("root"), col("sigma"),
+        (col("dep") * col("sigma") - 1.0).as("bc")))
     BatchResult(bc, depth)
+  }
+
+  /** The forward and backward passes over rows keyed by `keys` (`id`
+   * first), from the root rows `(keys…, sigma = 1, lvl = 0, active)`.
+   * `out` selects the result columns from `(keys…, dep, sigma, lvl)`;
+   * its cut is returned with the depth, and every other cut is freed. */
+  private def brandes(
+      graph: LinkGraph,
+      keys: Seq[String],
+      roots: DataFrame,
+      ckpt: Option[Checkpoint],
+      ckptEvery: Int,
+      resume: Boolean)(
+      out: DataFrame => DataFrame): (DataFrame, Int) = {
+    val k = keys.map(col)
+    // Σ of column v over each key's in-edges in g, keyed like the rows
+    def sumOver(g: LinkGraph, rows: DataFrame, v: String): DataFrame =
+      Superstep.outEdges(g, rows.select(k :+ col(v): _*))
+        .groupBy(col("dst").as("id") +: k.tail: _*)
+        .agg(sum(col(v)).as(v))
+
+    // ---- forward: level-synchronous path counts
+    var level = 0
+    val r = Superstep.loop("bc", Int.MaxValue, ckpt, ckptEvery, resume)(
+      start = { resumed =>
+        level = resumed.getOrElse(0)
+        val st = resumed match {
+          case Some(i) => ckpt.get.load(graph.spark, i).withColumn("active", col("lvl") === i)
+          case None => roots
+        }
+        Superstep.cutActive(st.repartition(graph.numPartitions, k: _*))
+      },
+      step = { c =>
+        level += 1
+        val next = sumOver(graph, c.state.where(col("active")), "sigma")
+          .join(c.state.hint("shuffle_hash"), keys, "left_anti")
+          .select(k :+ col("sigma") :+ lit(level).as("lvl") :+ lit(true).as("active"): _*)
+        Superstep.cutActive(c.state.withColumn("active", lit(false)).unionByName(next))
+      },
+      saved = _.select(k :+ col("sigma") :+ col("lvl"): _*))
+    // the last forward superstep found no new level
+    val depth = r.iterations - 1
+    val state = r.state
+
+    // ---- backward on the transposed graph, levels deepest-first
+    val t = graph.transpose
+    var deps = List[DataFrame]() // (keys…, dep) per level, head = the level just processed
+    for (l <- depth to 0 by -1) {
+      val inv = state.where(col("lvl") === l)
+        .select(k :+ (lit(1.0) / col("sigma")).as("inv"): _*)
+      val dep =
+        if (deps.isEmpty) inv.withColumnRenamed("inv", "dep")
+        else
+          // only THIS level's members (of the same root's search) may
+          // receive: the visited guard, bc.cpp:139,160
+          inv.join(sumOver(t, deps.head, "dep").hint("shuffle_hash"), keys, "left")
+            .select(k :+ (col("inv") + coalesce(col("dep"), lit(0.0))).as("dep"): _*)
+      deps = dep.graftCut :: deps
+    }
+    val bc = out(deps.reduce(_ unionByName _).join(state, keys)).graftCut
+    (state :: deps).foreach(_.graftFree())
+    (bc, depth)
   }
 }

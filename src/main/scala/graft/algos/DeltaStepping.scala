@@ -1,6 +1,6 @@
 package graft.algos
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
@@ -27,26 +27,26 @@ import graft.{Checkpoint, LinkGraph, Superstep}
  * row is hard evidence the bucketed schedule changes only the job
  * count, never a distance.
  *
- * State is sparse (reached vertices only): the distance table is a
- * compacted merge chain, `pending` (ids not yet relaxed
- * from their current distance) and the per-bucket member set are id
- * frames that join distance co-partitioned. The light/heavy edge
- * splits are filtered views of the resident clustered layout, persisted
- * once — no re-shuffle of the edge side anywhere.
+ * The state is sparse: the reached rows only, `(id, dist, pending)`,
+ * where `pending` marks the ids not yet relaxed from their current
+ * distance. It is also the checkpoint's layout. One
+ * [[Superstep.loop]] iteration is one bucket: its light rounds and its
+ * heavy relaxation each run one gather and cut the state once, and the
+ * `maxRounds` budget ends the bucket loop through `more`. The
+ * light/heavy edge splits are filtered views of the resident
+ * clustered layout, persisted once — no re-shuffle of the edge side
+ * anywhere.
  */
 object DeltaStepping {
 
   final case class Result(distances: DataFrame, buckets: Int, rounds: Int)
 
-  val compactEvery = 4
-
   /** @return distances (id, dist) for REACHED vertices only.
    *
-   * Checkpointing snapshots at BUCKET boundaries (dist + the pending
-   * flag, Sssp's layout): between buckets the two tables are the
-   * complete algorithm state — the bucket index itself is recomputed
-   * from the pending minimum — so a resumed run replays the remaining
-   * buckets exactly (Round3Spec). */
+   * Checkpointing snapshots at BUCKET boundaries: between buckets the
+   * state is the complete algorithm state — the bucket index itself is
+   * recomputed from the pending minimum — so a resumed run replays the
+   * remaining buckets exactly (Round3Spec). */
   def run(
       graph: LinkGraph,
       rootId: Long,
@@ -57,6 +57,7 @@ object DeltaStepping {
       resume: Boolean = false): Result = {
     require(graph.symmetric,
       "the O(1) light/heavy transpose below swaps columns — symmetric graphs only")
+    require(maxRounds >= 1, "delta-stepping needs at least one round")
     val spark = graph.spark
     import spark.implicits._
     val np = graph.numPartitions
@@ -73,129 +74,84 @@ object DeltaStepping {
     val gLight = sub(lightE, lightE.count())
     val gHeavy = sub(heavyE, heavyE.count())
 
-    var dist: DataFrame = null
-    var pending0: DataFrame = null
-    var startBucket = 0
-    val resumed = if (resume) ckpt.flatMap(_.latestIteration()) else None
-    resumed match {
-      case Some(k) =>
-        val st = ckpt.get.load(spark, k)
-          .repartition(np, col("id")).graftCut
-        dist = st.select(col("id"), col("dist")).graftCut
-        pending0 = st.where(col("pending")).select(col("id")).graftCut
-        st.graftFree()
-        startBucket = k
-      case None =>
-        dist = Seq((rootId, 0.0)).toDF("id", "dist")
-          .repartition(np, col("id")).graftCut
+    /** One relaxation of `s` along `g` from its rows matching `from`:
+     * those rows stop pending unless improved, improved rows take the
+     * new distance and pend, and newly reached ids are appended. Both
+     * union halves read `msgs` as the left side of their join, so its
+     * two copies plan alike and share one exchange; both stay clustered
+     * by id, so the cut keeps the state's partitioning. The cut's
+     * action counts the rows matching `hot`, kept as a column. */
+    def relax(s: DataFrame, g: LinkGraph, from: Column, hot: Column): (DataFrame, Long) = {
+      val msgs = Superstep.gather(g, s.where(from).select(col("id"), col("dist")),
+        signal = col("dist") + col("weight"), combine = min)
+      val improved = col("msg").isNotNull && col("msg") < col("dist")
+      msgs.hint("shuffle_hash").join(s, Seq("id"), "right")
+        .select(col("id"),
+          when(improved, col("msg")).otherwise(col("dist")).as("dist"),
+          (improved || col("pending") && !from).as("pending"))
+        .unionByName(msgs.join(s.hint("shuffle_hash"), Seq("id"), "left_anti")
+          .select(col("id"), col("msg").as("dist"), lit(true).as("pending")))
+        .withColumn("hot", hot)
+        .graftCutActive("hot")
     }
 
-    // Free discipline: f/improved cuts are referenced by TWO lazy
-    // chains (pending's anti-join/union tree and dist's merge chain),
-    // so nothing is freed mid-bucket — superseded cuts collect in
-    // `junk` and are freed only at bucket end, AFTER both chains have
-    // been re-materialized past them (dist.graftCut + pending cut).
-    var junk = List[DataFrame]()
-    var distDirty = false
-    def mergeDist(improved: DataFrame): Unit = {
-      dist = dist
-        .join(improved.select(col("id"), col("dist").as("nd")), Seq("id"), "full_outer")
-        .select(col("id"), coalesce(col("nd"), col("dist")).as("dist"))
-      distDirty = true
-    }
-
-    var distBase = dist // the cut anchoring the current merge chain
-    // ids whose current distance has not been relaxed from yet
-    var pending =
-      if (pending0 != null) pending0
-      else dist.select(col("id")).graftCut
-    var nPending = pending.count()
-    var buckets = startBucket
     var rounds = 0
-
-    while (nPending > 0 && rounds < maxRounds) {
-      val lo = math.floor(
-        pending.join(dist, "id").agg(min(col("dist"))).first().getDouble(0) / delta) * delta
-      val hi = lo + delta
-      buckets += 1
-
-      // ---- light fixpoint inside the bucket ----
-      var members: DataFrame = null // ids settled into this bucket
-      var inner = true
-      while (inner && rounds < maxRounds) {
-        val (f, nf) = pending.join(dist, "id").where(col("dist") < hi).graftCutCount
-        rounds += 1
-        junk = f :: junk
-        if (nf == 0) inner = false
-        else {
-          pending = pending.join(f.select(col("id")), Seq("id"), "left_anti")
-          members =
-            if (members == null) f.select(col("id"))
-            else members.unionByName(f.select(col("id")))
-          if (gLight.numEdges > 0) {
-            val msgs = Superstep.gather(
-              gLight, f, signal = col("dist") + col("weight"), combine = min)
-            val (improved, n) = msgs
-              .join(dist.select(col("id"), col("dist").as("old")), Seq("id"), "left")
-              .where(col("old").isNull || col("msg") < col("old"))
-              .select(col("id"), col("msg").as("dist"))
-              .graftCutCount
-            junk = improved :: junk
-            if (n > 0) {
-              mergeDist(improved)
-              pending = pending.unionByName(improved.select(col("id"))).distinct()
-            }
-          }
-        }
-      }
-
-      // ---- one heavy relaxation from every member of the settled bucket ----
-      if (members != null && gHeavy.numEdges > 0) {
-        val (bm, nb) = members.distinct().join(dist, "id").graftCutCount
-        rounds += 1
-        junk = bm :: junk
-        if (nb > 0) {
-          val msgs = Superstep.gather(
-            gHeavy, bm, signal = col("dist") + col("weight"), combine = min)
-          val (improved, n) = msgs
-            .join(dist.select(col("id"), col("dist").as("old")), Seq("id"), "left")
-            .where(col("old").isNull || col("msg") < col("old"))
-            .select(col("id"), col("msg").as("dist"))
-            .graftCutCount
-          junk = improved :: junk
-          if (n > 0) {
-            mergeDist(improved)
-            pending = pending.unionByName(improved.select(col("id"))).distinct()
-          }
-        }
-      }
-
-      // ---- bucket end: re-materialize both chains, then free ----
-      if (distDirty) {
-        val d2 = dist.graftCut
-        junk = distBase :: junk
-        dist = d2
-        distBase = d2
-        distDirty = false
-      }
-      val (p2, np2) = pending.graftCutCount
-      junk = pending :: junk
-      pending = p2
-      nPending = np2
-      junk.filter(d => (d ne dist) && (d ne pending)).foreach(_.graftFree())
-      junk = Nil
-      if (ckpt.nonEmpty && (nPending == 0 || buckets % ckptEvery == 0))
-        ckpt.get.save(
-          dist.join(pending.select(col("id"), lit(true).as("pending")), Seq("id"), "left")
-            .select(col("id"), col("dist"),
-              coalesce(col("pending"), lit(false)).as("pending")),
-          buckets, nPending)
+    var low = 0.0 // the pending minimum of the last state counted
+    /** The pending rows' count, and their minimum distance into `low`,
+     * in one job (a DataFrame aggregate plans a second, its exchange). */
+    def pendingCount(s: DataFrame): Long = {
+      val (n, m) = s.where(col("pending")).select(col("dist")).queryExecution.toRdd
+        .aggregate((0L, Double.PositiveInfinity))(
+          (a, row) => (a._1 + 1, math.min(a._2, row.getDouble(0))),
+          (a, b) => (a._1 + b._1, math.min(a._2, b._2)))
+      low = m
+      n
     }
+    val r = Superstep.loop("delta", Int.MaxValue, ckpt, ckptEvery, resume)(
+      start = { resumed =>
+        val st = resumed match {
+          case Some(k) => ckpt.get.load(spark, k)
+          case None => Seq((rootId, 0.0, true)).toDF("id", "dist", "pending")
+        }
+        val s = st.repartition(np, col("id")).graftCut
+        val n = pendingCount(s)
+        Superstep.Cut(s, n, more = n > 0)
+      },
+      step = { c =>
+        var s = c.state
+        def advance(g: LinkGraph, from: Column, hot: Column): Long = {
+          val (next, k) = relax(s, g, from, hot)
+          if (s ne c.state) s.graftFree()
+          s = next
+          k
+        }
+        val lo = math.floor(low / delta) * delta
+        val hi = lo + delta
+        // ---- light fixpoint inside the bucket: each cut counts the rows
+        // still light-pending, and the first round always relaxes (the
+        // pending minimum is below hi), so s is a new cut ----
+        val light = col("pending") && col("dist") < hi
+        var nLight = 1L
+        var inner = true
+        while (inner && rounds < maxRounds) {
+          rounds += 1
+          if (nLight == 0) inner = false
+          else nLight = advance(gLight, light, light)
+        }
+        // ---- one heavy relaxation from every row settled in the bucket ----
+        if (gHeavy.numEdges > 0) {
+          rounds += 1
+          advance(gHeavy, !col("pending") && col("dist") >= lo && col("dist") < hi, lit(false))
+        }
+        val n = pendingCount(s)
+        Superstep.Cut(s, n, more = n > 0 && rounds < maxRounds)
+      },
+      saved = _.select(col("id"), col("dist"), col("pending")))
 
-    val finalDist = dist
-    pending.graftFree()
+    val distances = r.state.select(col("id"), col("dist")).graftCut
+    r.state.graftFree()
     lightE.unpersist(blocking = false)
     heavyE.unpersist(blocking = false)
-    Result(finalDist, buckets, rounds)
+    Result(distances, r.iterations, rounds)
   }
 }

@@ -27,8 +27,14 @@ import graft.{Checkpoint, LinkGraph, Superstep}
  *   auth[v] = Σ hub[u]   over in-edges  u→v   (gather on edgesBySrc)
  *   hub[v]  = Σ auth[w]  over out-edges v→w   (gather on transpose)
  *
- * All vertices are always active ⇒ dense mode, one message exchange
- * per gather; state is re-clustered across each lineage cut.
+ * All vertices are always active. The resident state `(id, auth,
+ * hub)` is also the checkpoint's layout; one [[Superstep.loop]]
+ * superstep runs both gathers. The auth rows are cut before the hub
+ * gather reads them: a plan that read them twice (as output and as
+ * gather input) would run the auth gather twice, since Spark reuses
+ * no exchange across the two copies of a cut state that a self-join
+ * plans. So an iteration is 4 Spark jobs, pinned by PageRankJobsSpec:
+ * each gather's message shuffle map stage and each cut.
  */
 object Hits {
 
@@ -43,55 +49,29 @@ object Hits {
       resume: Boolean = false): Result = {
     require(iterations >= 1, "HITS needs at least one iteration")
     val salt = Superstep.resolveSalt(graph, saltBuckets)
-    val ids = graph.vertices.select(col("id"))
     val rev = graph.transpose
-
-    // checkpoint carries BOTH vectors (id, auth, hub) per iteration
-    var hub: DataFrame = null
-    var auth: DataFrame = null
-    var startIter = 0
-    val resumed = if (resume) ckpt.flatMap(_.latestIteration()) else None
-    resumed match {
-      case Some(iter) =>
-        val st = ckpt.get.load(graph.spark, iter)
-          .repartition(graph.numPartitions, col("id"))
-          .graftCut
-        auth = st.select(col("id"), col("auth").as("v"))
-        hub = st.select(col("id"), col("hub").as("v"))
-        startIter = iter
-      case None =>
-        hub = ids.select(col("id"), lit(1L).as("v")).graftCut
-    }
-    var prevHub: DataFrame = hub
-    var prevAuth: DataFrame = auth
-
-    for (i <- startIter + 1 to iterations) {
-      val aMsgs = Superstep.gather(
-        graph, hub, signal = col("v"), combine = sum,
-        saltBuckets = salt)
-      auth = ids.join(aMsgs, Seq("id"), "left")
-        .select(col("id"), coalesce(col("msg"), lit(0L)).as("v"))
-        .graftCut
-      if (prevAuth ne null) prevAuth.graftFree()
-      prevAuth = auth
-
-      val hMsgs = Superstep.gather(
-        rev, auth, signal = col("v"), combine = sum,
-        saltBuckets = salt)
-      hub = ids.join(hMsgs, Seq("id"), "left")
-        .select(col("id"), coalesce(col("msg"), lit(0L)).as("v"))
-        .graftCut
-      prevHub.graftFree()
-      prevHub = hub
-      if (ckpt.nonEmpty && (i % ckptEvery == 0 || i == iterations))
-        ckpt.get.save(
-          auth.select(col("id"), col("v").as("auth"))
-            .join(hub.select(col("id"), col("v").as("hub")), "id"),
-          i, graph.numVertices)
-    }
-
-    val scores = auth.select(col("id"), col("v").as("auth"))
-      .join(hub.select(col("id"), col("v").as("hub")), "id")
-    Result(scores, iterations)
+    // `rows` plus `to` = Σ `from` over each vertex's in-edges in g
+    def plus(g: LinkGraph, rows: DataFrame, from: String, to: String): DataFrame =
+      rows.join(Superstep.gather(g, rows.select(col("id"), col(from).as("v")),
+          signal = col("v"), combine = sum, saltBuckets = salt).hint("shuffle_hash"),
+          Seq("id"), "left")
+        .select(col("id"), col(from), coalesce(col("msg"), lit(0L)).as(to))
+    val r = Superstep.loop("hits", iterations, ckpt, ckptEvery, resume)(
+      start = { resumed =>
+        val st = resumed match {
+          case Some(k) => ckpt.get.load(graph.spark, k)
+          case None => graph.degrees.select(col("id"), lit(0L).as("auth"), lit(1L).as("hub"))
+        }
+        Superstep.Cut(st.repartition(graph.numPartitions, col("id")).graftCut,
+          graph.numVertices, more = true)
+      },
+      step = { c =>
+        val auth = plus(graph, c.state.select(col("id"), col("hub")), "hub", "auth")
+          .select(col("id"), col("auth")).graftCut
+        val next = plus(rev, auth, "auth", "hub").graftCut
+        auth.graftFree()
+        Superstep.Cut(next, graph.numVertices, more = true)
+      })
+    Result(r.state, r.iterations)
   }
 }

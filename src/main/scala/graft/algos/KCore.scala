@@ -16,12 +16,16 @@ import graft.{Checkpoint, LinkGraph, Superstep}
  * shared tools — pure linear chains peel away).
  *
  * Spark shape per peel round (same skeleton as the HashMin CC loop):
- * ONE co-partitioned gather counts each destination's alive
- * in-neighbors (`signal = 1, combine = sum` — degree-among-alive for
- * every vertex in one co-partitioned join, the edge side never
- * re-shuffles), then the survivor filter + count is the lineage-cut
- * materialization — two jobs per round, O(peel depth) rounds with
- * data-dependent termination like cc.cpp:39.
+ * the resident state is the survivor set `(id, core_degree)`, where
+ * core_degree is each survivor's degree among the previous survivors.
+ * ONE co-partitioned gather counts each vertex's alive in-neighbors
+ * (`signal = 1, combine = sum`, the edge side never re-shuffles), and
+ * the survivor filter is the lineage cut, whose count is compared with
+ * the previous survivor count to detect the fixpoint — 2 Spark jobs
+ * per round (message shuffle's map stage, cut), pinned by
+ * PageRankJobsSpec; O(peel depth) rounds with data-dependent
+ * termination like cc.cpp:39. Checkpoints are the survivors `(id, v)`
+ * with v = 1.
  *
  * @return (id, core_degree) for every vertex of the k-core, where
  *         core_degree is its degree WITHIN the core
@@ -71,55 +75,34 @@ object KCore {
     require(graph.symmetric, "k-core is defined on the undirected graph")
     require(k >= 1, "k must be >= 1")
 
-    var alive: DataFrame = null
-    var n = 0L
-    var rounds = 0
-    val resumed = if (resume) ckpt.flatMap(_.latestIteration()) else None
-    resumed match {
-      case Some(r) =>
-        val (a, cnt) = ckpt.get.load(graph.spark, r)
+    val history = scala.collection.mutable.ArrayBuffer[Long]()
+    var fixpoint = false
+    val r = Superstep.loop("kcore", maxRounds, ckpt, ckptEvery, resume)(
+      start = { resumed =>
+        val alive = resumed match {
+          case Some(i) => ckpt.get.load(graph.spark, i).select(col("id"))
+          case None => graph.degrees.select(col("id"))
+        }
+        val (s, n) = alive.select(col("id"), lit(null).cast("long").as("core_degree"))
           .repartition(graph.numPartitions, col("id"))
           .graftCutCount
-        alive = a
-        n = cnt
-        rounds = r
-      case None =>
-        alive = graph.vertices.select(col("id"), lit(1L).as("v")).graftCut
-        n = graph.numVertices
-    }
-    var prev: DataFrame = alive
-    val history = scala.collection.mutable.ArrayBuffer[Long]()
-    var degNow: DataFrame = null
-    var done = false
-
-    while (!done && rounds < maxRounds) {
-      val msgs = Superstep.gather(graph, alive, signal = col("v"), combine = sum)
-      val (next, nNew) = alive.select(col("id"))
-        .join(msgs, Seq("id"), "left")
-        .select(col("id"), coalesce(col("msg"), lit(0L)).as("deg"))
-        .where(col("deg") >= k)
-        .select(col("id"), lit(1L).as("v"), col("deg"))
-        .graftCutCount
-      rounds += 1
-      history += nNew
-      if (nNew == n) {
-        degNow = next.select(col("id"), col("deg"))
-        done = true
-      } else {
-        prev.graftFree()
-        prev = next
-        alive = next.select(col("id"), col("v"))
-        n = nNew
-        if (ckpt.nonEmpty && rounds % ckptEvery == 0)
-          ckpt.get.save(alive, rounds, n)
-      }
-      if (n == 0) done = true
-    }
-    // maxRounds interrupt, unless the cadence already saved this round
-    if (!done && rounds % ckptEvery != 0) ckpt.foreach(_.save(alive, rounds, n))
-    val core =
-      if (degNow != null) degNow
-      else alive.select(col("id"), lit(0L).as("deg")).limit(0) // empty core
-    Result(core.select(col("id"), col("deg").as("core_degree")), rounds, history.toSeq)
+        Superstep.Cut(s, n, more = n > 0)
+      },
+      step = { c =>
+        val msgs = Superstep.gather(graph, c.state.select(col("id")), signal = lit(1L), combine = sum)
+        // k >= 1: a vertex with no alive neighbor (no message) is peeled
+        val (s, n) = c.state.select(col("id"))
+          .join(msgs.hint("shuffle_hash"), "id")
+          .where(col("msg") >= k)
+          .select(col("id"), col("msg").as("core_degree"))
+          .graftCutCount
+        history += n
+        fixpoint = n == c.count
+        Superstep.Cut(s, n, more = !fixpoint && n > 0)
+      },
+      saved = _.select(col("id"), lit(1L).as("v")))
+    // a maxRounds interrupt, or a peel that emptied the graph: empty core
+    val core = if (fixpoint) r.state else { r.state.graftFree(); r.state.limit(0) }
+    Result(core, r.iterations, history.toSeq)
   }
 }

@@ -14,7 +14,7 @@ import graft.{Checkpoint, LinkGraph, Superstep}
  * total order this converges to the unique lexicographically-first
  * MIS of that order — engine-portable and oracle-checkable, unlike
  * the re-randomized textbook variant. O(log |V|) rounds w.h.p.
- * (priorities are md5-uniform), 2 materialization jobs per round.
+ * (priorities are md5-uniform).
  *
  * Priorities hash the string KEY (first 60 bits of md5, identical to
  * the DuckDB oracle's `('0x'||substr(md5(key),1,15))::BIGINT`), so
@@ -24,6 +24,20 @@ import graft.{Checkpoint, LinkGraph, Superstep}
  * reference's process_edges could express but its toolkits don't);
  * the signal/slot shape reuses [[Superstep.gather]] with a
  * struct-valued min combiner.
+ *
+ * The resident state on [[Superstep.loop]] is one row per undecided or
+ * member vertex, `(id, key, pri, round, active)`: round = -1 and
+ * active for the undecided, else the 1-based selection round.
+ * Dropped-out vertices lose their row. Each round is one lineage cut
+ * of that state; the checkpoint is its `(id, round)` projection, so
+ * at convergence it holds the members only. A resume re-derives
+ * `(key, pri)` from the vertex dict (pri is a pure function of key).
+ * The winners are cut before the losers' gather reads them: a plan
+ * that read them twice would run the neighbor-minimum gather twice,
+ * since Spark reuses no exchange across the two copies of a cut state
+ * that a self-join plans. So a round is 4 Spark jobs (measured on a
+ * 600-vertex path): each gather's message shuffle map stage and the
+ * two cuts.
  */
 object Mis {
 
@@ -43,81 +57,46 @@ object Mis {
       ckptEvery: Int = 4,
       resume: Boolean = false): Result = {
     require(graph.symmetric, "MIS is defined on the symmetric graph")
-    val spark = graph.spark
-    import spark.implicits._
-
-    // Checkpoint state = one row per undecided-or-member vertex:
-    // (id, round) with round = -1 for still-active vertices, else the
-    // 1-based selection round. Dropped-out vertices need no row; the
-    // active set's (key, pri) payload is re-derived from the vertex
-    // dict on resume (pri is a pure function of key).
-    var active: DataFrame = null
-    var activeCount = 0L
-    var mis: DataFrame = null
     var round = 0
-    val resumed = if (resume) ckpt.flatMap(_.latestIteration()) else None
-    resumed match {
-      case Some(k) =>
-        val st = ckpt.get.load(spark, k)
-        val (a, n) = withPri(graph.vertices)
-          .join(st.where(col("round") === -1).select(col("id")), "id")
-          .repartition(graph.numPartitions, col("id"))
-          .graftCutCount
-        active = a
-        activeCount = n
-        mis = st.where(col("round") >= 0).select(col("id"), col("round").cast("int").as("round"))
-        round = k
-      case None =>
-        active = withPri(graph.vertices)
-          .repartition(graph.numPartitions, col("id"))
+    val r = Superstep.loop("mis", maxRounds, ckpt, ckptEvery, resume)(
+      start = { resumed =>
+        round = resumed.getOrElse(0)
+        val rows = resumed match {
+          case Some(k) => withPri(graph.vertices).join(ckpt.get.load(graph.spark, k), "id")
+          case None => withPri(graph.vertices).withColumn("round", lit(-1))
+        }
+        Superstep.cutActive(rows.withColumn("active", col("round") === -1)
+          .repartition(graph.numPartitions, col("id")))
+      },
+      step = { c =>
+        round += 1
+        val undecided = c.state.where(col("active"))
+        // min (pri, key) over UNDECIDED neighbors (struct min = lexicographic)
+        val minNbr = Superstep.gather(
+          graph, undecided.select(col("id"), col("key"), col("pri")),
+          signal = struct(col("pri").as("p"), col("key").as("k")),
+          combine = min)
+        val winners = undecided
+          .join(minNbr.hint("shuffle_hash"), Seq("id"), "left")
+          .where(col("msg").isNull ||
+            struct(col("pri").as("p"), col("key").as("k")) < col("msg"))
+          .select(col("id"), lit(true).as("won"))
           .graftCut
-        activeCount = graph.numVertices
-        mis = Seq.empty[(Long, Int)].toDF("id", "round")
-    }
-    var freeLater = List[DataFrame]()
-
-    while (activeCount > 0 && round < maxRounds) {
-      round += 1
-      // min (pri, key) over ACTIVE neighbors (struct min = lexicographic)
-      val minNbr = Superstep.gather(
-        graph, active,
-        signal = struct(col("pri").as("p"), col("key").as("k")),
-        combine = min)
-      val winners = active
-        .join(minNbr, Seq("id"), "left")
-        .where(col("msg").isNull ||
-          struct(col("pri").as("p"), col("key").as("k")) < col("msg"))
-        .select(col("id"), col("key"), col("pri"))
-        .graftCut
-      // neighbors of winners drop out
-      val losers = Superstep.gather(
-        graph, winners.select(col("id")), signal = lit(1), combine = min)
-      val (nextActive, n) = active
-        .join(winners.select(col("id")), Seq("id"), "left_anti")
-        .join(losers.select(col("id")), Seq("id"), "left_anti")
-        .graftCutCount
-      mis = mis.unionByName(winners.select(col("id"), lit(round).as("round")))
-      freeLater = active :: winners :: freeLater
-      active = nextActive
-      activeCount = n
-      if (ckpt.nonEmpty && round % ckptEvery == 0 && activeCount > 0)
-        ckpt.get.save(
-          mis.select(col("id"), col("round"))
-            .unionByName(active.select(col("id"), lit(-1).as("round"))),
-          round, activeCount)
-    }
-    val (result, size) = mis.graftCutCount
-    ckpt.foreach { c =>
-      // maxRounds interrupt: keep the undecided set, unless the cadence
-      // already saved this round
-      if (activeCount > 0) {
-        if (round % ckptEvery != 0)
-          c.save(result.select(col("id"), col("round"))
-            .unionByName(active.select(col("id"), lit(-1).as("round"))),
-            round, activeCount)
-      } else c.save(result, round, 0L) // converged: members only
-    }
-    (active :: freeLater).distinct.foreach(_.graftFree())
-    Result(result, round, size)
+        // neighbors of winners drop out
+        val losers = Superstep.gather(graph, winners.select(col("id")), signal = lit(1), combine = min)
+        val next = Superstep.cutActive(c.state
+          .join(winners.hint("shuffle_hash"), Seq("id"), "left")
+          .join(losers.hint("shuffle_hash"), Seq("id"), "left")
+          .where(col("msg").isNull)
+          .select(col("id"), col("key"), col("pri"),
+            when(col("won"), lit(round)).otherwise(col("round")).as("round"),
+            (col("active") && col("won").isNull).as("active")))
+        winners.graftFree()
+        next
+      },
+      saved = _.select(col("id"), col("round")))
+    val (mis, size) = r.state.where(col("round") >= 0).select(col("id"), col("round")).graftCutCount
+    r.state.graftFree()
+    Result(mis, r.iterations, size)
   }
 }

@@ -4,7 +4,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.syntax._
-import graft.{Checkpoint, LinkGraph}
+import graft.{Checkpoint, LinkGraph, Superstep}
 
 /**
  * k-truss decomposition (fixed k): iteratively delete every edge that
@@ -22,8 +22,10 @@ import graft.{Checkpoint, LinkGraph}
  * co-keyed filter join. Work per round is bounded by Σ d_min(e) of
  * the shrinking edge set — the same bound as one triangle count —
  * and the peel converges in a handful of rounds on power-law graphs
- * (each round removes whole low-support fringes at once; state is the
- * edge set only, no |V| table).
+ * (each round removes whole low-support fringes at once). The state is
+ * the surviving edge set `(a, b, support)` only, no |V| table, on
+ * [[Superstep.loop]]; a round whose survivor count equals the
+ * previous one is the fixpoint.
  *
  * At the fixpoint, the support values computed in the final round ARE
  * the surviving edges' supports in the final subgraph (nothing was
@@ -33,59 +35,55 @@ object Truss {
 
   final case class Result(edges: DataFrame, rounds: Int)
 
+  /** (a, b, support) for every oriented edge of `cur` that closes at
+   * least one triangle in `cur`: the degree-ordered wedge join, each
+   * closed wedge exploded onto its three edges, one counting
+   * aggregate. */
+  private def supports(cur: DataFrame): DataFrame = {
+    val wedges = cur.as("e1").join(
+      cur.select(col("a").as("b"), col("b").as("c")).as("e2"), "b")
+    val tris = wedges.join(
+      cur.select(col("a"), col("b").as("c")), Seq("a", "c"), "left_semi")
+    tris.select(explode(array(
+      struct(col("a").as("x"), col("b").as("y")),
+      struct(col("b").as("x"), col("c").as("y")),
+      struct(col("a").as("x"), col("c").as("y")))).as("e"))
+      .select(col("e.x").as("a"), col("e.y").as("b"))
+      .groupBy(col("a"), col("b")).agg(count(lit(1)).as("support"))
+  }
+
   /** @return (edges = (a, b, support) oriented rows of the k-truss,
    *          rounds to fixpoint). The surviving edge set IS the state,
    *          so checkpoints snapshot it per round ((id = a, b) rows)
    *          and a resumed peel replays exactly ([[Result.rounds]]
-   *          then counts the remaining rounds only). */
+   *          counts the rounds before the resume too). */
   def run(graph: LinkGraph, k: Int = 3, maxRounds: Int = 12,
       ckpt: Option[Checkpoint] = None, ckptEvery: Int = 1,
       resume: Boolean = false): Result = {
     require(k >= 3, "k-truss needs k >= 3")
     val need = (k - 2).toLong
-    var rounds = 0
-    val resumed = if (resume) ckpt.flatMap(_.latestIteration()) else None
-    var (cur, n) = resumed match {
-      case Some(rk) =>
-        rounds = rk
-        ckpt.get.load(graph.spark, rk)
-          .select(col("id").as("a"), col("b"))
+    val r = Superstep.loop("truss", maxRounds, ckpt, ckptEvery, resume)(
+      start = { resumed =>
+        val edges = resumed match {
+          case Some(i) => ckpt.get.load(graph.spark, i).select(col("id").as("a"), col("b"))
+          case None => TriangleCount.orient(graph)
+        }
+        val (s, n) = edges.select(col("a"), col("b"), lit(null).cast("long").as("support"))
           .repartition(graph.numPartitions, col("a"))
           .graftCutCount
-      case None =>
-        TriangleCount.orient(graph)
-          .repartition(graph.numPartitions, col("a"))
+        Superstep.Cut(s, n, more = true)
+      },
+      step = { c =>
+        val cur = c.state.select(col("a"), col("b"))
+        // inner join: an edge in zero triangles has no support row and
+        // is dropped — correct, since k >= 3 means need >= 1
+        val (kept, m) = cur
+          .join(supports(cur).where(col("support") >= need), Seq("a", "b"))
           .graftCutCount
-    }
-    var converged = false
-    var last: DataFrame = null
-    while (!converged && rounds < maxRounds) {
-      val wedges = cur.as("e1").join(
-        cur.select(col("a").as("b"), col("b").as("c")).as("e2"), "b")
-      val tris = wedges.join(
-        cur.select(col("a"), col("b").as("c")), Seq("a", "c"), "left_semi")
-      val sup = tris.select(explode(array(
-        struct(col("a").as("x"), col("b").as("y")),
-        struct(col("b").as("x"), col("c").as("y")),
-        struct(col("a").as("x"), col("c").as("y")))).as("e"))
-        .select(col("e.x").as("a"), col("e.y").as("b"))
-        .groupBy(col("a"), col("b")).agg(count(lit(1)).as("support"))
-      // inner join: an edge in zero triangles has no support row and
-      // is dropped — correct, since k >= 3 means need >= 1
-      val (kept, m) = cur
-        .join(sup.where(col("support") >= need), Seq("a", "b"))
-        .graftCutCount
-      converged = m == n
-      if (last != null) last.graftFree()
-      cur.graftFree() // no-op when cur is a projection of the freed last
-      last = kept
-      if (!converged) cur = kept.select(col("a"), col("b"))
-      n = m
-      rounds += 1
-      if (ckpt.nonEmpty && (converged || rounds % ckptEvery == 0))
-        ckpt.get.save(kept.select(col("a").as("id"), col("b")), rounds, m)
-    }
-    Result(last, rounds)
+        Superstep.Cut(kept, m, more = m != c.count)
+      },
+      saved = _.select(col("a").as("id"), col("b")))
+    Result(r.state, r.iterations)
   }
 
   /**
@@ -116,18 +114,8 @@ object Truss {
       var converged = false
       var rounds = 0
       while (!converged && n > 0 && rounds < maxRoundsPerK) {
-        val wedges = cur.as("e1").join(
-          cur.select(col("a").as("b"), col("b").as("c")).as("e2"), "b")
-        val tris = wedges.join(
-          cur.select(col("a"), col("b").as("c")), Seq("a", "c"), "left_semi")
-        val sup = tris.select(explode(array(
-          struct(col("a").as("x"), col("b").as("y")),
-          struct(col("b").as("x"), col("c").as("y")),
-          struct(col("a").as("x"), col("c").as("y")))).as("e"))
-          .select(col("e.x").as("a"), col("e.y").as("b"))
-          .groupBy(col("a"), col("b")).agg(count(lit(1)).as("support"))
         val (kept, m) = cur
-          .join(sup.where(col("support") >= need).select(col("a"), col("b")),
+          .join(supports(cur).where(col("support") >= need).select(col("a"), col("b")),
             Seq("a", "b"), "left_semi")
           .graftCutCount
         rounds += 1

@@ -204,11 +204,12 @@ class CheckpointSpec extends SparkSpec {
     val full = Betweenness.run(g, root)
     val dir = tmpDir()
     val ck = Checkpoint(dir)
-    // full run with checkpointing writes per-level snapshots
     Betweenness.run(g, root, ckpt = Some(ck), ckptEvery = 2)
-    assert(ck.latestIteration().nonEmpty)
-    // resume from the latest forward snapshot and re-derive bc
+    val first = keepFirstCheckpoint(dir) // "kill" after the first snapshot
+    assert(first < full.levels, "the kill must leave forward levels to replay")
     val resumed = Betweenness.run(g, root, ckpt = Some(ck), ckptEvery = 2, resume = true)
+    // a newer snapshot is written only after a forward superstep ran
+    assert(ck.latestIteration().exists(_ > first))
     assert(resumed.levels == full.levels)
     val a = full.bc.select(col("id"), col("sigma"), round(col("bc") * 1e9).as("b9"))
     val b = resumed.bc.select(col("id"), col("sigma"), round(col("bc") * 1e9).as("b9"))
@@ -332,5 +333,36 @@ class CheckpointSpec extends SparkSpec {
     assert(writesOf(Mis.run(g, maxRounds = 1, ckpt = Some(ck), ckptEvery = 1)) == 1)
     assert(ck.latestIteration().contains(1))
     assert(ck.activeCount(1) > 0, "fixture must still have undecided vertices after round 1")
+  }
+
+  test("HITS: 3 iterations saved every iteration write 3 checkpoints, a resume at the limit none") {
+    import graft.algos.Hits
+    val g = graphOf(edges, symmetric = false)
+    val ck = Checkpoint(tmpDir())
+    assert(writesOf(Hits.run(g, iterations = 3, ckpt = Some(ck), ckptEvery = 1)) == 3)
+    assert(writesOf(Hits.run(g, iterations = 3, ckpt = Some(ck), ckptEvery = 1, resume = true)) == 0)
+    assert(ck.latestIteration().contains(3))
+  }
+
+  test("Truss: a peel stopped at maxRounds writes that round once") {
+    import graft.algos.Truss
+    val g = graphOf(edges, symmetric = true)
+    val ck = Checkpoint(tmpDir())
+    assert(writesOf(Truss.run(g, k = 3, maxRounds = 1, ckpt = Some(ck))) == 1)
+    assert(ck.latestIteration().contains(1))
+  }
+
+  test("DeltaStepping: a resume from a finished run writes no checkpoint") {
+    import graft.algos.DeltaStepping
+    val w = edges.map { case (a, b) => (a, b) -> (1.0 + (a + b) % 3) }.toMap
+    val g = graphOf(edges, symmetric = true, weights = w)
+    val ck = Checkpoint(tmpDir())
+    val full = DeltaStepping.run(g, 0L, ckpt = Some(ck))
+    assert(ck.activeCount(full.buckets) == 0)
+    var resumed: DeltaStepping.Result = null
+    assert(writesOf { resumed = DeltaStepping.run(g, 0L, ckpt = Some(ck), resume = true) } == 0)
+    assert(resumed.buckets == full.buckets)
+    val (a, b) = (full.distances, resumed.distances)
+    assert(a.exceptAll(b).count() == 0 && b.exceptAll(a).count() == 0)
   }
 }

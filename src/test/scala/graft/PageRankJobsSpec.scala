@@ -2,10 +2,10 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-import graft.algos.{Bfs, ConnectedComponents, LabelPropagation, MultiSourceBfs, PageRank, Sssp}
+import graft.algos.{Bfs, ConnectedComponents, Hits, KCore, LabelPropagation, MultiSourceBfs, PageRank, Sssp}
 
 /** Spark jobs per PageRank, ConnectedComponents, LabelPropagation, Bfs,
- * Sssp and MultiSourceBfs superstep, under the suite's default
+ * Sssp, MultiSourceBfs, Hits and KCore superstep, under the suite's default
  * (production) broadcast thresholds. The marginal count between k and
  * k+4 supersteps cancels the fixed per-run jobs;
  * an added job per superstep (a re-broadcast edge or degree table, a
@@ -116,5 +116,21 @@ class PageRankJobsSpec extends SparkSpec {
     assert(80 >= star.numEdges / geminiSparseFraction)
     assert(marginal(k => MultiSourceBfs.run(star, Seq(starRoot), maxIterations = k).iterations) ==
       msbfsDenseJobs)
+  }
+
+  /** HITS jobs per iteration: the two message shuffles' map stages
+   * (auth from hub, then hub from auth) and two cuts, the auth rows'
+   * and the state's. */
+  val hitsJobs = 4
+
+  test("Hits: jobs per iteration pinned") {
+    assert(marginal(k => Hits.run(g, iterations = k).iterations) == hitsJobs)
+  }
+
+  test("KCore: jobs per peel round pinned") {
+    // a 60-vertex path at k = 2: every round peels both ends
+    val path = graphOf((0 until 59).map(i => (i, i + 1)), symmetric = true)
+    assert(KCore.run(path, k = 2, maxRounds = 6).aliveHistory == (1 to 6).map(r => 60L - 2 * r))
+    assert(marginal(k => KCore.run(path, k = 2, maxRounds = k).rounds) == jobsPerSuperstep)
   }
 }

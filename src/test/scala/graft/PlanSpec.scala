@@ -159,10 +159,9 @@ class PlanSpec extends SparkSpec {
   }
 
   test("no cached-RDD growth across a many-bucket delta-stepping run") {
-    // 50-vertex weighted path → ~25 Δ=2 buckets; the per-bucket junk
-    // list must actually free the f/improved/bm/pending cuts (the
-    // free-after-rematerialize discipline — freeing any earlier threw
-    // CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND, freeing never leaks cuts)
+    // 50-vertex weighted path → ~25 Δ=2 buckets; every superseded
+    // state cut (each light round's, the heavy relaxation's and each
+    // bucket's) must actually be freed
     val path = graphOf((0 until 50).map(i => (i, i + 1)), symmetric = true)
     materialize(path)
     val root = path.vertices.orderBy(col("key")).select(col("id")).head().getLong(0)

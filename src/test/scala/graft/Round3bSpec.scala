@@ -186,10 +186,14 @@ class Round3bSpec extends SparkSpec {
     val idx = indexOf(g).map(_.swap)
     val roots = Seq(idx(0), idx(4))
     val full = Betweenness.runBatch(g, roots)
-    val ck = Checkpoint(java.nio.file.Files.createTempDirectory("graft-bcb").toString)
+    val dir = java.nio.file.Files.createTempDirectory("graft-bcb").toString
+    val ck = Checkpoint(dir)
     Betweenness.runBatch(g, roots, ckpt = Some(ck), ckptEvery = 2)
-    assert(ck.latestIteration().nonEmpty)
+    val first = keepFirstCheckpoint(dir) // "kill" after the first snapshot
+    assert(first < full.levels, "the kill must leave forward levels to replay")
     val resumed = Betweenness.runBatch(g, roots, ckpt = Some(ck), ckptEvery = 2, resume = true)
+    // a newer snapshot is written only after a forward superstep ran
+    assert(ck.latestIteration().exists(_ > first))
     assert(resumed.levels == full.levels)
     val a = full.bc.select(col("id"), col("root"), col("sigma"), round(col("bc") * 1e9).as("b9"))
     val b = resumed.bc.select(col("id"), col("root"), col("sigma"), round(col("bc") * 1e9).as("b9"))

@@ -43,6 +43,20 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
       .map(r => idx(r.getLong(0)) -> r.get(1)).toMap
   }
 
+  /** Simulate a kill after the first checkpoint: delete every
+   * `iter=K` directory under `dir` but the oldest, and return its K. */
+  def keepFirstCheckpoint(dir: String): Int = {
+    val iters = new java.io.File(dir).listFiles().toSeq
+      .flatMap(f => "iter=(\\d+)".r.unapplySeq(f.getName).map(g => g.head.toInt -> f))
+      .sortBy(_._1)
+    assert(iters.size > 1, s"need more than one checkpoint under $dir")
+    iters.tail.foreach { case (_, f) =>
+      java.nio.file.Files.walk(f.toPath).sorted(java.util.Comparator.reverseOrder())
+        .forEach(p => java.nio.file.Files.delete(p))
+    }
+    iters.head._1
+  }
+
   /** Spark jobs started while `body` runs, each delivered event counted. */
   def jobsOf(body: => Unit): Int = {
     val n = new AtomicInteger()
