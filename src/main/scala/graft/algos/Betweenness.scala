@@ -40,7 +40,8 @@ import graft.{Checkpoint, LinkGraph, Superstep}
  * Checkpoints are `(keys…, sigma, lvl)` after each forward superstep;
  * a resume re-activates the last level and replays the rest of the
  * forward pass, and the backward pass always runs from the final
- * forward state.
+ * forward state. A level, forward and backward together, is 4 Spark
+ * jobs for [[run]] and 6 for [[runBatch]], pinned by PageRankJobsSpec.
  */
 object Betweenness {
 

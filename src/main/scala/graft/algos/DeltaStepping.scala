@@ -32,10 +32,12 @@ import graft.{Checkpoint, LinkGraph, Superstep}
  * distance. It is also the checkpoint's layout. One
  * [[Superstep.loop]] iteration is one bucket: its light rounds and its
  * heavy relaxation each run one gather and cut the state once, and the
- * `maxRounds` budget ends the bucket loop through `more`. The
- * light/heavy edge splits are filtered views of the resident
- * clustered layout, persisted once — no re-shuffle of the edge side
- * anywhere.
+ * `maxRounds` budget ends the bucket loop through `more`. A
+ * relaxation is 3 Spark jobs (two shuffle map stages and the cut), and
+ * a bucket adds one for its pending count: 7 on a unit-weight path at
+ * Δ = 2, pinned by PageRankJobsSpec. The light/heavy edge splits are
+ * filtered views of the resident clustered layout, persisted once — no
+ * re-shuffle of the edge side anywhere.
  */
 object DeltaStepping {
 

@@ -50,7 +50,10 @@ object Hits {
     require(iterations >= 1, "HITS needs at least one iteration")
     val salt = Superstep.resolveSalt(graph, saltBuckets)
     val rev = graph.transpose
-    // `rows` plus `to` = Σ `from` over each vertex's in-edges in g
+    // `rows` plus `to` = Σ `from` over each vertex's in-edges in g.
+    // [[Superstep.withMessages]] does not fit: every row is active, so
+    // the state carries no `active` flag, and the hub gather reads the
+    // cut auth rows, not a loop state.
     def plus(g: LinkGraph, rows: DataFrame, from: String, to: String): DataFrame =
       rows.join(Superstep.gather(g, rows.select(col("id"), col(from).as("v")),
           signal = col("v"), combine = sum, saltBuckets = salt).hint("shuffle_hash"),

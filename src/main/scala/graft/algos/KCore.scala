@@ -25,7 +25,8 @@ import graft.{Checkpoint, LinkGraph, Superstep}
  * per round (message shuffle's map stage, cut), pinned by
  * PageRankJobsSpec; O(peel depth) rounds with data-dependent
  * termination like cc.cpp:39. Checkpoints are the survivors `(id, v)`
- * with v = 1.
+ * with v = 2 in the fixpoint round's snapshot and 1 in every other, so
+ * a resume from the fixpoint snapshot replays no round.
  *
  * @return (id, core_degree) for every vertex of the k-core, where
  *         core_degree is its degree WITHIN the core
@@ -75,34 +76,47 @@ object KCore {
     require(graph.symmetric, "k-core is defined on the undirected graph")
     require(k >= 1, "k must be >= 1")
 
+    // survivors of one peel of `alive`: a vertex with fewer than k alive
+    // neighbors (k >= 1, so also one with no message) is peeled
+    def peel(alive: DataFrame): (DataFrame, Long) = {
+      val msgs = Superstep.gather(graph, alive.select(col("id")), signal = lit(1L), combine = sum)
+      alive.select(col("id"))
+        .join(msgs.hint("shuffle_hash"), "id")
+        .where(col("msg") >= k)
+        .select(col("id"), col("msg").as("core_degree"))
+        .graftCutCount
+    }
     val history = scala.collection.mutable.ArrayBuffer[Long]()
     var fixpoint = false
     val r = Superstep.loop("kcore", maxRounds, ckpt, ckptEvery, resume)(
       start = { resumed =>
         val alive = resumed match {
-          case Some(i) => ckpt.get.load(graph.spark, i).select(col("id"))
+          case Some(i) =>
+            val snap = ckpt.get.load(graph.spark, i)
+            fixpoint = !snap.where(col("v") === 2L).isEmpty
+            snap.select(col("id"))
           case None => graph.degrees.select(col("id"))
         }
         val (s, n) = alive.select(col("id"), lit(null).cast("long").as("core_degree"))
           .repartition(graph.numPartitions, col("id"))
           .graftCutCount
-        Superstep.Cut(s, n, more = n > 0)
+        Superstep.Cut(s, n, more = !fixpoint && n > 0)
       },
       step = { c =>
-        val msgs = Superstep.gather(graph, c.state.select(col("id")), signal = lit(1L), combine = sum)
-        // k >= 1: a vertex with no alive neighbor (no message) is peeled
-        val (s, n) = c.state.select(col("id"))
-          .join(msgs.hint("shuffle_hash"), "id")
-          .where(col("msg") >= k)
-          .select(col("id"), col("msg").as("core_degree"))
-          .graftCutCount
+        val (s, n) = peel(c.state)
         history += n
         fixpoint = n == c.count
         Superstep.Cut(s, n, more = !fixpoint && n > 0)
       },
-      saved = _.select(col("id"), lit(1L).as("v")))
+      saved = _.select(col("id"), lit(if (fixpoint) 2L else 1L).as("v")))
+    // a resume from the fixpoint snapshot runs no round, and the
+    // snapshot holds no core degrees: one more peel of the stable
+    // survivors yields them
+    val last =
+      if (fixpoint && r.supersteps == 0) { val p = peel(r.state)._1; r.state.graftFree(); p }
+      else r.state
     // a maxRounds interrupt, or a peel that emptied the graph: empty core
-    val core = if (fixpoint) r.state else { r.state.graftFree(); r.state.limit(0) }
+    val core = if (fixpoint) last else { last.graftFree(); last.limit(0) }
     Result(core, r.iterations, history.toSeq)
   }
 }

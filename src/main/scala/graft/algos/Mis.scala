@@ -70,16 +70,11 @@ object Mis {
       },
       step = { c =>
         round += 1
-        val undecided = c.state.where(col("active"))
         // min (pri, key) over UNDECIDED neighbors (struct min = lexicographic)
-        val minNbr = Superstep.gather(
-          graph, undecided.select(col("id"), col("key"), col("pri")),
-          signal = struct(col("pri").as("p"), col("key").as("k")),
-          combine = min)
-        val winners = undecided
-          .join(minNbr.hint("shuffle_hash"), Seq("id"), "left")
-          .where(col("msg").isNull ||
-            struct(col("pri").as("p"), col("key").as("k")) < col("msg"))
+        val winners = Superstep.withMessages(graph, c, Seq("key", "pri"),
+            signal = struct(col("pri").as("p"), col("key").as("k")), combine = min)
+          .where(col("active") && (col("msg").isNull ||
+            struct(col("pri").as("p"), col("key").as("k")) < col("msg")))
           .select(col("id"), lit(true).as("won"))
           .graftCut
         // neighbors of winners drop out

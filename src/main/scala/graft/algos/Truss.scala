@@ -62,6 +62,7 @@ object Truss {
       resume: Boolean = false): Result = {
     require(k >= 3, "k-truss needs k >= 3")
     val need = (k - 2).toLong
+    var resumedAt: Option[Superstep.Cut] = None
     val r = Superstep.loop("truss", maxRounds, ckpt, ckptEvery, resume)(
       start = { resumed =>
         val edges = resumed match {
@@ -71,7 +72,9 @@ object Truss {
         val (s, n) = edges.select(col("a"), col("b"), lit(null).cast("long").as("support"))
           .repartition(graph.numPartitions, col("a"))
           .graftCutCount
-        Superstep.Cut(s, n, more = true)
+        val c = Superstep.Cut(s, n, more = true)
+        if (resumed.isDefined) resumedAt = Some(c)
+        c
       },
       step = { c =>
         val cur = c.state.select(col("a"), col("b"))
@@ -83,7 +86,20 @@ object Truss {
         Superstep.Cut(kept, m, more = m != c.count)
       },
       saved = _.select(col("a").as("id"), col("b")))
-    Result(r.state, r.iterations)
+    // A resume from the snapshot of round maxRounds runs no round, and
+    // the snapshot holds no supports: count them on the saved edge set
+    // (the supports a fixpoint round computes).
+    val edges = resumedAt match {
+      case Some(c) if r.supersteps == 0 =>
+        val cur = c.state.select(col("a"), col("b"))
+        val withSup = cur.join(supports(cur), Seq("a", "b"), "left")
+          .select(col("a"), col("b"), coalesce(col("support"), lit(0L)).as("support"))
+          .graftCut
+        c.state.graftFree()
+        withSup
+      case _ => r.state
+    }
+    Result(edges, r.iterations)
   }
 
   /**

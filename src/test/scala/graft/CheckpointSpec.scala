@@ -318,6 +318,51 @@ class CheckpointSpec extends SparkSpec {
     assert(full.core.count() > 0, "fixture must have a nonempty 2-core")
   }
 
+  test("k-core: a resume from the fixpoint round at maxRounds yields the identical core") {
+    import graft.algos.KCore
+    val g = graphOf(edges :+ ((4, 1)), symmetric = true)
+    val full = KCore.run(g, k = 2)
+    assert(full.core.count() > 0, "fixture must have a nonempty 2-core")
+    val ck = Checkpoint(tmpDir())
+    KCore.run(g, k = 2, maxRounds = full.rounds, ckpt = Some(ck), ckptEvery = 1)
+    assert(ck.latestIteration().contains(full.rounds))
+    // the fixpoint snapshot replays no round, at maxRounds or below it
+    for (limit <- Seq(full.rounds, 10000)) {
+      var resumed: KCore.Result = null
+      assert(writesOf {
+        resumed = KCore.run(g, k = 2, maxRounds = limit, ckpt = Some(ck), ckptEvery = 1, resume = true)
+      } == 0)
+      assert(resumed.rounds == full.rounds)
+      val (a, b) = (full.core, resumed.core)
+      assert(a.exceptAll(b).count() == 0 && b.exceptAll(a).count() == 0)
+    }
+  }
+
+  test("k-core: a resume from a maxRounds interrupt short of the fixpoint still yields the empty core") {
+    import graft.algos.KCore
+    val g = graphOf(edges :+ ((4, 1)), symmetric = true)
+    val rounds = KCore.run(g, k = 2).rounds
+    assert(rounds >= 2, "fixture must peel before its fixpoint round")
+    val ck = Checkpoint(tmpDir())
+    assert(KCore.run(g, k = 2, maxRounds = rounds - 1, ckpt = Some(ck), ckptEvery = 1).core.count() == 0)
+    val resumed = KCore.run(g, k = 2, maxRounds = rounds - 1, ckpt = Some(ck), ckptEvery = 1, resume = true)
+    assert(resumed.rounds == rounds - 1 && resumed.core.count() == 0)
+  }
+
+  test("Truss: a resume from the fixpoint round at maxRounds yields the identical edges") {
+    import graft.algos.Truss
+    val g = graphOf(edges, symmetric = true)
+    val full = Truss.run(g, k = 3)
+    assert(full.edges.count() > 0, "fixture must have a nonempty 3-truss")
+    val ck = Checkpoint(tmpDir())
+    Truss.run(g, k = 3, maxRounds = full.rounds, ckpt = Some(ck))
+    assert(ck.latestIteration().contains(full.rounds))
+    val resumed = Truss.run(g, k = 3, maxRounds = full.rounds, ckpt = Some(ck), resume = true)
+    assert(resumed.rounds == full.rounds)
+    val (a, b) = (full.edges, resumed.edges)
+    assert(a.exceptAll(b).count() == 0 && b.exceptAll(a).count() == 0)
+  }
+
   test("k-core: a peel stopped at maxRounds writes that round once") {
     import graft.algos.KCore
     val g = graphOf(edges :+ ((4, 1)), symmetric = true)

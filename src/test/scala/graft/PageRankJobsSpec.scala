@@ -2,11 +2,13 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-import graft.algos.{Bfs, ConnectedComponents, Hits, KCore, LabelPropagation, MultiSourceBfs, PageRank, Sssp}
+import graft.algos.{Betweenness, Bfs, ConnectedComponents, DeltaStepping, Hits, KCore, LabelPropagation,
+  MultiSourceBfs, PageRank, Sssp}
 
 /** Spark jobs per PageRank, ConnectedComponents, LabelPropagation, Bfs,
- * Sssp, MultiSourceBfs, Hits and KCore superstep, under the suite's default
- * (production) broadcast thresholds. The marginal count between k and
+ * Sssp, MultiSourceBfs, Hits, KCore, Betweenness and DeltaStepping
+ * superstep, under the suite's default (production) broadcast
+ * thresholds. The marginal count between k and
  * k+4 supersteps cancels the fixed per-run jobs;
  * an added job per superstep (a re-broadcast edge or degree table, a
  * second state join, a separate edge-mass aggregation, a frontier
@@ -132,5 +134,55 @@ class PageRankJobsSpec extends SparkSpec {
     val path = graphOf((0 until 59).map(i => (i, i + 1)), symmetric = true)
     assert(KCore.run(path, k = 2, maxRounds = 6).aliveHistory == (1 to 6).map(r => 60L - 2 * r))
     assert(marginal(k => KCore.run(path, k = 2, maxRounds = k).rounds) == jobsPerSuperstep)
+  }
+
+  /** Paths of 12 and 16 vertices, each with the id of its end vertex 0. */
+  private lazy val paths: Seq[(LinkGraph, Long)] = Seq(12, 16).map { n =>
+    val p = graphOf((0 until n - 1).map(i => (i, i + 1)), symmetric = true)
+    (p, indexOf(p).collectFirst { case (id, 0) => id }.get)
+  }
+
+  /** Jobs per unit of `run`'s length, from vertex 0 of the 12- and the
+   * 16-vertex path: the difference cancels the fixed per-run jobs.
+   * `run` returns its length (levels or buckets), `units` apart. */
+  private def perPathUnit(units: Int)(run: (LinkGraph, Long) => Int): Int = {
+    val Seq((a, la), (b, lb)) = paths.map { case (p, r) =>
+      run(p, r) // warm-up: the graph's lazy statistics are computed once
+      var len = 0
+      (jobsOf { len = run(p, r) }, len)
+    }
+    assert(lb - la == units, s"lengths $la and $lb")
+    assert((b - a) % units == 0, s"non-integral jobs per unit: $a at $la, $b at $lb")
+    (b - a) / units
+  }
+
+  /** Brandes jobs per level, forward and backward together: each
+   * pass's message shuffle map stage and cut. */
+  val bcJobs = 4
+
+  test("Betweenness: jobs per level pinned") {
+    assert(perPathUnit(4)((p, r) => Betweenness.run(p, r).levels) == bcJobs)
+  }
+
+  /** Batched Brandes jobs per level: in each pass, the (id, root)
+   * rows' exchange to the edge table's src partitioning, the message
+   * map stage and the cut. */
+  val bcBatchJobs = 6
+
+  test("Betweenness.runBatch: jobs per level pinned") {
+    assert(perPathUnit(4) { (p, r) =>
+      val second = indexOf(p).collectFirst { case (id, 1) => id }.get
+      Betweenness.runBatch(p, Seq(r, second)).levels
+    } == bcBatchJobs)
+  }
+
+  /** DeltaStepping jobs per bucket on a unit-weight path at delta = 2,
+   * where each bucket runs two light relaxations and no heavy one:
+   * three per relaxation (two shuffle map stages and the cut) and the
+   * pending count. */
+  val deltaJobs = 7
+
+  test("DeltaStepping: jobs per bucket pinned") {
+    assert(perPathUnit(2)((p, r) => DeltaStepping.run(p, r, delta = 2.0).buckets) == deltaJobs)
   }
 }
