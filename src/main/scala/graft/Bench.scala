@@ -18,10 +18,16 @@ object Bench {
    * cells (identical configs — the cells must measure the same
    * engine the sweep runs). */
   def session(cpus: String): SparkSession =
+    builder(s"local[$cpus]", "graft-bench", cpus).getOrCreate()
+
+  /** The settings every session of the engine's mains and of the test
+   * suite shares; each caller adds its own master, app name,
+   * partitions and local extras. */
+  def builder(master: String, appName: String, partitions: String): SparkSession.Builder =
     SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-bench")
-      .config("spark.sql.shuffle.partitions", cpus)
+      .master(master)
+      .appName(appName)
+      .config("spark.sql.shuffle.partitions", partitions)
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.file.transferTo", "false") // gVisor: NIO transferTo mmap/unmap churn is pathological
@@ -38,7 +44,13 @@ object Bench {
       .config("spark.ui.retainedJobs", "100")
       .config("spark.ui.retainedStages", "100")
       .config("spark.ui.retainedTasks", "1000")
-      .getOrCreate()
+
+  /** Run `io`, a write of the results file `path`: a failed write
+   * stops the run with an error that names the file. */
+  private[graft] def writing(path: String)(io: => Unit): Unit =
+    try io
+    catch { case e: java.io.IOException =>
+      throw new java.io.IOException(s"cannot write $path: ${e.getMessage}", e) }
 
   private val jdk17AddOpens: Seq[String] = Seq(
     "java.lang", "java.lang.invoke", "java.lang.reflect", "java.io",
@@ -199,14 +211,13 @@ object Bench {
     // query (atomic rename), so a mid-sweep death loses one cell, not
     // the whole session (round-2/3 lesson: the JSON landed only at
     // session end and stdout parsing failed twice).
-    def flush(partial: Boolean): Unit =
-      try {
-        val tmp = java.nio.file.Paths.get("bench_out.json.tmp")
-        java.nio.file.Files.write(tmp, renderJson(partial).getBytes("UTF-8"))
-        java.nio.file.Files.move(tmp, java.nio.file.Paths.get("bench_out.json"),
-          java.nio.file.StandardCopyOption.REPLACE_EXISTING,
-          java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-      } catch { case _: Throwable => () }
+    def flush(partial: Boolean): Unit = writing("bench_out.json") {
+      val tmp = java.nio.file.Paths.get("bench_out.json.tmp")
+      java.nio.file.Files.write(tmp, renderJson(partial).getBytes("UTF-8"))
+      java.nio.file.Files.move(tmp, java.nio.file.Paths.get("bench_out.json"),
+        java.nio.file.StandardCopyOption.REPLACE_EXISTING,
+        java.nio.file.StandardCopyOption.ATOMIC_MOVE)
+    }
     def record(name: String, sec: Double): Unit = { results += name -> sec; flush(partial = true) }
 
     /** Tail re-run protocol: one clean measurement, and if it exceeds

@@ -49,16 +49,7 @@ import graft.sources.{EdgeBuilder, Transcripts, VertexDict}
 object ScalingBench {
 
   private def session(cpus: Int, parts: Int, tag: String): SparkSession = {
-    val b = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName(s"graft-scaling-$tag")
-      .config("spark.sql.shuffle.partitions", parts)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.file.transferTo", "false") // gVisor: NIO transferTo pathology
-      .config("spark.shuffle.sort.bypassMergeThreshold", "8")
-      .config("spark.ui.enabled", "false")
-      .config("spark.cleaner.periodicGC.interval", "60s")
+    val b = Bench.builder(s"local[$cpus]", s"graft-scaling-$tag", parts.toString)
     // GRAFT_LOCAL_DIR=/dev/shm/... puts shuffle files on tmpfs: in
     // local mode every "executor" shares ONE disk, so shuffle I/O is a
     // fixed resource that cannot scale with threads (unlike a real
@@ -193,16 +184,8 @@ object ScalingBench {
       s"prebuild cache missing at $cacheDir — run the thread-mode main once first")
 
     def clusterSession(execs: Int, parts: Int, tag: String): SparkSession = {
-      val b = SparkSession.builder()
-        .master(s"local-cluster[$execs,$coresPerExec,$memMB]")
-        .appName(s"graft-scaling-jvm-$tag")
-        .config("spark.sql.shuffle.partitions", parts)
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.file.transferTo", "false")
-        .config("spark.shuffle.sort.bypassMergeThreshold", "8")
-        .config("spark.ui.enabled", "false")
-        .config("spark.cleaner.periodicGC.interval", "60s")
+      val b = Bench.builder(s"local-cluster[$execs,$coresPerExec,$memMB]",
+          s"graft-scaling-jvm-$tag", parts.toString)
         // the local-cluster M is the WORKER's capacity, not the
         // executor heap — size the executor JVM explicitly
         .config("spark.executor.memory", s"${memMB}m")

@@ -112,17 +112,7 @@ object StressBench {
     val cacheDir =
       if (needGraph) ScalingBench.ensureCache(numConvs, turnsPerConv) else ""
 
-    val builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-stress")
-      .config("spark.sql.shuffle.partitions", parts)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.file.transferTo", "false") // gVisor NIO pathology
-      .config("spark.shuffle.sort.bypassMergeThreshold", "8")
-      .config("spark.ui.enabled", "false")
-      .config("spark.cleaner.periodicGC.interval", "60s")
-      .config("spark.sql.ui.retainedExecutions", "10")
+    val builder = Bench.builder(s"local[$cpus]", "graft-stress", parts.toString)
     // GRAFT_LOCAL_DIR=/dev/shm/…: tmpfs shuffle, the ScalingBench
     // protocol (single shared disk is not the resource under test)
     val spark = sys.env.get("GRAFT_LOCAL_DIR")
@@ -150,10 +140,9 @@ object StressBench {
 
     def emit(line: String): Unit = {
       println(line)
-      try java.nio.file.Files.write(
+      Bench.writing("stress_out.jsonl")(java.nio.file.Files.write(
         java.nio.file.Paths.get("stress_out.jsonl"), (line + "\n").getBytes("UTF-8"),
-        java.nio.file.StandardOpenOption.CREATE, java.nio.file.StandardOpenOption.APPEND)
-      catch { case _: Throwable => () }
+        java.nio.file.StandardOpenOption.CREATE, java.nio.file.StandardOpenOption.APPEND))
     }
 
     def cell(op: String, units: Long, unitName: String)(f: => Long): Unit = {

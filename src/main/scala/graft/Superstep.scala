@@ -136,23 +136,23 @@ object Superstep {
   }
 
   /** One resident-state superstep's messages: [[gather]] from the
-   * active rows of `c.state` (their `id` and `payload` columns), then
-   * ONE left join `state ⋈ msgs` by id, so each row sees its combined
-   * message as a nullable `msg`. The join is hinted `shuffle_hash`:
-   * unhinted, AQE re-plans it as a broadcast of `msgs` (an extra job).
-   * Both sides are clustered by id, so the hash join needs no
-   * exchange. */
+   * active rows of `state` (every row when it has no `active` flag),
+   * their `id` and `payload` columns, then ONE left join
+   * `state ⋈ msgs` by id, so each row sees its combined message as a
+   * nullable `msg`. The join is hinted `shuffle_hash`: unhinted, AQE
+   * re-plans it as a broadcast of `msgs` (an extra job). Both sides
+   * are clustered by id, so the hash join needs no exchange. */
   def withMessages(
       graph: LinkGraph,
-      c: Cut,
+      state: DataFrame,
       payload: Seq[String],
       signal: Column,
       combine: Column => Column,
       saltBuckets: Int = 0): DataFrame = {
+    val active = if (state.columns.contains("active")) state.where(col("active")) else state
     val msgs = gather(
-      graph, c.state.where(col("active")).select(("id" +: payload).map(col): _*),
-      signal, combine, saltBuckets)
-    c.state.join(msgs.hint("shuffle_hash"), Seq("id"), "left")
+      graph, active.select(("id" +: payload).map(col): _*), signal, combine, saltBuckets)
+    state.join(msgs.hint("shuffle_hash"), Seq("id"), "left")
   }
 
   /** The end of a [[loop]]: the last state, its iteration number, and
@@ -170,7 +170,8 @@ object Superstep {
    * dump and restore (core/graph.hpp:252-306).
    *
    * Free point: the superseded state is freed right after `step` has
-   * cut its successor; the last state is the caller's.
+   * cut its successor, unless `step` handed it back unchanged (an idle
+   * round that ends the loop); the last state is the caller's.
    *
    * Save rule: iteration i is saved (`saved(state)`, with `count`) when
    * i % ckptEvery == 0 and the loop goes on, and the final iteration
@@ -194,7 +195,7 @@ object Superstep {
     while (cut.more && i < maxIterations) {
       val t0 = System.nanoTime()
       val next = step(cut)
-      cut.state.graftFree()
+      if (next.state ne cut.state) cut.state.graftFree()
       cut = next
       i += 1
       log(f"$name iter $i: count=${cut.count} ${(System.nanoTime() - t0) / 1e9}%.2f s")

@@ -64,7 +64,7 @@ object Bfs {
       step = { c =>
         level += 1
         val claimed = !reached && col("msg").isNotNull
-        Superstep.cutActive(Superstep.withMessages(graph, c, Nil,
+        Superstep.cutActive(Superstep.withMessages(graph, c.state, Nil,
             signal = col("src"), combine = min)
           .select(col("id"),
             when(claimed, col("msg")).otherwise(col("parent")).as("parent"),

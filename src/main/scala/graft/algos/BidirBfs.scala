@@ -21,11 +21,17 @@ import graft.{LinkGraph, Superstep}
  * best ≤ radS + radT the answer is final. Disconnected pairs exhaust
  * one frontier and report −1.
  *
- * Scale shape: per round one co-partitioned gather
- * ([[Superstep.gather]]), one anti-join
- * against that side's visited set, one scalar meet-check aggregate
- * against the OTHER side's ball (the Allreduce analog). All state
- * cuts through the lineage cut; superseded cuts are freed each round.
+ * Scale shape: one [[Superstep.loop]] over the reached rows of both
+ * searches, `(id, side, d, active)` with side 0 for s and 1 for t;
+ * `active` marks the rows the last round claimed, and a side's
+ * frontier is its rows at its radius. A round is one co-partitioned
+ * gather ([[Superstep.gather]]) from the expanding side's frontier,
+ * an anti-join against that side's rows, the union into the lineage
+ * cut (whose action counts the claimed rows) and one scalar
+ * meet-check aggregate of the claimed rows against the OTHER side's
+ * (the Allreduce analog): 4 Spark jobs (the message shuffle's map
+ * stage, the cut, and the aggregate's exchange and result), pinned by
+ * PageRankJobsSpec.
  */
 object BidirBfs {
 
@@ -38,38 +44,35 @@ object BidirBfs {
     val spark = graph.spark
     import spark.implicits._
     if (sId == tId) return Result(0L, 0)
-    val np = graph.numPartitions
 
-    def seed(id: Long) = Seq((id, 0L)).toDF("id", "d")
-      .repartition(np, col("id")).graftCut
-
-    var visS = seed(sId); var frS = visS; var cntS = 1L; var radS = 0L
-    var visT = seed(tId); var frT = visT; var cntT = 1L; var radT = 0L
+    // per side (0 = s, 1 = t): frontier size and radius
+    val cnt = Array(1L, 1L)
+    val rad = Array(0L, 0L)
     var best = Long.MaxValue
-    var rounds = 0
-    while (best > radS + radT && cntS > 0 && cntT > 0 && rounds < maxRounds) {
-      rounds += 1
-      val expandS = cntS <= cntT
-      val (vis, fr, rad, other) =
-        if (expandS) (visS, frS, radS, visT)
-        else (visT, frT, radT, visS)
-      val msgs = Superstep.gather(graph, fr.select(col("id")), signal = lit(1L), combine = min)
-      val (claimed, n) = msgs
-        .join(vis, Seq("id"), "left_anti")
-        .select(col("id"), lit(rad + 1L).as("d"))
-        .graftCutCount
-      // meet check: only newly claimed vertices can create new meets
-      val cand = claimed
-        .join(other.select(col("id"), col("d").as("d2")), "id")
-        .agg(min(col("d") + col("d2"))).first()
-      if (!cand.isNullAt(0)) best = math.min(best, cand.getLong(0))
-      val newVis = vis.unionByName(claimed).graftCut
-      vis.graftFree()
-      if (fr ne vis) fr.graftFree()
-      if (expandS) { visS = newVis; frS = claimed; cntS = n; radS = rad + 1 }
-      else { visT = newVis; frT = claimed; cntT = n; radT = rad + 1 }
-    }
-    Seq(visS, visT, frS, frT).distinct.foreach(_.graftFree())
-    Result(if (best == Long.MaxValue) -1L else best, rounds)
+    def more = best > rad.sum && cnt.forall(_ > 0)
+    val r = Superstep.loop("bidir", maxRounds)(
+      start = _ => Superstep.cutActive(Seq((sId, 0, 0L, true), (tId, 1, 0L, true))
+        .toDF("id", "side", "d", "active")
+        .repartition(graph.numPartitions, col("id"))),
+      step = { c =>
+        val x = if (cnt(0) <= cnt(1)) 0 else 1
+        val mine = c.state.where(col("side") === x)
+        val msgs = Superstep.gather(graph, mine.where(col("d") === rad(x)).select(col("id")),
+          signal = lit(1L), combine = min)
+        val claimed = msgs.join(mine.hint("shuffle_hash"), Seq("id"), "left_anti")
+          .select(col("id"), lit(x).as("side"), lit(rad(x) + 1L).as("d"), lit(true).as("active"))
+        val next = Superstep.cutActive(
+          c.state.withColumn("active", lit(false)).unionByName(claimed))
+        // meet check: only newly claimed vertices can create new meets
+        val meet = next.state.where(col("active"))
+          .join(next.state.where(col("side") =!= x).select(col("id"), col("d").as("d2")), "id")
+          .agg(min(col("d") + col("d2"))).first()
+        if (!meet.isNullAt(0)) best = math.min(best, meet.getLong(0))
+        cnt(x) = next.count
+        rad(x) += 1
+        next.copy(more = more)
+      })
+    r.state.graftFree()
+    Result(if (best == Long.MaxValue) -1L else best, r.iterations)
   }
 }

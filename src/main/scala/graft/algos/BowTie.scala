@@ -19,7 +19,10 @@ import graft.{LinkGraph, Superstep}
  * core, then two frontier closures — forward over the edge layout,
  * backward over the O(1) [[LinkGraph.transpose]] (the reference's D5
  * layout swap, core/graph.hpp:758-768). Each closure is one BFS-style
- * loop (co-partitioned gather + anti-join per level).
+ * [[Superstep.loop]] over its reached rows `(id, active)`: a
+ * co-partitioned gather and an anti-join per level into the lineage
+ * cut, 2 Spark jobs (the message shuffle's map stage and the cut),
+ * pinned by PageRankJobsSpec.
  *
  * @return (cls, n, min_key, max_key) — one row per non-empty class,
  *         keys being the lexicographic extremes for a hash-stable
@@ -28,10 +31,7 @@ import graft.{LinkGraph, Superstep}
 object BowTie {
 
   def census(graph: LinkGraph): DataFrame = {
-    val spark = graph.spark
-    val np = graph.numPartitions
     val sccs = Scc.run(graph).sccs
-      .repartition(np, col("id")).graftCut
     // tie-break by min KEY (ids are dictionary-internal and not
     // key-ordered — the same re-canonicalization q_scc's export does)
     val coreRow = sccs.join(graph.vertices, "id")
@@ -40,24 +40,6 @@ object BowTie {
       .orderBy(desc("sz"), asc("mk")).limit(1).first()
     val coreId = coreRow.getLong(0)
     val core = sccs.where(col("scc") === coreId).select(col("id")).graftCut
-
-    /** Directed closure: all vertices with a path FROM the seed set
-     * (seeds included). */
-    def closure(g: LinkGraph, seeds: DataFrame): DataFrame = {
-      var visited = seeds.repartition(np, col("id")).graftCut
-      var frontier = visited
-      var cnt = visited.count()
-      while (cnt > 0) {
-        val msgs = Superstep.gather(g, frontier.select(col("id")), signal = lit(1L), combine = min)
-        val (claimed, n) = msgs.select(col("id"))
-          .join(visited, Seq("id"), "left_anti").graftCutCount
-        val newVis = visited.unionByName(claimed).graftCut
-        visited.graftFree()
-        if (frontier ne visited) frontier.graftFree()
-        visited = newVis; frontier = claimed; cnt = n
-      }
-      visited
-    }
 
     val out = closure(graph, core)           // reachable FROM core
     val in = closure(graph.transpose, core)  // vertices REACHING core
@@ -77,4 +59,18 @@ object BowTie {
     Seq(sccs, core, out, in).foreach(_.graftFree())
     censusDf
   }
+
+  /** Directed closure: all vertices with a path FROM the seed set
+   * `(id)` (seeds included), as the reached rows `(id, active)`. */
+  private[graft] def closure(g: LinkGraph, seeds: DataFrame): DataFrame =
+    Superstep.loop("bowtie", Int.MaxValue)(
+      start = _ => Superstep.cutActive(seeds.withColumn("active", lit(true))
+        .repartition(g.numPartitions, col("id"))),
+      step = { c =>
+        val claimed = Superstep.gather(g, c.state.where(col("active")).select(col("id")),
+            signal = lit(1L), combine = min)
+          .join(c.state.hint("shuffle_hash"), Seq("id"), "left_anti")
+          .select(col("id"), lit(true).as("active"))
+        Superstep.cutActive(c.state.withColumn("active", lit(false)).unionByName(claimed))
+      }).state
 }

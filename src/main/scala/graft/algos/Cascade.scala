@@ -25,11 +25,18 @@ import graft.{LinkGraph, Superstep}
  * SQL. No RNG anywhere.
  *
  * Per round ONE gather from the newly-activated frontier (+1 per
- * out-edge, sum-combined), an accumulate into the pending-count
- * state, and a threshold test; cum counts equal "activated
- * in-neighbors so far" because every vertex activates in exactly one
- * round and signals exactly once. The frontier is the build side of
- * the co-partitioned gather; the edge side never moves.
+ * out-edge, sum-combined) and an accumulate into the count `cnt` of
+ * activated in-neighbors, then a threshold test; the counts are exact
+ * because every vertex activates in exactly one round and signals
+ * exactly once. The state on [[Superstep.loop]] is the reached rows
+ * `(id, cnt, act_round, active)` — the seeds and every vertex with an
+ * activated in-neighbor, `act_round` null until the vertex activates,
+ * `active` the frontier. A round cuts its messages (with the
+ * receivers' thresholds), which the new state reads twice, then the
+ * state: the rows without a message ∪ the messaged rows, both
+ * co-partitioned with the state. 3 Spark jobs (the message shuffle's
+ * map stage and the two cuts), pinned by PageRankJobsSpec. The edge
+ * side never moves.
  */
 object Cascade {
 
@@ -53,58 +60,34 @@ object Cascade {
       .repartition(graph.numPartitions, col("id"))
       .graftCut
 
-    var active: DataFrame = seeds.toDF("id")
-      .select(col("id"), lit(0).as("act_round")).graftCut
-    var frontier: DataFrame = active
-    var cum: DataFrame = null
     var round = 0
-    var frontierCount = seeds.size.toLong
-
-    while (frontierCount > 0 && round < maxRounds) {
-      round += 1
-      val msgs = Superstep.gather(
-        graph, frontier.select(col("id"), lit(1L).as("v")),
-        signal = col("v"), combine = sum)
-
-      // accumulate activated-in-neighbor counts
-      val prevCum = cum
-      cum =
-        (if (cum eq null) msgs.select(col("id"), col("msg").as("cnt"))
-         else
-           cum.join(msgs, Seq("id"), "full")
-             .select(col("id"),
-               (coalesce(col("cnt"), lit(0L)) + coalesce(col("msg"), lit(0L)))
-                 .as("cnt")))
-          .repartition(graph.numPartitions, col("id"))
+    val r = Superstep.loop("cascade", maxRounds)(
+      start = _ => Superstep.cutActive(seeds.toDF("id")
+        .select(col("id"), lit(0L).as("cnt"), lit(0).as("act_round"), lit(true).as("active"))
+        .repartition(graph.numPartitions, col("id"))),
+      step = { c =>
+        round += 1
+        val msgs = Superstep.gather(
+            graph, c.state.where(col("active")).select(col("id")), signal = lit(1L), combine = sum)
+          .hint("shuffle_hash").join(thresh, "id")
           .graftCut
-      if (prevCum ne null) prevCum.graftFree()
-
-      val (newActive, n) = cum
-        .join(thresh, "id")
-        .where(col("cnt") >= col("th"))
-        .join(active.select(col("id")), Seq("id"), "left_anti")
-        .select(col("id"), lit(round).as("act_round"))
-        .graftCutCount
-      // the superseded frontier cut (last round's newActive) is done;
-      // skip round 1, where frontier IS the seed `active` cut that
-      // the union below still reads
-      if (frontier ne active) frontier.graftFree()
-      frontier = newActive
-      frontierCount = n
-      if (n > 0) {
-        val prevActive = active
-        active = active.unionByName(newActive)
-          .repartition(graph.numPartitions, col("id")).graftCut
-        prevActive.graftFree()
-      }
-    }
-    // free every auxiliary cut before returning: the trailing
-    // frontier (empty or maxRounds-truncated), the cumulative
-    // counts, and the threshold table — `active` is already
-    // materialized, nothing recomputes through them
-    if (frontier ne active) frontier.graftFree()
-    if (cum ne null) cum.graftFree()
+        val cnt = coalesce(col("cnt"), lit(0L)) + col("msg")
+        val fires = col("act_round").isNull && cnt >= col("th")
+        val next = Superstep.cutActive(
+          c.state.join(msgs.hint("shuffle_hash"), Seq("id"), "left_anti")
+            .withColumn("active", lit(false))
+            .unionByName(msgs.join(c.state.hint("shuffle_hash"), Seq("id"), "left")
+              .select(col("id"), cnt.as("cnt"),
+                when(fires, lit(round)).otherwise(col("act_round")).as("act_round"),
+                fires.as("active"))))
+        msgs.graftFree()
+        next
+      })
+    // the activated rows, cut once; every other cut is freed
+    val activated = r.state.where(col("act_round").isNotNull)
+      .select(col("id"), col("act_round")).graftCut
+    r.state.graftFree()
     thresh.graftFree()
-    active
+    activated
   }
 }

@@ -73,7 +73,7 @@ object ConnectedComponents {
         .repartition(graph.numPartitions, col("id"))),
       step = { c =>
         history += c.count
-        Superstep.cutActive(Superstep.withMessages(graph, c, Seq("lbl"),
+        Superstep.cutActive(Superstep.withMessages(graph, c.state, Seq("lbl"),
             signal = col("lbl"), combine = min, saltBuckets = salt)
           .select(col("id"),
             least(col("lbl"), col("msg")).as("lbl"),

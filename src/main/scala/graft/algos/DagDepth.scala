@@ -52,7 +52,7 @@ object DagDepth {
         case None => graph.degrees.select(col("id"), lit(0L).as("d"), lit(true).as("active"))
       }).select(col("id"), col("d"), col("active"))
         .repartition(graph.numPartitions, col("id"))),
-      step = c => Superstep.cutActive(Superstep.withMessages(graph, c, Seq("d"),
+      step = c => Superstep.cutActive(Superstep.withMessages(graph, c.state, Seq("d"),
           signal = col("d") + lit(1L), combine = max)
         .select(col("id"), greatest(col("d"), col("msg")).as("d"),
           coalesce(col("msg") > col("d"), lit(false)).as("active"))),
@@ -75,9 +75,12 @@ object DagDepth {
    * On transcript graphs this contracts every conversation chain to
    * its head and leaves a 1-hop DAG into the tool sinks: a 10^6-turn
    * conversation costs ~20 supersteps instead of 10^6. The relaxation
-   * loop runs over the (much smaller) contracted table with plain
-   * co-hash joins — at 10^12 turns the contracted graph is
-   * |convs| + |tools| rows, still fully distributed.
+   * is [[run]]'s resident `(id, d, active)` state over the roots only,
+   * on [[Superstep.loop]], gathering over the contracted edge table
+   * (weight = off(u)+1): 2 Spark jobs per superstep (the message
+   * shuffle's map stage and the cut), pinned by PageRankJobsSpec. At
+   * 10^12 turns the contracted graph is |convs| + |tools| rows, still
+   * fully distributed.
    */
   def runContracted(graph: LinkGraph, maxIterations: Int = 10000): Result = {
     require(!graph.symmetric, "longest path is defined on the directed DAG")
@@ -92,7 +95,7 @@ object DagDepth {
     val succ = graph.vertices.select(col("id"))
       .join(preds, Seq("id"), "left")
     val lr = ListRank.run(succ, parts)
-    val info = lr.ranks.graftCut // (id, rank = offset from root, root)
+    val info = lr.ranks // (id, rank = offset from root, root)
 
     // contracted edges, clustered by supervertex src
     val roots = graph.degrees.where(col("in_degree") =!= 1)
@@ -101,55 +104,28 @@ object DagDepth {
       .join(roots.select(col("id").as("dst")), "dst")
       .join(info.select(col("id").as("src"), col("rank").as("off"),
         col("root").as("csrc")), "src")
-      .select(col("csrc").as("src"), col("dst"), (col("off") + lit(1L)).as("w"))
+      .select(col("csrc").as("src"), col("dst"), (col("off") + lit(1L)).as("weight"))
       .repartition(parts, col("src"))
       .graftCut
+    val contracted = graph.copy(edgesBySrc = cEdges)
 
     // weighted max-plus relaxation on the roots only
-    var depth = roots.select(col("id"), lit(0L).as("d"))
-      .repartition(parts, col("id")).graftCut
-    var frontier = depth
-    var active = depth.count()
-    var rounds = 0
-    var pendingFree = List[DataFrame]()
-    var base = depth
-    while (active > 0 && rounds < maxIterations) {
-      rounds += 1
-      val msgs = cEdges
-        .join(frontier.select(col("id").as("src"), col("d")), "src")
-        .groupBy(col("dst").as("id"))
-        .agg(max(col("d") + col("w")).as("msg"))
-      val (improved, n) = msgs
-        .join(depth.select(col("id"), col("d").as("old")), Seq("id"), "left")
-        .where(col("msg") > col("old"))
-        .select(col("id"), col("msg").as("d"))
-        .graftCutCount
-      if (n > 0) {
-        pendingFree = frontier :: pendingFree
-        depth = depth
-          .join(improved.select(col("id"), col("d").as("nd")), Seq("id"), "left")
-          .select(col("id"), coalesce(col("nd"), col("d")).as("d"))
-        frontier = improved
-      }
-      active = n
-      if (active > 0 && rounds % 4 == 0) {
-        depth = depth.graftCut
-        (base :: pendingFree).filter(_ ne frontier).foreach(_.graftFree())
-        pendingFree = Nil
-        base = depth
-      }
-      Superstep.log(f"dagdepth-c round $rounds: active=$active")
-    }
+    val r = Superstep.loop("dagdepth-c", maxIterations)(
+      start = _ => Superstep.cutActive(
+        roots.select(col("id"), lit(0L).as("d"), lit(true).as("active"))
+          .repartition(parts, col("id"))),
+      step = c => Superstep.cutActive(Superstep.withMessages(contracted, c.state, Seq("d"),
+          signal = col("d") + col("weight"), combine = max)
+        .select(col("id"), greatest(col("d"), col("msg")).as("d"),
+          coalesce(col("msg") > col("d"), lit(false)).as("active"))))
 
     // expand: depth(v) = depth(root(v)) + offset(v)
     val fin = info
-      .join(depth.select(col("id").as("root"), col("d").as("rd")), "root")
+      .join(r.state.select(col("id").as("root"), col("d").as("rd")), "root")
       .select(col("id"), (col("rd") + col("rank")).as("d"))
       .repartition(parts, col("id"))
       .graftCut
-    (base :: frontier :: info :: cEdges :: pendingFree)
-      .filter(_ ne fin).distinct.foreach(_.graftFree())
-    depth.graftFree()
-    Result(fin, lr.rounds + rounds)
+    Seq(info, cEdges, r.state).foreach(_.graftFree())
+    Result(fin, lr.rounds + r.iterations)
   }
 }

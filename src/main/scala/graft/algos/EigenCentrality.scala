@@ -21,11 +21,13 @@ import graft.{LinkGraph, Superstep}
  * oracle chains K CTE rounds). Fixed K (default 6) rather than a float
  * convergence test, for the same exactness reason as Katz.
  *
- * Scale shape: identical to PageRank's dense schedule — one
- * partially-aggregated gather per round over the co-clustered
- * symmetric edge layout, state re-clustered across the lineage cut;
- * no driver-side state beyond the scalar max. raw ≤ d_max · 10⁶
- * stays far inside long range for any realistic degree.
+ * Scale shape: PageRank's dense schedule on [[Superstep.loop]]. The
+ * resident state is the raw sums `(id, s)`; the previous round's max
+ * `m` stays on the driver, and the signal `s · S div m` renormalizes
+ * at the source, so the max rides the round's one lineage cut: 2
+ * Spark jobs per round (the message shuffle's map stage and the cut),
+ * pinned by PageRankJobsSpec. raw ≤ d_max · 10⁶ stays far inside long
+ * range for any realistic degree.
  */
 object EigenCentrality {
 
@@ -36,27 +38,23 @@ object EigenCentrality {
   def run(graph: LinkGraph, iterations: Int = 6,
       scale: Long = 1000000L): Result = {
     require(graph.symmetric, "eigenvector centrality runs on the undirected graph")
-    val parts = graph.numPartitions
-    var x = graph.vertices.select(col("id"), lit(scale).as("x"))
-      .repartition(parts, col("id")).graftCut
-    var i = 0
-    while (i < iterations) {
-      i += 1
-      val msgs = Superstep.gather(
-        graph, x, signal = col("x"), combine = sum)
-      val raw = graph.vertices.select(col("id"))
-        .join(msgs, Seq("id"), "left")
-        .select(col("id"), coalesce(col("msg"), lit(0L)).as("s"))
-        .repartition(parts, col("id")).graftCut
-      val m = raw.agg(coalesce(max(col("s")), lit(0L))).first().getLong(0)
-      val xNext =
-        if (m == 0L) raw.select(col("id"), lit(0L).as("x")).graftCut
-        else raw.select(col("id"),
-          expr(s"(s * ${scale}L) div ${m}L").as("x")).graftCut
-      x.graftFree(); raw.graftFree()
-      x = xNext
-      if (m == 0L) i = iterations // edgeless graph: fixpoint is all-zero
-    }
-    Result(x.select(col("id"), col("x").as("eigen_x")), iterations)
+    // x = s · scale div m: the start s = m = 1 gives x_0 = scale
+    var m = 1L
+    def x = expr(s"(s * ${scale}L) div ${m}L")
+    val r = Superstep.loop("eigen", iterations)(
+      start = _ => Superstep.Cut(
+        graph.vertices.select(col("id"), lit(1L).as("s"))
+          .repartition(graph.numPartitions, col("id")).graftCut,
+        graph.numVertices, more = true),
+      step = c => {
+        val (raw, max) = Superstep.withMessages(graph, c.state, Seq("s"), x, sum)
+          .select(col("id"), coalesce(col("msg"), lit(0L)).as("s"))
+          .graftCutMax("s")
+        m = max
+        // an edgeless graph: the fixpoint is all-zero
+        Superstep.Cut(raw, c.count, more = m > 0)
+      })
+    val eigen = if (m == 0L) lit(0L) else x
+    Result(r.state.select(col("id"), eigen.as("eigen_x")), iterations)
   }
 }

@@ -4,7 +4,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.syntax._
-import graft.LinkGraph
+import graft.{LinkGraph, Superstep}
 
 /**
  * Truncated absorbing-random-walk hitting time — "expected steps from
@@ -25,10 +25,13 @@ import graft.LinkGraph
  * Integer-exact (10⁴-scaled steps, floor division), so the DuckDB
  * oracle replays the rounds bit-for-bit.
  *
- * Scale shape: one dense co-partitioned gather (sum-combine) + one
- * degree join per round, fixed round count — the PageRank plan shape
- * with a pinned absorbing class; no windows, no driver state beyond
- * the loop counter.
+ * Scale shape: the PageRank plan shape with a pinned absorbing class
+ * and a fixed round count, on [[Superstep.loop]]. The resident state
+ * `(id, absorb, d, h)` carries the degree, so a round is one
+ * [[Superstep.withMessages]] join (sum-combine) into the lineage cut:
+ * 2 Spark jobs (the message shuffle's map stage and the cut), pinned
+ * by PageRankJobsSpec. No windows, no driver state beyond the loop
+ * counter.
  */
 object HittingTime {
 
@@ -41,34 +44,21 @@ object HittingTime {
       absorbing: org.apache.spark.sql.Column,
       iters: Int = 5): DataFrame = {
     require(graph.symmetric, "hitting time expects the symmetrized graph")
-    val np = graph.numPartitions
-    val verts = graph.vertices
-      .select(col("id"), col("key"), absorbing.cast("boolean").as("absorb"))
-      .repartition(np, col("id"))
-      .persist()
-    val deg = graph.degrees.select(col("id"), col("out_degree").as("d"))
-    var h = verts.select(col("id"), lit(0L).as("h"))
-      .repartition(np, col("id")).graftCut
-    var prev: DataFrame = null
-    for (_ <- 1 to iters) {
-      val msgs = graph.edgesBySrc
-        .join(h.select(col("id").as("src"), col("h")), "src")
-        .groupBy(col("dst").as("id")).agg(sum(col("h")).as("m"))
-      val next = verts
-        .join(msgs, Seq("id"), "left")
-        .join(deg, "id")
-        .select(col("id"),
-          when(col("absorb"), lit(0L))
-            .otherwise(lit(Scale) + expr("coalesce(m, 0L) div d")).as("h"))
-        .graftCut
-      if (prev != null) prev.graftFree()
-      prev = h
-      h = next
-    }
-    if (prev != null) prev.graftFree()
-    val out = h.join(verts.select(col("id"), col("key")), "id")
+    val r = Superstep.loop("hitting", iters)(
+      start = _ => Superstep.Cut(
+        graph.vertices.join(graph.degrees, "id")
+          .select(col("id"), absorbing.cast("boolean").as("absorb"),
+            col("out_degree").as("d"), lit(0L).as("h"))
+          .repartition(graph.numPartitions, col("id")).graftCut,
+        graph.numVertices, more = true),
+      step = c => Superstep.Cut(
+        Superstep.withMessages(graph, c.state, Seq("h"), col("h"), sum)
+          .select(col("id"), col("absorb"), col("d"),
+            when(col("absorb"), lit(0L))
+              .otherwise(lit(Scale) + expr("coalesce(msg, 0L) div d")).as("h"))
+          .graftCut,
+        c.count, more = true))
+    r.state.join(graph.vertices, "id")
       .select(col("id"), col("key"), col("h").as("h_e4"))
-    verts.unpersist(blocking = false)
-    out
   }
 }

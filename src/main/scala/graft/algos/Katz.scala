@@ -23,6 +23,12 @@ import graft.{LinkGraph, Superstep}
  * stay small (chains have in-degree 1; tool vertices are sinks), but
  * callers on denser graphs should watch the 8^K·paths magnitude —
  * at K=5 the scale factor alone is 4096.
+ *
+ * Schedule: one resident state `(id, c, x)` — the walk count and the
+ * Horner sum — on [[Superstep.loop]]; a superstep is one
+ * [[Superstep.withMessages]] join into the lineage cut, 2 Spark jobs
+ * (the message shuffle's map stage and the cut), pinned by
+ * PageRankJobsSpec.
  */
 object Katz {
 
@@ -31,32 +37,18 @@ object Katz {
   /** @return katz: (id, katz_x) with katz_x = 8^K · Σ α^k paths_k(v),
    * an exact long. */
   def run(graph: LinkGraph, iterations: Int = 5): Result = {
-    val parts = graph.numPartitions
-    // paths_0 = 1 for every vertex; acc carries the Horner sum
-    var p = graph.vertices.select(col("id"), lit(1L).as("c"))
-      .repartition(parts, col("id")).graftCut
-    var acc = graph.vertices.select(col("id"), lit(0L).as("x"))
-      .repartition(parts, col("id")).graftCut
-    var i = 0
-    while (i < iterations) {
-      i += 1
-      // one dense superstep: every vertex with a nonzero walk count
-      // signals it along out-edges; sum per destination
-      val msgs = Superstep.gather(
-        graph, p, signal = col("c"), combine = sum)
-      val pNext = graph.vertices.select(col("id"))
-        .join(msgs, Seq("id"), "left")
-        .select(col("id"), coalesce(col("msg"), lit(0L)).as("c"))
-        .repartition(parts, col("id"))
-        .graftCut
-      val accNext = acc
-        .join(pNext.select(col("id"), col("c")), "id")
-        .select(col("id"), (col("x") * lit(8L) + col("c")).as("x"))
-        .graftCut
-      p.graftFree(); acc.graftFree()
-      p = pNext; acc = accNext
-    }
-    p.graftFree()
-    Result(acc.select(col("id"), col("x").as("katz_x")), iterations)
+    // paths_0 = 1 for every vertex; x carries the Horner sum
+    val r = Superstep.loop("katz", iterations)(
+      start = _ => Superstep.Cut(
+        graph.vertices.select(col("id"), lit(1L).as("c"), lit(0L).as("x"))
+          .repartition(graph.numPartitions, col("id")).graftCut,
+        graph.numVertices, more = true),
+      step = c => {
+        val walks = coalesce(col("msg"), lit(0L))
+        Superstep.Cut(Superstep.withMessages(graph, c.state, Seq("c"), col("c"), sum)
+          .select(col("id"), walks.as("c"), (col("x") * lit(8L) + walks).as("x"))
+          .graftCut, c.count, more = true)
+      })
+    Result(r.state.select(col("id"), col("x").as("katz_x")), iterations)
   }
 }

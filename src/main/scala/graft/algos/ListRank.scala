@@ -72,6 +72,9 @@ object ListRank {
       state = next
       active = actSum.toLong
     }
-    Result(state.select(col("id"), col("d").as("rank"), col("root")), rounds)
+    // the ranks are a cut of their own, so the last state can be freed
+    val ranks = state.select(col("id"), col("d").as("rank"), col("root")).graftCut
+    state.graftFree()
+    Result(ranks, rounds)
   }
 }

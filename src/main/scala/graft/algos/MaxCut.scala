@@ -25,59 +25,53 @@ import graft.{LinkGraph, Superstep}
  *
  * Per round TWO dense gathers on the symmetric layout (side sums →
  * gain; candidate priorities → independence) + one co-partitioned
- * merge. The edge side never re-shuffles.
+ * merge, on [[Superstep.loop]] with the resident state `(id, deg,
+ * side, pi)`. The edge side never re-shuffles. 4 Spark jobs per round
+ * (each gather's map stage, the candidate cut and the state cut),
+ * pinned by PageRankJobsSpec; a round with no candidate is the
+ * fixpoint and ends the loop after its first 2.
  */
 object MaxCut {
 
   /** @return (id, side) after `rounds` independent-set local moves */
   def run(graph: LinkGraph, rounds: Int = 4): DataFrame = {
     require(graph.symmetric, "max-cut local search runs on the undirected graph")
-    val deg = graph.degrees.select(col("id"), col("out_degree").as("deg"))
-    // (id, side, pi): side = md5 bit; pi = unique fixed-width priority
-    var side: DataFrame = graph.vertices
-      .select(col("id"),
-        (expr("cast(conv(substring(md5(concat('mc|', key)), 1, 10), 16, 10) as bigint)")
-          % 2).cast("long").as("side"),
-        concat(substring(md5(concat(lit("mx|"), col("key"))), 1, 10),
-          lit("|"), col("key")).as("pi"))
-      .repartition(graph.numPartitions, col("id"))
-      .graftCut
-    var prev = side
-
-    for (_ <- 1 to rounds) {
-      val msgs = Superstep.gather(
-        graph, side.select(col("id"), col("side")),
-        signal = col("side"), combine = sum)
-      // positive-gain candidates: more same-side than cross-side nbrs
-      val cand = side
-        .join(msgs, Seq("id"), "left")
-        .join(deg, "id")
-        .where(
-          when(col("side") === 1L, coalesce(col("msg"), lit(0L)))
-            .otherwise(col("deg") - coalesce(col("msg"), lit(0L))) * 2 > col("deg"))
-        .select(col("id"), col("pi"))
-      val (candCut, nCand) = cand.graftCutCount
-      if (nCand > 0) {
-        val nbrMin = Superstep.gather(graph, candCut, signal = col("pi"), combine = min)
-        side = side
-          .join(candCut.select(col("id"), col("pi").as("cpi")), Seq("id"), "left")
-          .join(nbrMin, Seq("id"), "left")
-          .select(col("id"),
-            when(col("cpi").isNotNull &&
-              (col("msg").isNull || col("cpi") < col("msg")),
-              lit(1L) - col("side")).otherwise(col("side")).as("side"),
-            col("pi"))
+    // (id, deg, side, pi): side = md5 bit; pi = unique fixed-width priority
+    val r = Superstep.loop("maxcut", rounds)(
+      start = _ => Superstep.Cut(
+        graph.vertices.join(graph.degrees, "id")
+          .select(col("id"), col("out_degree").as("deg"),
+            (expr("cast(conv(substring(md5(concat('mc|', key)), 1, 10), 16, 10) as bigint)")
+              % 2).cast("long").as("side"),
+            concat(substring(md5(concat(lit("mx|"), col("key"))), 1, 10),
+              lit("|"), col("key")).as("pi"))
           .repartition(graph.numPartitions, col("id"))
-          .graftCut
-        prev.graftFree()
-        candCut.graftFree()
-        prev = side
-      } else {
-        // no positive-gain candidate this round: the (empty) cut
-        // still holds a cached partition set — free it
-        candCut.graftFree()
-      }
-    }
-    side.select(col("id"), col("side"))
+          .graftCut,
+        graph.numVertices, more = true),
+      step = { c =>
+        // positive-gain candidates: more same-side than cross-side nbrs
+        val same = coalesce(col("msg"), lit(0L))
+        val (cand, nCand) = Superstep.withMessages(graph, c.state, Seq("side"), col("side"), sum)
+          .where(when(col("side") === 1L, same).otherwise(col("deg") - same) * 2 > col("deg"))
+          .select(col("id"), col("pi"))
+          .graftCutCount
+        val next =
+          if (nCand == 0) c.copy(more = false)
+          else {
+            val nbrMin = Superstep.gather(graph, cand, signal = col("pi"), combine = min)
+            Superstep.Cut(c.state
+              .join(cand.select(col("id"), col("pi").as("cpi")).hint("shuffle_hash"), Seq("id"), "left")
+              .join(nbrMin.hint("shuffle_hash"), Seq("id"), "left")
+              .select(col("id"), col("deg"),
+                when(col("cpi").isNotNull &&
+                  (col("msg").isNull || col("cpi") < col("msg")),
+                  lit(1L) - col("side")).otherwise(col("side")).as("side"),
+                col("pi"))
+              .graftCut, c.count, more = true)
+          }
+        cand.graftFree()
+        next
+      })
+    r.state.select(col("id"), col("side"))
   }
 }

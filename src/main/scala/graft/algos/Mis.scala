@@ -71,7 +71,7 @@ object Mis {
       step = { c =>
         round += 1
         // min (pri, key) over UNDECIDED neighbors (struct min = lexicographic)
-        val winners = Superstep.withMessages(graph, c, Seq("key", "pri"),
+        val winners = Superstep.withMessages(graph, c.state, Seq("key", "pri"),
             signal = struct(col("pri").as("p"), col("key").as("k")), combine = min)
           .where(col("active") && (col("msg").isNull ||
             struct(col("pri").as("p"), col("key").as("k")) < col("msg")))

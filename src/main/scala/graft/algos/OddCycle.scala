@@ -49,7 +49,7 @@ object OddCycle {
       start = _ => Superstep.cutActive(graph.degrees.join(seeds, Seq("id"), "left")
         .select(col("id"), col("level"), col("level").isNotNull.as("active"))
         .repartition(np, col("id"))),
-      step = c => Superstep.cutActive(Superstep.withMessages(graph, c, Seq("level"),
+      step = c => Superstep.cutActive(Superstep.withMessages(graph, c.state, Seq("level"),
           signal = col("level") + 1, combine = min)
         .select(col("id"), coalesce(col("level"), col("msg")).as("level"),
           (col("level").isNull && col("msg").isNotNull).as("active"))))

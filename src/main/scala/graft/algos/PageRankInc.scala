@@ -49,6 +49,15 @@ import graft.{LinkGraph, Superstep}
  * touched rows per round ≪ |V| for a small arrival batch (the
  * activeHistory the spec pins), while a cold re-run touches every
  * edge every iteration.
+ *
+ * Schedule: each phase is one [[Superstep.loop]] over the resident
+ * state `(id, d, p, r, sent, active)`, `d` the phase graph's
+ * out-degree (joined once per phase) and `active` the push test of a
+ * non-dangling vertex. A push round is one [[Superstep.withMessages]]
+ * join into the lineage cut, whose action also counts the next
+ * round's pushers: 2 Spark jobs (the message shuffle's map stage and
+ * the cut), pinned by PageRankJobsSpec. A round without pushers first
+ * counts the active danglings (one more job).
  */
 object PageRankInc {
 
@@ -91,130 +100,92 @@ object PageRankInc {
       edgesBySrc = oldEdges, edgesByDst = oldByDst,
       degrees = oldDegrees, numEdges = nOld)
 
-    // ---- initial state: p = 0, r = b, sent = 0 everywhere
-    var state: DataFrame = graph.vertices
-      .select(col("id"), lit(0L).as("p"), lit(teleportMass).as("r"), lit(0L).as("sent"))
-      .repartition(graph.numPartitions, col("id"))
-      .graftCut
-
     // Once a phase goes idle (no active row at all — neither a
     // pushing non-dangling nor an absorbing dangling) every remaining
     // round is the identity in BOTH engines (the oracle's empty a$i
     // passes state through and its dangling-absorb CASE matches no
-    // row), so the engine skips them — large round budgets cost
-    // nothing after convergence. `round` counts active danglings in
-    // the idle test precisely so this claim holds: the oracle absorbs
-    // active danglings unconditionally each unrolled round, even in
-    // rounds where no non-dangling vertex pushes.
+    // row), so the loop ends there — large round budgets cost nothing
+    // after convergence. The idle test counts active danglings
+    // precisely so this claim holds: the oracle absorbs active
+    // danglings unconditionally each unrolled round, even in rounds
+    // where no non-dangling vertex pushes.
     val h1 = scala.collection.mutable.ArrayBuffer[Long]()
-    var idle = false
+    val h2 = scala.collection.mutable.ArrayBuffer[Long]()
     val t0 = System.nanoTime()
-    for (_ <- 1 to r1 if !idle) {
-      state = round(oldGraph, state, signed = false, h1)
-      idle = h1.last == 0
-    }
+    // ---- phase 1: cold push on the old graph; p = 0, r = b, sent = 0
+    val cold = Superstep.loop("pagerank-inc-1", r1)(
+      start = _ => Superstep.cutActive(withPushers(signed = false,
+        oldDegrees.select(col("id"), col("out_degree").as("d"),
+          lit(0L).as("p"), lit(teleportMass).as("r"), lit(0L).as("sent")))),
+      step = round(oldGraph, signed = false, h1))
     val t1 = System.nanoTime()
 
-    // ---- retraction: affected sources = sources of arrival edges
+    // ---- retraction: every affected source (a source of an arrival
+    // edge) un-absorbs (r += p, p = 0) and retracts its deliveries,
+    // −sent(u) to each OLD out-neighbor; the state takes the full
+    // graph's out-degrees
     val affected = graph.edgesBySrc.where(newEdgePred)
       .select(col("src").as("id")).distinct()
-    val aState = state.join(affected, "id") // (id, p, r, sent) of U
-    val (aCut, nAff) = aState.graftCutCount
-    if (nAff > 0) {
-      // corrections to OLD out-neighbors: −sent(u) each
-      val corr = Superstep.gather(
-        oldGraph, aCut.select(col("id"), col("sent")), signal = -col("sent"), combine = sum)
-      val prev = state
-      state = state
-        .join(aCut.select(col("id"), lit(true).as("aff")), Seq("id"), "left")
-        .join(corr, Seq("id"), "left")
-        .select(col("id"),
-          when(col("aff"), lit(0L)).otherwise(col("p")).as("p"),
-          (when(col("aff"), col("r") + col("p")).otherwise(col("r"))
-            + coalesce(col("msg"), lit(0L))).as("r"),
-          when(col("aff"), lit(0L)).otherwise(col("sent")).as("sent"))
-        .repartition(graph.numPartitions, col("id"))
-        .graftCut
-      prev.graftFree()
-    }
-    aCut.graftFree()
-
-    // ---- phase 2: signed push on the full graph
-    val h2 = scala.collection.mutable.ArrayBuffer[Long]()
-    idle = false
-    for (_ <- 1 to r2 if !idle) {
-      state = round(graph, state, signed = true, h2)
-      idle = h2.last == 0
-    }
+      .select(col("id"), lit(true).as("aff"))
+    val corr = Superstep.gather(
+      oldGraph, cold.state.join(affected, "id").select(col("id"), col("sent")),
+      signal = -col("sent"), combine = sum)
+    val warm = Superstep.loop("pagerank-inc-2", r2)(
+      start = { _ =>
+        val c = Superstep.cutActive(withPushers(signed = true, cold.state
+          .join(affected, Seq("id"), "left")
+          .join(corr.hint("shuffle_hash"), Seq("id"), "left")
+          .join(graph.degrees, "id")
+          .select(col("id"), col("out_degree").as("d"),
+            when(col("aff"), lit(0L)).otherwise(col("p")).as("p"),
+            (when(col("aff"), col("r") + col("p")).otherwise(col("r"))
+              + coalesce(col("msg"), lit(0L))).as("r"),
+            when(col("aff"), lit(0L)).otherwise(col("sent")).as("sent"))))
+        cold.state.graftFree()
+        c
+      },
+      step = round(graph, signed = true, h2))
+    val state = warm.state.select(col("id"), col("p"), col("r"), col("sent")).graftCut
+    warm.state.graftFree()
     val t2 = System.nanoTime()
 
-    Result(state, r1, r2, h1.toSeq, h2.toSeq,
-      (t1 - t0) / 1e9, (t2 - t1) / 1e9)
+    Result(state, r1, r2,
+      h1.toSeq, h2.toSeq, (t1 - t0) / 1e9, (t2 - t1) / 1e9)
   }
 
-  /** One bulk push round; mutates nothing, returns the next state cut
-   * (frees the previous). `signed` widens the active test to |r| and
-   * sign-splits the divisions. */
-  private def round(
-      g: LinkGraph,
-      state: DataFrame,
-      signed: Boolean,
-      history: scala.collection.mutable.ArrayBuffer[Long]): DataFrame = {
-    val dg = g.degrees.select(col("id"), col("out_degree").as("d"))
-    val rmag = if (signed) abs(col("r")) else col("r")
-    val st = state.join(dg, "id")
-      .withColumn("active", rmag >= lit(threshold) * greatest(col("d"), lit(1L)))
-    // push legs of the active non-dangling rows (sign-split floors:
-    // engines agree only on nonnegative operands)
-    val act = st.where(col("active") && col("d") > 0)
-      .select(col("id"), col("p"), col("r"), col("d"), col("sent"),
-        expr("CASE WHEN r >= 0 THEN (17 * r) div 20 ELSE -((17 * -r) div 20) END").as("rem"))
-      .select(col("id"),
-        (col("p") + col("r")).as("p2"),
-        expr("CASE WHEN rem >= 0 THEN rem div d ELSE -((-rem) div d) END").as("share"),
-        col("rem"), col("d"), col("sent"))
-      .select(col("id"), col("p2"), col("share"),
-        (col("rem") - col("share") * col("d")).as("lft"),
-        (col("sent") + col("share")).as("sent2"))
-    val (actCut, nAct) = act.graftCutCount
-    if (nAct == 0) {
-      // No non-dangling push this round — but the oracle's unrolled
-      // round STILL absorbs every active dangling (p += r, r = 0,
-      // no incoming). Mirror it: idle only when BOTH counts are 0.
-      actCut.graftFree()
-      val nDang = st.where(col("active")).count() // active ⇒ d == 0 here
-      history += nDang
-      if (nDang == 0) return state
-      val next = st
-        .select(col("id"),
-          when(col("active"), col("p") + col("r")).otherwise(col("p")).as("p"),
-          when(col("active"), lit(0L)).otherwise(col("r")).as("r"),
-          col("sent"))
-        .repartition(g.numPartitions, col("id"))
-        .graftCut
-      state.graftFree()
-      return next
-    }
-    history += nAct
-    val msgs = Superstep.gather(
-      g, actCut.select(col("id"), col("share")), signal = col("share"), combine = sum)
-    // merge: active non-dangling take (p2, lft, sent2); active
-    // dangling absorb (p+r, 0); inactive pass through; everyone adds
-    // incoming corrections
-    val next = st
-      .join(actCut.select(col("id"), col("p2"), col("lft"), col("sent2")), Seq("id"), "left")
-      .join(msgs, Seq("id"), "left")
-      .select(col("id"),
-        when(col("p2").isNotNull, col("p2"))
-          .when(col("active"), col("p") + col("r")) // active dangling
-          .otherwise(col("p")).as("p"),
-        (when(col("p2").isNotNull, col("lft"))
-          .when(col("active"), lit(0L))
-          .otherwise(col("r")) + coalesce(col("msg"), lit(0L))).as("r"),
-        when(col("sent2").isNotNull, col("sent2")).otherwise(col("sent")).as("sent"))
-      .repartition(g.numPartitions, col("id"))
-      .graftCut
-    state.graftFree()
-    next
+  /** |r| in the signed phase, r in the cold one (where r ≥ 0). */
+  private def rmag(signed: Boolean): Column = if (signed) abs(col("r")) else col("r")
+
+  /** `state` plus its push flag: a non-dangling vertex whose residual
+   * reaches T·d. */
+  private def withPushers(signed: Boolean, state: DataFrame): DataFrame =
+    state.withColumn("active", col("d") > 0 && rmag(signed) >= lit(threshold) * col("d"))
+
+  // sign-split floors: the engines agree only on nonnegative operands
+  private val rem = "CASE WHEN r >= 0 THEN (17 * r) div 20 ELSE -((17 * -r) div 20) END"
+  private val share = expr(s"CASE WHEN ($rem) >= 0 THEN ($rem) div d ELSE -((-($rem)) div d) END")
+
+  /** One bulk push round on `g` as a [[Superstep.loop]] step, recording
+   * the round's active count in `history`: the pushers, or the active
+   * danglings in a round without pushers. Pushers absorb (p += r), emit
+   * `share` per out-edge and keep the floor leftover; active danglings
+   * absorb (p += r, r = 0); every row adds its incoming shares. A round
+   * with neither is idle: the state comes back unchanged and the loop
+   * ends. `signed` widens the active test to |r|. */
+  private def round(g: LinkGraph, signed: Boolean,
+      history: scala.collection.mutable.ArrayBuffer[Long]): Superstep.Cut => Superstep.Cut = { c =>
+    val dangling = col("d") === 0 && rmag(signed) >= lit(threshold)
+    val n = if (c.count > 0) c.count else c.state.where(dangling).count()
+    history += n
+    if (n == 0) c.copy(more = false)
+    else Superstep.cutActive(withPushers(signed,
+      Superstep.withMessages(g, c.state, Seq("r", "d"), share, sum)
+        .select(col("id"), col("d"),
+          when(col("active") || dangling, col("p") + col("r")).otherwise(col("p")).as("p"),
+          (when(col("active"), expr(s"($rem)") - share * col("d"))
+            .when(dangling, lit(0L))
+            .otherwise(col("r")) + coalesce(col("msg"), lit(0L))).as("r"),
+          when(col("active"), col("sent") + share).otherwise(col("sent")).as("sent"))))
+      .copy(more = true)
   }
 }

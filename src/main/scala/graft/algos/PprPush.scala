@@ -31,8 +31,16 @@ import graft.{LinkGraph, Superstep}
  *
  * Floor leftovers keep sub-share mass in place instead of dropping
  * it; inactive vertices hold their residual. Fixed `rounds` to bound
- * the oracle unroll; each round is one gather from the active set +
- * one co-partitioned merge.
+ * the oracle unroll; a round with no active vertex is the fixpoint
+ * (the oracle unrolls the rest as identities), so the loop ends there.
+ *
+ * Schedule: the resident state `(id, deg, p, r, active)` over every
+ * vertex on [[Superstep.loop]], `active` being the push test above.
+ * A round is one [[Superstep.withMessages]] join from the active rows
+ * into the lineage cut, whose action also counts the next round's
+ * active rows: 2 Spark jobs (the message shuffle's map stage and the
+ * cut), pinned by PageRankJobsSpec. The result keeps the rows where
+ * p or r is nonzero, cut once at the end.
  */
 object PprPush {
 
@@ -43,56 +51,24 @@ object PprPush {
 
   /** @return state (id, p, r) — sparse: rows where p or r nonzero */
   def run(graph: LinkGraph, seedId: Long, rounds: Int = 6): Result = {
-    val spark = graph.spark
-    import spark.implicits._
-    val deg = graph.degrees.select(col("id"), col("out_degree").as("deg"))
-
-    var state: DataFrame = Seq((seedId, 0L, scale)).toDF("id", "p", "r")
-      .repartition(graph.numPartitions, col("id")).graftCut
-    var prev = state
-
-    for (_ <- 1 to rounds) {
-      val st = state.join(deg, "id")
-        .withColumn("active",
-          col("deg") > 0 && col("r") >= lit(threshold) * col("deg"))
-      // push legs of the active rows
-      val act = st.where(col("active"))
-        .select(col("id"),
-          col("p"), col("r"), col("deg"),
-          (col("r") - expr("r div 4")).as("rem"))
-        .select(col("id"), col("p"), col("deg"),
-          expr("p + r div 4").as("p2"),
-          expr("rem div deg").as("share"),
-          (col("rem") - expr("rem div deg") * col("deg")).as("left"))
-      val (actCut, nAct) = act.graftCutCount
-      if (nAct == 0) {
-        // fixpoint: remaining rounds are no-ops (oracle unrolls them
-        // as identities); the just-built active cut holds no rows we
-        // need — free it or it stays cached for the session
-        actCut.graftFree()
-        prev = state
-      } else {
-        val msgs = Superstep.gather(
-          graph, actCut.select(col("id"), col("share")),
-          signal = col("share"), combine = sum)
-        val pushed = st.select(col("id"), col("p"), col("r"), col("active"))
-          .join(actCut.select(col("id"), col("p2"), col("left")), Seq("id"), "left")
-          .select(col("id"),
-            when(col("active"), col("p2")).otherwise(col("p")).as("p"),
-            when(col("active"), col("left")).otherwise(col("r")).as("r"))
-        // USING full-outer join: Spark emits one coalesced id column
-        state = pushed
-          .join(msgs, Seq("id"), "full")
-          .select(col("id"),
-            coalesce(col("p"), lit(0L)).as("p"),
-            (coalesce(col("r"), lit(0L)) + coalesce(col("msg"), lit(0L))).as("r"))
-          .repartition(graph.numPartitions, col("id"))
-          .graftCut
-        prev.graftFree()
-        actCut.graftFree()
-        prev = state
-      }
-    }
+    val pushes = col("deg") > 0 && col("r") >= lit(threshold) * col("deg")
+    val rem = col("r") - expr("r div 4")
+    val share = expr("(r - r div 4) div deg")
+    val r = Superstep.loop("pprpush", rounds)(
+      start = _ => Superstep.cutActive(graph.degrees
+        .select(col("id"), col("out_degree").as("deg"), lit(0L).as("p"),
+          when(col("id") === seedId, lit(scale)).otherwise(lit(0L)).as("r"))
+        .withColumn("active", pushes)),
+      step = c => Superstep.cutActive(
+        Superstep.withMessages(graph, c.state, Seq("r", "deg"), share, sum)
+          .select(col("id"), col("deg"),
+            when(col("active"), expr("p + r div 4")).otherwise(col("p")).as("p"),
+            (when(col("active"), rem - share * col("deg")).otherwise(col("r"))
+              + coalesce(col("msg"), lit(0L))).as("r"))
+          .withColumn("active", pushes)))
+    val state = r.state.where(col("p") =!= 0L || col("r") =!= 0L)
+      .select(col("id"), col("p"), col("r")).graftCut
+    r.state.graftFree()
     Result(state, rounds)
   }
 }

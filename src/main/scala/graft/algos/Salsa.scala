@@ -30,9 +30,14 @@ import graft.{LinkGraph, Superstep}
  *
  * Schedule: identical to HITS — two dense gathers per iteration on
  * the dual CSR/CSC layouts (reference core/graph.hpp:119-124), edge
- * side never re-shuffles, state re-clustered across each lineage
- * cut. The per-src degree rides inside the state row, so the signal
- * `v div deg` is evaluated post-join with zero extra exchanges.
+ * side never re-shuffles. The resident state `(id, out_degree,
+ * in_degree, auth, hub)` on [[Superstep.loop]] carries both degrees,
+ * so the signal `v div deg` is evaluated post-join with no degree
+ * join per round. The auth rows are cut before the hub gather reads
+ * them (a plan that read them twice would run the auth gather twice,
+ * see [[Hits]]), so an iteration is 4 Spark jobs, pinned by
+ * PageRankJobsSpec: each gather's message shuffle map stage and each
+ * cut.
  */
 object Salsa {
 
@@ -45,48 +50,29 @@ object Salsa {
       saltBuckets: Int = -1): Result = {
     require(iterations >= 1, "SALSA needs at least one iteration")
     val salt = Superstep.resolveSalt(graph, saltBuckets)
-    val ids = graph.vertices.select(col("id"))
     val rev = graph.transpose
-    // degree payloads: out(u) for the auth gather (signal divides the
-    // hub score at the SRC), in(v) for the hub gather on the transpose
-    val outDeg = graph.degrees.select(col("id"), col("out_degree").as("deg"))
-    val inDeg = graph.degrees.select(col("id"), col("in_degree").as("deg"))
-
-    var hub: DataFrame =
-      ids.select(col("id"), lit(startScale).as("v")).graftCut
-    var auth: DataFrame = null
-    var prevHub: DataFrame = hub
-    var prevAuth: DataFrame = null
-
-    for (_ <- 1 to iterations) {
-      // a(v) = Σ over in-edges u→v of h(u) div out(u): vertices with
-      // out(u)=0 have no out-edges, so the division never sees 0
-      val aMsgs = Superstep.gather(
-        graph, hub.join(outDeg, "id"),
-        signal = expr("v div deg"), combine = sum,
-        saltBuckets = salt)
-      auth = ids.join(aMsgs, Seq("id"), "left")
-        .select(col("id"), coalesce(col("msg"), lit(0L)).as("v"))
-        .graftCut
-      if (prevAuth ne null) prevAuth.graftFree()
-      prevAuth = auth
-
-      // h(u) = Σ over out-edges u→v of a(v) div in(v): on the
-      // transpose the signalling side is the original dst, whose
-      // in-degree is ≥ 1 by construction of having the edge
-      val hMsgs = Superstep.gather(
-        rev, auth.join(inDeg, "id"),
-        signal = expr("v div deg"), combine = sum,
-        saltBuckets = salt)
-      hub = ids.join(hMsgs, Seq("id"), "left")
-        .select(col("id"), coalesce(col("msg"), lit(0L)).as("v"))
-        .graftCut
-      prevHub.graftFree()
-      prevHub = hub
-    }
-
-    val scores = auth.select(col("id"), col("v").as("auth"))
-      .join(hub.select(col("id"), col("v").as("hub")), "id")
-    Result(scores, iterations)
+    val degs = Seq(col("id"), col("out_degree"), col("in_degree"))
+    val r = Superstep.loop("salsa", iterations)(
+      start = _ => Superstep.Cut(
+        graph.degrees.select(degs :+ lit(startScale).as("hub"): _*).graftCut,
+        graph.numVertices, more = true),
+      step = { c =>
+        // a(v) = Σ over in-edges u→v of h(u) div out(u): vertices with
+        // out(u)=0 have no out-edges, so the division never sees 0
+        val auth = Superstep.withMessages(graph, c.state, Seq("hub", "out_degree"),
+            expr("hub div out_degree"), sum, salt)
+          .select(degs :+ coalesce(col("msg"), lit(0L)).as("auth"): _*)
+          .graftCut
+        // h(u) = Σ over out-edges u→v of a(v) div in(v): on the
+        // transpose the signalling side is the original dst, whose
+        // in-degree is ≥ 1 by construction of having the edge
+        val next = Superstep.withMessages(rev, auth, Seq("auth", "in_degree"),
+            expr("auth div in_degree"), sum, salt)
+          .select(degs ++ Seq(col("auth"), coalesce(col("msg"), lit(0L)).as("hub")): _*)
+          .graftCut
+        auth.graftFree()
+        Superstep.Cut(next, c.count, more = true)
+      })
+    Result(r.state.select(col("id"), col("auth"), col("hub")), iterations)
   }
 }

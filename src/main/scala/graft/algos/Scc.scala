@@ -26,10 +26,10 @@ import graft.{LinkGraph, Superstep}
  *  3. BACKWARD sweep: propagate each root's id along IN-edges,
  *     restricted to its own color class — a vertex joins SCC(c) iff
  *     an out-neighbor is already in SCC(c) AND its own color is c.
- *     The color-class check makes a blind min-combine unsafe (a
- *     foreign color could shadow the matching one), so this phase
- *     uses an explicit distinct (vertex, color) candidate join rather
- *     than [[Superstep.gather]]'s single-slot combiner.
+ *     Every out-neighbor v of u has color(v) ≤ color(u) (whatever
+ *     reaches u reaches v), so every candidate a vertex receives is at
+ *     most its own color, and it joins iff the MAX candidate equals
+ *     its color: a max-combine [[Superstep.gather]] is exact here.
  *  4. Assigned vertices leave the alive set; repeat.
  *
  * Trivial SCCs peel in bulk: a vertex whose color class contains only
@@ -37,10 +37,18 @@ import graft.{LinkGraph, Superstep}
  * root. Outer rounds are bounded by the longest chain of SCCs sharing
  * forward closures — small on real link graphs; `maxRounds` caps it.
  *
- * Scale: every step is a co-partitioned join or a hash aggregate on
- * the alive subgraph (which shrinks monotonically); nothing is ever
- * collected to the driver. The alive-subgraph filter is two semi
- * joins that preserve the src clustering.
+ * Schedule: three nested [[Superstep.loop]]s, each over a resident
+ * state stepped like [[ConnectedComponents]]' — the outer rounds over
+ * `(id, scc, active)` for every vertex (`active` = still alive), the
+ * forward coloring over `(id, lbl, active)` and the backward sweep
+ * over `(id, lbl, scc, active)` for the alive vertices. A coloring or
+ * sweep superstep is one [[Superstep.withMessages]] join into the
+ * lineage cut: 2 Spark jobs (the message shuffle's map stage and the
+ * cut), pinned by PageRankJobsSpec. Every step is a co-partitioned join
+ * or a hash aggregate on the alive subgraph (which shrinks
+ * monotonically); nothing is ever collected to the driver. The
+ * alive-subgraph filter is two semi joins that preserve the src
+ * clustering.
  */
 object Scc {
 
@@ -52,107 +60,63 @@ object Scc {
     require(!graph.symmetric, "SCC is only interesting on a directed graph")
     val parts = graph.numPartitions
 
-    var alive = graph.vertices.select(col("id"))
-      .repartition(parts, col("id")).graftCut
-    var aliveCount = alive.count()
-    var assignedParts = List[DataFrame]()
-    var round = 0
-
-    while (aliveCount > 0 && round < maxRounds) {
-      round += 1
-      // alive×alive edge subset, src-clustered (semi joins keep the
-      // probe side's hash partitioning; the explicit repartition is a
-      // no-op when AQE already preserved it)
-      val (aliveE, nE) = graph.edgesBySrc
-        .join(alive.select(col("id").as("src")), Seq("src"), "left_semi")
-        .join(alive.select(col("id").as("dst")), Seq("dst"), "left_semi")
-        .select(col("src"), col("dst"), col("weight"))
-        .repartition(parts, col("src"))
-        .graftCutCount
-      val sub = graph.copy(
-        edgesBySrc = aliveE,
-        edgesByDst = aliveE, // backward phase repartitions explicitly
-        numEdges = nE)
-
-      // ---- 1. forward min-id coloring to fixpoint ----
-      var colors = alive.select(col("id"), col("id").as("lbl")).graftCut
-      var frontier = colors
-      var active = aliveCount
-      var pendingFree = List[DataFrame]()
-      var base = colors
-      var it = 0
-      while (active > 0) {
-        it += 1
-        val msgs = Superstep.gather(sub, frontier, signal = col("lbl"), combine = min)
-        val (improved, n) = msgs
-          .join(colors.select(col("id"), col("lbl").as("old")), Seq("id"), "left")
-          .where(col("msg") < col("old"))
-          .select(col("id"), col("msg").as("lbl"))
+    val r = Superstep.loop("scc", maxRounds)(
+      start = _ => Superstep.cutActive(graph.vertices
+        .select(col("id"), lit(null).cast("long").as("scc"), lit(true).as("active"))
+        .repartition(parts, col("id"))),
+      step = { c =>
+        val alive = c.state.where(col("active")).select(col("id"))
+        // alive×alive edge subset, src-clustered (semi joins keep the
+        // probe side's hash partitioning; the explicit repartition is a
+        // no-op when AQE already preserved it), and a dst-clustered copy
+        // for the backward sweep
+        val (aliveE, nE) = graph.edgesBySrc
+          .join(alive.select(col("id").as("src")), Seq("src"), "left_semi")
+          .join(alive.select(col("id").as("dst")), Seq("dst"), "left_semi")
+          .select(col("src"), col("dst"), col("weight"))
+          .repartition(parts, col("src"))
           .graftCutCount
-        if (n > 0) {
-          pendingFree = frontier :: pendingFree
-          colors = colors
-            .join(improved.select(col("id"), col("lbl").as("nl")), Seq("id"), "left")
-            .select(col("id"), coalesce(col("nl"), col("lbl")).as("lbl"))
-          frontier = improved
-        }
-        active = n
-        if (active > 0 && it % 4 == 0) {
-          colors = colors.graftCut
-          (base :: pendingFree).filter(_ ne frontier).foreach(_.graftFree())
-          pendingFree = Nil
-          base = colors
-        }
-      }
-      val colorsFin = colors.graftCut
-      (base :: frontier :: pendingFree).filter(_ ne colorsFin).distinct
-        .foreach(_.graftFree())
+        val aliveEByDst = aliveE.repartition(parts, col("dst")).graftCut
+        val sub = graph.copy(edgesBySrc = aliveE, edgesByDst = aliveEByDst, numEdges = nE)
 
-      // ---- 2/3. backward sweep from the roots within color classes ----
-      // dst-clustered alive edges for the reverse direction
-      val aliveEByDst = aliveE.repartition(parts, col("dst")).graftCut
-      var sccNow = colorsFin.where(col("id") === col("lbl"))
-        .select(col("id"), col("lbl").as("scc")).graftCut // roots
-      var bFrontier = sccNow
-      var bActive = bFrontier.count()
-      var bPending = List[DataFrame]()
-      while (bActive > 0) {
-        // predecessors of the newly assigned, carrying the scc color;
-        // distinct BEFORE the color check keeps one row per (v, c)
-        val cand = aliveEByDst
-          .join(bFrontier.select(col("id").as("dst"), col("scc")), "dst")
-          .select(col("src").as("id"), col("scc"))
-          .distinct()
-        val (accepted, n) = cand
-          .join(colorsFin, "id")
-          .where(col("scc") === col("lbl"))
-          .join(sccNow.select(col("id")), Seq("id"), "left_anti")
-          .select(col("id"), col("scc"))
-          .graftCutCount
-        bPending = bFrontier :: bPending
-        if (n > 0) sccNow = sccNow.unionByName(accepted)
-        bFrontier = accepted
-        bActive = n
-      }
-      val assigned = sccNow.graftCut
-      bPending.filter(_ ne assigned).foreach(_.graftFree())
+        // ---- 1. forward min-id coloring to fixpoint ----
+        val colors = Superstep.loop("scc-fw", Int.MaxValue)(
+          start = _ => Superstep.cutActive(
+            alive.select(col("id"), col("id").as("lbl"), lit(true).as("active"))),
+          step = f => Superstep.cutActive(Superstep.withMessages(sub, f.state, Seq("lbl"),
+              signal = col("lbl"), combine = min)
+            .select(col("id"), least(col("lbl"), col("msg")).as("lbl"),
+              coalesce(col("msg") < col("lbl"), lit(false)).as("active")))).state
 
-      // ---- 4. shrink the alive set ----
-      val nextAlive = alive
-        .join(assigned.select(col("id")), Seq("id"), "left_anti")
-        .repartition(parts, col("id"))
-      val (nextCut, nextCount) = nextAlive.graftCutCount
-      assignedParts = assigned :: assignedParts
-      alive.graftFree(); aliveE.graftFree(); aliveEByDst.graftFree()
-      colorsFin.graftFree()
-      alive = nextCut
-      aliveCount = nextCount
-    }
-    require(aliveCount == 0, s"SCC did not converge in $maxRounds rounds")
-    alive.graftFree()
-    val out = assignedParts.reduce(_ unionByName _)
-      .repartition(parts, col("id")).graftCut
-    assignedParts.foreach(_.graftFree())
-    Result(out, round)
+        // ---- 2/3. backward sweep from the roots within color classes ----
+        val isRoot = col("id") === col("lbl")
+        val swept = Superstep.loop("scc-bw", Int.MaxValue)(
+          start = { _ =>
+            val b = Superstep.cutActive(colors.select(col("id"), col("lbl"),
+              when(isRoot, col("id")).as("scc"), isRoot.as("active")))
+            colors.graftFree()
+            b
+          },
+          step = b => {
+            val joins = col("scc").isNull && col("msg") === col("lbl")
+            Superstep.cutActive(Superstep.withMessages(sub.transpose, b.state, Seq("scc"),
+                signal = col("scc"), combine = max)
+              .select(col("id"), col("lbl"), when(joins, col("msg")).otherwise(col("scc")).as("scc"),
+                coalesce(joins, lit(false)).as("active")))
+          }).state
+
+        // ---- 4. shrink the alive set ----
+        val next = Superstep.cutActive(c.state
+          .join(swept.select(col("id"), col("scc").as("s2")).hint("shuffle_hash"), Seq("id"), "left")
+          .select(col("id"), coalesce(col("scc"), col("s2")).as("scc"))
+          .withColumn("active", col("scc").isNull))
+        Seq(aliveE, aliveEByDst, swept).foreach(_.graftFree())
+        next
+      })
+    require(r.iterations < maxRounds || r.state.where(col("active")).isEmpty,
+      s"SCC did not converge in $maxRounds rounds")
+    val sccs = r.state.select(col("id"), col("scc")).graftCut
+    r.state.graftFree()
+    Result(sccs, r.iterations)
   }
 }

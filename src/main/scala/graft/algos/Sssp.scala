@@ -52,7 +52,7 @@ object Sssp {
           ids.select(col("id"), when(root, lit(0.0)).as("dist"), root.as("active"))
       }).select(col("id"), col("dist"), col("active"))
         .repartition(graph.numPartitions, col("id"))),
-      step = c => Superstep.cutActive(Superstep.withMessages(graph, c, Seq("dist"),
+      step = c => Superstep.cutActive(Superstep.withMessages(graph, c.state, Seq("dist"),
           signal = col("dist") + col("weight"), combine = min)
         .select(col("id"),
           least(col("dist"), col("msg")).as("dist"),

@@ -3,6 +3,7 @@ package graft.algos
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
+import graft.Superstep
 import graft.syntax._
 
 /**
@@ -23,17 +24,15 @@ import graft.syntax._
  * Scale notes: the temporal edge table is persisted clustered by
  * src, the frontier joins it co-partitioned, messages partially
  * aggregate (min) before the shuffle — the same Gemini push shape as
- * the other frontier loops. Job budget: one cut+count per superstep
- * over the improved rows only, with the arrival table a lazy merge
- * chain compacted every [[compactEvery]] supersteps (the chain [[Sssp]]
- * replaced with a resident state over the LinkGraph's degrees; this
- * loop runs over its own key-space edge table instead).
+ * the other frontier loops. The state is [[Sssp]]'s: one resident
+ * `(key, arr, active)` row per vertex on [[Superstep.loop]], and a
+ * superstep is one left join `state ⋈ msgs` into the lineage cut,
+ * whose action also counts the frontier: 2 Spark jobs (the message
+ * shuffle's map stage and the cut), pinned by PageRankJobsSpec.
  */
 object TemporalReach {
 
   final case class Result(arrivals: DataFrame, iterations: Int)
-
-  val compactEvery = 4
 
   /**
    * @param te    (src_key, dst_key, t) symmetric temporal edges
@@ -45,42 +44,26 @@ object TemporalReach {
       maxIterations: Int = 100000): Result = {
     val e = te.select(col("src_key").as("src"), col("dst_key").as("dst"), col("t"))
       .repartition(numPartitions, col("src")).persist()
-    var arr = seeds.select(col("key"), col("arr"))
-      .repartition(numPartitions, col("key")).graftCut
-    var frontier = arr
-    var active = 1L
-    var i = 0
-    var base = arr
-    var pendingFree = List[DataFrame]()
-    while (active > 0 && i < maxIterations) {
-      val msgs = e
-        .join(frontier.select(col("key").as("src"), col("arr")), Seq("src"))
-        .where(col("t") >= col("arr")) // time-respecting relax
-        .groupBy(col("dst").as("key")).agg(min(col("t")).as("cand"))
-      val (improved, n) = msgs
-        .join(arr.select(col("key"), col("arr").as("old")), Seq("key"), "left")
-        .where(col("old").isNull || col("cand") < col("old"))
-        .select(col("key"), col("cand").as("arr"))
-        .graftCutCount
-      if (n > 0) {
-        pendingFree = frontier :: pendingFree
-        arr = arr
-          .join(improved.select(col("key"), col("arr").as("na")), Seq("key"), "full_outer")
-          .select(col("key"), coalesce(col("na"), col("arr")).as("arr"))
-        frontier = improved
-      }
-      active = n
-      i += 1
-      if (active > 0 && i % compactEvery == 0) {
-        arr = arr.graftCut
-        (base :: pendingFree).filter(_ ne frontier).foreach(_.graftFree())
-        pendingFree = Nil
-        base = arr
-      }
-    }
-    val fin = arr.graftCut
-    (base :: frontier :: pendingFree).filter(_ ne fin).distinct.foreach(_.graftFree())
+    val r = Superstep.loop("treach", maxIterations)(
+      start = _ => Superstep.cutActive(e.select(col("src").as("key"))
+        .union(e.select(col("dst").as("key"))).distinct()
+        .join(seeds.select(col("key"), col("arr")), Seq("key"), "full")
+        .select(col("key"), col("arr"), col("arr").isNotNull.as("active"))
+        .repartition(numPartitions, col("key"))),
+      step = { c =>
+        val msgs = e
+          .join(c.state.where(col("active")).select(col("key").as("src"), col("arr"))
+            .hint("shuffle_hash"), "src")
+          .where(col("t") >= col("arr")) // time-respecting relax
+          .groupBy(col("dst").as("key")).agg(min(col("t")).as("msg"))
+        Superstep.cutActive(c.state.join(msgs.hint("shuffle_hash"), Seq("key"), "left")
+          .select(col("key"), least(col("arr"), col("msg")).as("arr"),
+            // an earlier arrival, or a first one
+            coalesce(col("msg") < col("arr"), col("msg").isNotNull).as("active")))
+      })
+    val arrivals = r.state.where(col("arr").isNotNull).select(col("key"), col("arr")).graftCut
+    r.state.graftFree()
     e.unpersist(blocking = false)
-    Result(fin, i)
+    Result(arrivals, r.iterations)
   }
 }

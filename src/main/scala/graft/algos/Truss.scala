@@ -72,7 +72,8 @@ object Truss {
         val (s, n) = edges.select(col("a"), col("b"), lit(null).cast("long").as("support"))
           .repartition(graph.numPartitions, col("a"))
           .graftCutCount
-        val c = Superstep.Cut(s, n, more = true)
+        // a snapshot saved at the fixpoint records active_count 0
+        val c = Superstep.Cut(s, n, more = resumed.forall(ckpt.get.activeCount(_) > 0))
         if (resumed.isDefined) resumedAt = Some(c)
         c
       },
@@ -83,12 +84,14 @@ object Truss {
         val (kept, m) = cur
           .join(supports(cur).where(col("support") >= need), Seq("a", "b"))
           .graftCutCount
-        Superstep.Cut(kept, m, more = m != c.count)
+        val fixpoint = m == c.count
+        Superstep.Cut(kept, if (fixpoint) 0L else m, more = !fixpoint)
       },
       saved = _.select(col("a").as("id"), col("b")))
-    // A resume from the snapshot of round maxRounds runs no round, and
-    // the snapshot holds no supports: count them on the saved edge set
-    // (the supports a fixpoint round computes).
+    // A resume from the fixpoint snapshot or from the one of round
+    // maxRounds runs no round, and the snapshot holds no supports:
+    // count them on the saved edge set (the supports a fixpoint round
+    // computes).
     val edges = resumedAt match {
       case Some(c) if r.supersteps == 0 =>
         val cur = c.state.select(col("a"), col("b"))

@@ -49,7 +49,7 @@ object WidestPath {
       start = _ => Superstep.cutActive(graph.degrees
         .select(col("id"), when(root, lit(RootCap)).as("cap"), root.as("active"))
         .repartition(graph.numPartitions, col("id"))),
-      step = c => Superstep.cutActive(Superstep.withMessages(graph, c, Seq("cap"),
+      step = c => Superstep.cutActive(Superstep.withMessages(graph, c.state, Seq("cap"),
           signal = least(col("cap"), col("weight")), combine = max)
         .select(col("id"),
           greatest(col("cap"), col("msg")).as("cap"),

@@ -13,6 +13,10 @@ object syntax {
     /** Cut + the sum of a double column, in the same single job. */
     def graftCutSum(sumCol: String): (DataFrame, Double) =
       org.apache.spark.sql.GraftLineage.cutSummed(df, sumCol)
+    /** Cut + the maximum of a nonnegative long column, in the same
+     * single job. */
+    def graftCutMax(maxCol: String): (DataFrame, Long) =
+      org.apache.spark.sql.GraftLineage.cutMax(df, maxCol)
     /** Cut + the number of active rows of a state that flags them, in
      * the same single job. */
     def graftCutActive(activeCol: String): (DataFrame, Long) =

@@ -1,5 +1,7 @@
 package org.apache.spark.sql
 
+import scala.util.control.NonFatal
+
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.Attribute
@@ -53,6 +55,15 @@ object GraftLineage {
   def cutSummed(df: DataFrame, sumCol: String): (DataFrame, Double) = {
     val idx = indexOf(df, sumCol)
     materialize(df)(_.aggregate(0.0)((acc, row) => acc + row.getDouble(idx), _ + _))
+  }
+
+  /** [[cut]] that also returns the maximum of a nonnegative long
+   * column (0 for no rows), in the same single job. */
+  def cutMax(df: DataFrame, maxCol: String): (DataFrame, Long) = {
+    val idx = indexOf(df, maxCol)
+    materialize(df)(_.aggregate(0L)(
+      (m, row) => if (row.isNullAt(idx)) m else math.max(m, row.getLong(idx)),
+      math.max))
   }
 
   /** [[cut]] of a resident state that flags its active rows: also
@@ -156,6 +167,6 @@ object GraftLineage {
           rewrite(physical.outputPartitioning)
         }
         .getOrElse(UnknownPartitioning(0))
-    } catch { case _: Throwable => UnknownPartitioning(0) }
+    } catch { case NonFatal(_) => UnknownPartitioning(0) }
   }
 }

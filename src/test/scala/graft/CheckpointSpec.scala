@@ -9,6 +9,7 @@ import org.apache.spark.sql.execution.datasources.InsertIntoHadoopFsRelationComm
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.util.QueryExecutionListener
 
+import graft.syntax._
 import graft.algos.{Betweenness, Bfs, ConnectedComponents, PageRank, Sssp}
 
 /** Checkpoint write→read round-trip, lineage metadata, and
@@ -361,6 +362,33 @@ class CheckpointSpec extends SparkSpec {
     assert(resumed.rounds == full.rounds)
     val (a, b) = (full.edges, resumed.edges)
     assert(a.exceptAll(b).count() == 0 && b.exceptAll(a).count() == 0)
+  }
+
+  test("Truss: a resume from a fixpoint below maxRounds runs no round and writes nothing") {
+    import graft.algos.Truss
+    val g = graphOf(edges, symmetric = true)
+    val ck = Checkpoint(tmpDir())
+    val full = Truss.run(g, k = 3, ckpt = Some(ck))
+    assert(full.rounds < 12, "fixture must reach its fixpoint below maxRounds")
+    assert(ck.latestIteration().contains(full.rounds) && ck.activeCount(full.rounds) == 0)
+    var resumed: Truss.Result = null
+    assert(writesOf { resumed = Truss.run(g, k = 3, ckpt = Some(ck), resume = true) } == 0)
+    assert(ck.latestIteration().contains(full.rounds))
+    assert(resumed.rounds == full.rounds)
+    val (a, b) = (full.edges, resumed.edges)
+    assert(a.exceptAll(b).count() == 0 && b.exceptAll(a).count() == 0)
+  }
+
+  test("Superstep.loop keeps a state that an idle step hands back") {
+    val g = graphOf(edges, symmetric = false)
+    val r = Superstep.loop("idle", 5)(
+      start = _ => Superstep.Cut(g.vertices.select(col("id")).graftCut, 1L, more = true),
+      step = c => c.copy(more = false))
+    assert(r.iterations == 1)
+    val rdd = r.state.queryExecution.logical.asInstanceOf[org.apache.spark.sql.execution.LogicalRDD].rdd
+    assert(spark.sparkContext.getPersistentRDDs.contains(rdd.id), "the loop freed its final state")
+    assert(r.state.count() == g.numVertices)
+    r.state.graftFree()
   }
 
   test("k-core: a peel stopped at maxRounds writes that round once") {

@@ -2,14 +2,14 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-import graft.algos.{Betweenness, Bfs, ConnectedComponents, DeltaStepping, Hits, KCore, LabelPropagation,
-  MultiSourceBfs, PageRank, Sssp}
+import graft.algos.{Betweenness, BidirBfs, Bfs, BowTie, Cascade, ConnectedComponents, DagDepth, DeltaStepping,
+  EigenCentrality, Hits, HittingTime, Katz, KCore, LabelPropagation, MaxCut, MultiSourceBfs, PageRank,
+  PageRankInc, PprPush, Salsa, Scc, Sssp, TemporalReach}
+import graft.syntax._
 
-/** Spark jobs per PageRank, ConnectedComponents, LabelPropagation, Bfs,
- * Sssp, MultiSourceBfs, Hits, KCore, Betweenness and DeltaStepping
- * superstep, under the suite's default (production) broadcast
- * thresholds. The marginal count between k and
- * k+4 supersteps cancels the fixed per-run jobs;
+/** Spark jobs per superstep of every loop on [[Superstep.loop]], under
+ * the suite's default (production) broadcast thresholds. The marginal
+ * count between k and k+4 supersteps cancels the fixed per-run jobs;
  * an added job per superstep (a re-broadcast edge or degree table, a
  * second state join, a separate edge-mass aggregation, a frontier
  * broadcast) fails here. */
@@ -145,8 +145,12 @@ class PageRankJobsSpec extends SparkSpec {
   /** Jobs per unit of `run`'s length, from vertex 0 of the 12- and the
    * 16-vertex path: the difference cancels the fixed per-run jobs.
    * `run` returns its length (levels or buckets), `units` apart. */
-  private def perPathUnit(units: Int)(run: (LinkGraph, Long) => Int): Int = {
-    val Seq((a, la), (b, lb)) = paths.map { case (p, r) =>
+  private def perPathUnit(units: Int)(run: (LinkGraph, Long) => Int): Int =
+    perUnit(paths, units)(run)
+
+  /** [[perPathUnit]] over any two fixtures `(graph, root)`. */
+  private def perUnit(fixtures: Seq[(LinkGraph, Long)], units: Int)(run: (LinkGraph, Long) => Int): Int = {
+    val Seq((a, la), (b, lb)) = fixtures.map { case (p, r) =>
       run(p, r) // warm-up: the graph's lazy statistics are computed once
       var len = 0
       (jobsOf { len = run(p, r) }, len)
@@ -184,5 +188,129 @@ class PageRankJobsSpec extends SparkSpec {
 
   test("DeltaStepping: jobs per bucket pinned") {
     assert(perPathUnit(2)((p, r) => DeltaStepping.run(p, r, delta = 2.0).buckets) == deltaJobs)
+  }
+
+  // ---- the loops without a checkpoint: jobs per round ----
+
+  /** The dense programs' round: the message shuffle's map stage and the
+   * cut. */
+  val denseJobs = 2
+
+  test("Katz: jobs per superstep pinned") {
+    assert(marginal(k => Katz.run(g, iterations = k).iterations) == denseJobs)
+  }
+
+  test("EigenCentrality: jobs per round pinned (the max rides the cut)") {
+    assert(marginal(k => EigenCentrality.run(star, iterations = k).iterations) == denseJobs)
+  }
+
+  /** SALSA jobs per iteration: as [[hitsJobs]], the auth rows cut
+   * between the two gathers. */
+  val salsaJobs = 4
+
+  test("Salsa: jobs per iteration pinned") {
+    assert(marginal(k => Salsa.run(g, iterations = k).iterations) == salsaJobs)
+  }
+
+  test("HittingTime: jobs per round pinned") {
+    assert(marginal { k => HittingTime.run(star, col("key") === keyOf(1), iters = k); k } == denseJobs)
+  }
+
+  /** MaxCut jobs per round with candidates: each gather's map stage, the
+   * candidate cut and the state cut. */
+  val maxCutJobs = 4
+
+  test("MaxCut: jobs per round pinned") {
+    // 40 disjoint triangles: the local search settles within a round or
+    // two, so this is the jobs of round 1 (0 rounds against 1), where
+    // the monochrome triangles supply candidates
+    val tris = graphOf(for (t <- 0 until 40; (a, b) <- Seq((0, 1), (1, 2), (2, 0)))
+      yield (3 * t + a, 3 * t + b), symmetric = true)
+    assert(perUnit(Seq((tris, 0L), (tris, 1L)), 1) { (p, k) =>
+      MaxCut.run(p, rounds = k.toInt).count(); k.toInt } == maxCutJobs)
+  }
+
+  test("PprPush: jobs per round pinned") {
+    assert(marginal(k => PprPush.run(star, starRoot, rounds = k).rounds) == denseJobs)
+  }
+
+  test("PageRankInc: jobs per push round pinned") {
+    assert(marginal { k =>
+      val r = PageRankInc.run(g, col("weight") === 2.0, r1 = k, r2 = 0)
+      assert(r.phase1Active.forall(_ > 0), s"every round must push: ${r.phase1Active}")
+      r.phase1Rounds
+    } == denseJobs)
+  }
+
+  /** 60-vertex directed path, and the id of its first vertex. */
+  private lazy val dpath: (LinkGraph, Long) = {
+    val p = graphOf((0 until 59).map(i => (i, i + 1)), symmetric = false)
+    (p, indexOf(p).collectFirst { case (id, 0) => id }.get)
+  }
+
+  /** Cascade jobs per round: the message shuffle's map stage, the
+   * message cut and the state cut. */
+  val cascadeJobs = 3
+
+  test("Cascade: jobs per round pinned") {
+    // in-degree 1 everywhere: θ = 1, one vertex activates per round
+    val (p, first) = dpath
+    assert(marginal { k => Cascade.run(p, Seq(first), maxRounds = k).count(); k } == cascadeJobs)
+  }
+
+  /** BidirBfs jobs per round: the message shuffle's map stage, the cut
+   * and the meet check's two (its single-partition exchange and the
+   * result). */
+  val bidirJobs = 4
+
+  test("BidirBfs: jobs per round pinned") {
+    val path = graphOf((0 until 59).map(i => (i, i + 1)), symmetric = true)
+    val idx = indexOf(path).map(_.swap)
+    assert(marginal(k => BidirBfs.dist(path, idx(0), idx(59), maxRounds = k).rounds) == bidirJobs)
+  }
+
+  test("BowTie closure: jobs per level pinned") {
+    assert(perPathUnit(4) { (p, r) =>
+      val reached = BowTie.closure(p, p.vertices.where(col("id") === r).select(col("id")))
+      val n = reached.count().toInt
+      reached.graftFree()
+      n
+    } == denseJobs)
+  }
+
+  test("TemporalReach: jobs per superstep pinned") {
+    import spark.implicits._
+    // a time-increasing path: one vertex improves per superstep
+    val te = (0 until 59).flatMap { i =>
+      Seq((keyOf(i), keyOf(i + 1), i + 1L), (keyOf(i + 1), keyOf(i), i + 1L)) }
+      .toDF("src_key", "dst_key", "t")
+    val seeds = Seq((keyOf(0), 0L)).toDF("key", "arr")
+    assert(marginal(k => TemporalReach.run(te, seeds, numPartitions, maxIterations = k).iterations) ==
+      denseJobs)
+  }
+
+  test("DagDepth.runContracted: jobs per relaxation superstep pinned") {
+    // a 12-level ladder: every vertex past level 0 has in-degree 2, so
+    // nothing contracts and the relaxation runs one superstep per level
+    val ladder = graphOf(for (l <- 0 until 11; a <- 0 to 1; b <- 0 to 1)
+      yield (2 * l + a, 2 * (l + 1) + b), symmetric = false)
+    val base = DagDepth.runContracted(ladder, maxIterations = 0).iterations
+    assert(marginal(k => DagDepth.runContracted(ladder, maxIterations = k).iterations - base) ==
+      denseJobs)
+  }
+
+  test("Scc: jobs per coloring and sweep superstep pinned") {
+    // directed cycles of 12 and 16: one SCC, one outer round whose
+    // forward coloring and backward sweep each take one superstep per
+    // vertex
+    val cycles = Seq(12, 16).map { n =>
+      (graphOf((0 until n).map(i => (i, (i + 1) % n)), symmetric = false), 0L)
+    }
+    assert(perUnit(cycles, 4) { (c, _) =>
+      val r = Scc.run(c)
+      assert(r.rounds == 1)
+      r.sccs.graftFree()
+      c.numVertices.toInt
+    } == 2 * denseJobs)
   }
 }

@@ -232,7 +232,7 @@ class Round4Spec extends SparkSpec {
       after.foreach(id => sc.getPersistentRDDs.get(id).foreach(_.unpersist(false)))
     }
     leakCheck("PprPush") {
-      // tiny rounds budget hits the nAct == 0 fixpoint branch
+      // a rounds budget past the fixpoint, where no vertex is active
       algos.PprPush.run(g, g.vertices.agg(min(col("id"))).first().getLong(0),
         rounds = 12).state
     }
@@ -241,6 +241,27 @@ class Round4Spec extends SparkSpec {
       val seed = g.vertices.agg(min(col("id"))).first().getLong(0)
       algos.Cascade.run(g, Seq(seed))
     }
+    val ids = g.vertices.orderBy(col("key")).select(col("id")).collect().map(_.getLong(0))
+    leakCheck("Katz", backing = 1)(algos.Katz.run(g).katz)
+    leakCheck("EigenCentrality", backing = 1)(algos.EigenCentrality.run(g).eigen)
+    leakCheck("Salsa", backing = 1)(algos.Salsa.run(g).scores)
+    leakCheck("HittingTime", backing = 1)(algos.HittingTime.run(g, col("key") === keyOf(4)))
+    leakCheck("BidirBfs") { algos.BidirBfs.dist(g, ids(0), ids(4)); spark.emptyDataFrame }
+    val d = graphOf(pairs, symmetric = false)
+    d.edgesByDst.count() // the graph's dst layout is cached on first use, not by the runs
+    leakCheck("PageRankInc")(PageRankInc.run(d, col("weight") === 2.0).state)
+    leakCheck("BowTie")(algos.BowTie.census(d))
+    leakCheck("Scc")(algos.Scc.run(d).sccs)
+    leakCheck("TemporalReach") {
+      import spark.implicits._
+      val te = pairs.flatMap { case (a, b) => Seq((keyOf(a), keyOf(b), 10L * a + b), (keyOf(b), keyOf(a), 10L * a + b)) }
+        .toDF("src_key", "dst_key", "t")
+      algos.TemporalReach.run(te, Seq((keyOf(0), 0L)).toDF("key", "arr"), numPartitions).arrivals
+    }
+    d.unpersist()
+    val dag = graphOf(Seq((0, 1), (1, 2), (0, 2), (2, 3), (3, 4)), symmetric = false)
+    leakCheck("DagDepth.runContracted")(algos.DagDepth.runContracted(dag).depth)
+    dag.unpersist()
     g.unpersist()
   }
 

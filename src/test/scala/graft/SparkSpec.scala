@@ -73,16 +73,7 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
 
 object SparkSpec {
   lazy val session: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.file.transferTo", "false") // gVisor: NIO transferTo mmap/unmap churn is pathological
-      .config("spark.shuffle.sort.bypassMergeThreshold", "8")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val s = Bench.builder("local[4]", "graft-test", "4").getOrCreate()
     s.sparkContext.setLogLevel("ERROR")
     s
   }
